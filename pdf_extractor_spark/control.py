@@ -4,8 +4,9 @@ Generalizes the reference's resume check — "skip this document if its
 outputs already exist and are non-empty" (reference: cli.py:45-51,
 finetune_commands/excel2training.py:261-264) — to PARTITION granularity,
 which is the unit that matters at 10^12 docs: a killed job resumes by
-anti-joining the input against committed partition ids instead of stat-ing
-a trillion files.
+reading the committed partition ids (≤ n_buckets ints) once on the driver
+and filtering its input scan with them, instead of stat-ing a trillion
+files.
 
 Schema: partition_id int, status string, docs_processed long,
 bytes_parsed long, parse_failures long, font_unmapped long,
@@ -20,7 +21,8 @@ Commit protocol (exactly-once per partition):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -49,42 +51,37 @@ class BucketingMismatchError(RuntimeError):
     """Control dir was written under a different n_buckets than the run's."""
 
 
-def read_control(spark: SparkSession, control_dir: str) -> DataFrame:
-    """Control table, or an empty frame if no run has committed yet."""
-    try:
-        return spark.read.schema(CONTROL_SCHEMA).parquet(control_dir)
-    except Exception:  # AnalysisException: path does not exist
-        return spark.createDataFrame([], CONTROL_SCHEMA)
+def committed_ids(spark: SparkSession, control_dir: str, n_buckets: int) -> frozenset[int]:
+    """Committed partition ids (J3): one driver-side collect of ≤ n_buckets
+    rows per pass, which the caller turns into a literal-set scan filter.
 
-
-def committed_partitions(
-    spark: SparkSession, control_dir: str, n_buckets: int | None = None
-) -> DataFrame:
-    """Distinct committed partition ids — the anti-join build side (J3).
-
-    Small by construction (≤ n_buckets rows) → always broadcast. When the
-    caller's `n_buckets` is given, rows committed under a DIFFERENT
-    bucketing raise BucketingMismatchError: their partition ids were
-    computed with another modulus, so honoring them would skip uncommitted
-    work (or re-run committed work) undetectably. Rows with a null
-    n_buckets (pre-upgrade control dirs) are accepted as-is.
+    Rows committed under a DIFFERENT `n_buckets` raise BucketingMismatchError:
+    their ids were computed with another modulus, so honoring them would skip
+    or re-run work undetectably. Rows with a null n_buckets (pre-upgrade
+    control dirs) are accepted. Only a missing dir means nothing is committed
+    (no job runs); any other read error, e.g. a corrupt commit file,
+    propagates instead of silently turning resume off.
     """
-    ctl = read_control(spark, control_dir).filter(F.col("status") == STATUS_COMMITTED)
-    if n_buckets is not None:
-        # ≤ a handful of distinct values — driver-side check is O(1)
-        stamped = [
-            r.n_buckets
-            for r in ctl.select("n_buckets").distinct().collect()
-            if r.n_buckets is not None
-        ]
-        bad = [b for b in stamped if b != n_buckets]
-        if bad:
-            raise BucketingMismatchError(
-                f"control dir {control_dir} was committed with n_buckets="
-                f"{sorted(set(bad))}, current run uses {n_buckets}; refusing "
-                "to resume with a mismatched bucketing"
-            )
-    return ctl.select("partition_id").distinct()
+    try:
+        rows = (
+            spark.read.schema(CONTROL_SCHEMA)
+            .parquet(control_dir)
+            .filter(F.col("status") == STATUS_COMMITTED)
+            .select("partition_id", "n_buckets")
+            .collect()
+        )
+    except AnalysisException as exc:
+        if exc.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return frozenset()
+    bad = sorted({r.n_buckets for r in rows} - {None, n_buckets})
+    if bad:
+        raise BucketingMismatchError(
+            f"control dir {control_dir} was committed with n_buckets={bad}, "
+            f"current run uses {n_buckets}; refusing to resume with a "
+            "mismatched bucketing"
+        )
+    return frozenset(r.partition_id for r in rows)
 
 
 def append_commits_rows(rows, control_dir: str, n_buckets: int | None = None) -> None:

@@ -1,4 +1,4 @@
-"""End-to-end extraction job: scan → resume anti-join → Arrow kernel →
+"""End-to-end extraction job: scan → resume filter → Arrow kernel →
 salted repartition → partitioned write → control-table commit.
 
 The Spark-first restatement of the reference's main loop (reference:
@@ -7,7 +7,7 @@ check) as one declarative plan:
 
     pages
       |> withColumn(partition_id = pmod(xxhash64(url), n_buckets))
-      |> LEFT ANTI JOIN broadcast(committed partitions)          # resume, J3
+      |> filter(partition_id NOT IN committed ids)               # resume, J3
       |> mapInPandas(extract_kernel)                             # D1/D2
       |> repartition(shuffle_n, partition_id, salt)              # skew: salt
       |> write partitionBy(partition_id), dynamic overwrite      # S6
@@ -22,10 +22,11 @@ serialize/compress/deserialize, and hot-host skew would land on the compute
 stage rather than the cheap write stage.
 
 Scale notes (100 TB / 1000 executors):
-  - the anti-join build side is ≤ n_buckets rows → broadcast: no shuffle of
-    the big side beyond the one explicit output repartition;
-  - salt spreads heavy hosts (zipf head) across `salt_factor` write tasks so
-    no reducer owns a hot url-hash bucket; AQE skew handling stays on as
+  - the committed ids are ≤ n_buckets ints, read once on the driver and
+    planned as an InSet filter on the scan: no join, no exchange and no
+    Spark job for the resume check beyond the one control-table read;
+  - the salt's scan-split term spreads a hot url-hash bucket across write
+    tasks so no reducer owns it alone; AQE skew handling stays on as
     backstop;
   - the kernel stage reads only (url, html) — column pruning keeps the scan
     narrow (the `text` column, ~50% of table bytes, is never read);
@@ -125,22 +126,20 @@ def run_extraction(
 
     pages_b = with_partition_id(pages, n_buckets)
 
-    # fails fast on a control dir committed under a different n_buckets —
-    # its partition ids were computed with another modulus (round-1 ADVICE)
-    committed = ctl.committed_partitions(spark, control_dir, n_buckets=n_buckets)
-    # committed ids are also needed driver-side (≤ n_buckets rows): to skip
-    # the job entirely when everything is committed, and to prune the
-    # metrics read-back after the write. Ids outside [0, n_buckets) can only
-    # come from a pre-stamp control dir — drop them so the fully-committed
-    # check and the metrics pruning stay keyed to the CURRENT bucketing.
-    committed_ids = {
-        r.partition_id for r in committed.collect() if 0 <= r.partition_id < n_buckets
+    # ≤ n_buckets ints, read once on the driver (fails fast on a mismatched
+    # bucketing). Ids outside [0, n_buckets) can only come from a pre-stamp
+    # control dir — drop them so the fully-committed check and the metrics
+    # pruning stay keyed to the CURRENT bucketing.
+    committed = {
+        p for p in ctl.committed_ids(spark, control_dir, n_buckets) if 0 <= p < n_buckets
     }
-    if len(committed_ids) >= n_buckets:
+    if len(committed) >= n_buckets:
         # fully-committed resume: return WITHOUT building the plan — the
-        # anti-join would still scan the whole input to write nothing
+        # filter would still scan the whole input to write nothing
         return RunStats(0, 0, 0, 0, 0)
-    todo = pages_b.join(F.broadcast(committed), "partition_id", "left_anti")
+    todo = pages_b
+    if committed:  # an InSet Filter over the scan: no join, exchange or job
+        todo = pages_b.filter(~F.col("partition_id").isin(sorted(committed)))
 
     # Kernel first, on scan splits: parallelism = input bytes / split size,
     # uniform by construction, so no key skew can serialize the compute.
@@ -158,15 +157,16 @@ def run_extraction(
 
     # Salted spread of the WRITE: partition_id alone would map each url-hash
     # bucket to one reducer; a hot host (zipf head) would serialize it.
-    # salt = (url-hash + map-side partition id) mod k fans each bucket
-    # across k write tasks; the partitioned write regroups by directory, so
-    # co-location is preserved on disk, not in the shuffle. The
-    # spark_partition_id term (evaluated map-side = the kernel task's scan
-    # split, deterministic under retry) additionally spreads IDENTICAL
-    # urls — a url recrawled 10^6 times hashes to one salt value under a
-    # url-only salt, but its copies span many scan splits, so they fan out
-    # here. Only the kernel output (≈3× smaller than the raw html) crosses
-    # this shuffle.
+    # salt_factor divides n_buckets (8 | 64), so the url-hash term is a
+    # function of partition_id and salt = (partition_id + spid) mod k: only
+    # the spark_partition_id term (the kernel task's scan split, evaluated
+    # map-side, deterministic under retry) spreads a bucket, over at most
+    # min(k, scan splits feeding it) write tasks — ~2 files per bucket on
+    # a 1,000-page input, not k. It also spreads IDENTICAL urls: a url
+    # recrawled 10^6 times spans many scan splits. An independent salt hash
+    # would write ~3× the files at that scale, at ~13 ms per file, so the
+    # salt stays. The partitioned write regroups by directory, and only the
+    # kernel output (≈3× smaller than the raw html) crosses this shuffle.
     salted = extracted.repartition(
         shuffle_n,
         "partition_id",
@@ -190,8 +190,8 @@ def run_extraction(
     # everything that went through the kernel — no second scan of the
     # output, and exactly-once under retry/speculation (each physical
     # partition's last completed attempt wins; see _PerTaskMetricsParam).
-    # Ids outside the current uncommitted set cannot appear (the anti-join
-    # removed them before the kernel).
+    # Ids outside the current uncommitted set cannot appear (the resume
+    # filter removed them before the kernel).
     acc_metrics: dict[int, tuple] = {}
     for per_task in metrics_acc.value.values():
         for pid, vals in per_task.items():
@@ -212,7 +212,7 @@ def run_extraction(
         # hive partition column statically prunes the scan) and require
         # exact agreement with the accumulator — catches overcounts from
         # speculatively re-executed kernel tasks.
-        new_ids = [p for p in range(n_buckets) if p not in committed_ids]
+        new_ids = [p for p in range(n_buckets) if p not in committed]
         readback = {
             r.partition_id: (
                 r.docs_processed, r.bytes_parsed, r.parse_failures, r.font_unmapped
@@ -737,19 +737,15 @@ def _make_kernel_with_pid(metrics_acc):
             out = next(extract_batches(iter([pdf[in_cols]])))
             out.insert(0, "partition_id", pids.to_numpy())
             if metrics_acc is not None:
-                failed = out["parse_status"].isin(FAILURE_STATUSES).astype("int64")
-                grouped = (
-                    out.assign(_failed=failed)
-                    .groupby("partition_id", sort=False)
-                    .agg(docs=("url", "size"), by=("n_bytes", "sum"),
-                         f=("_failed", "sum"), fu=("font_unmapped", "sum"))
-                )
-                for pid, r in grouped.iterrows():
-                    cur = local.setdefault(int(pid), [0, 0, 0, 0])
-                    cur[0] += int(r.docs)
-                    cur[1] += int(r.by)
-                    cur[2] += int(r.f)
-                    cur[3] += int(r.fu)
+                for pid, nb, status, fu in zip(
+                    out["partition_id"].tolist(), out["n_bytes"].tolist(),
+                    out["parse_status"].tolist(), out["font_unmapped"].tolist(),
+                ):
+                    cur = local.setdefault(pid, [0, 0, 0, 0])
+                    cur[0] += 1
+                    cur[1] += nb
+                    cur[2] += status in FAILURE_STATUSES
+                    cur[3] += fu
             yield out
         if metrics_acc is not None and local:
             tc = TaskContext.get()

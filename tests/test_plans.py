@@ -41,30 +41,39 @@ def test_kernel_scan_is_pruned(spark, tmp_path):
 
 
 def test_kernel_runs_before_any_shuffle(spark, tmp_path):
-    """pipeline.py stage order: no Exchange below the Arrow kernel — the
-    only shuffle moves the kernel OUTPUT to the salted write."""
+    """pipeline.py stage order: no Exchange and no join below the Arrow
+    kernel — the resume check is a literal-set Filter on partition_id right
+    over the scan, and the only shuffle moves the kernel OUTPUT to the
+    salted write."""
     from pdf_extractor_spark import control as ctl
-    from pdf_extractor_spark.pipeline import with_partition_id, _make_kernel_with_pid
+    from pdf_extractor_spark.pipeline import (
+        _MetricsRow, _make_kernel_with_pid, with_partition_id,
+    )
     from pdf_extractor_spark.kernel.spark_kernel import EXTRACTED_SCHEMA
     from pdf_extractor_spark.synth import pages_df
 
     path = str(tmp_path / "pages")
     pages_df(spark, 50, num_partitions=1).write.parquet(path)
     pages_b = with_partition_id(spark.read.parquet(path), 16)
-    committed = ctl.committed_partitions(spark, str(tmp_path / "none"))
-    todo = pages_b.join(F.broadcast(committed), "partition_id", "left_anti")
+    control_dir = str(tmp_path / "control")
+    ctl.append_commits_rows(
+        [_MetricsRow(p, 1, 10, 0, 0) for p in range(12)], control_dir, n_buckets=16
+    )
+    committed = ctl.committed_ids(spark, control_dir, 16)
+    todo = pages_b.filter(~F.col("partition_id").isin(sorted(committed)))
     extracted = todo.select("partition_id", "url", "html").mapInPandas(
         _make_kernel_with_pid(None), schema="partition_id int, " + EXTRACTED_SCHEMA
     )
     plan = _plan(extracted)
-    # resume anti-join is a broadcast join, never a shuffled one
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    # the PAGES side below the kernel (everything before the broadcast build
-    # subtree) must have no shuffle exchange; the control-table distinct
-    # inside BroadcastExchange shuffles ≤ n_buckets rows and is fine
-    pages_side = plan[plan.index("MapInPandas"): plan.index("BroadcastExchange")]
-    assert "Exchange hashpartitioning" not in pages_side
+    pages_side = plan[plan.index("MapInPandas"):]
+    assert "Exchange" not in pages_side  # neither shuffle nor broadcast
+    assert "Join" not in pages_side
     assert "FileScan parquet" in pages_side  # kernel feeds straight off the scan
+    # the partition_id expression is inlined into the Filter; 12 ids exceed
+    # the optimizer's 10-item threshold, so the In becomes a hashed InSet
+    resume = [l for l in pages_side.splitlines() if "Filter" in l][0]
+    assert "pmod(xxhash64(url" in resume and "16)" in resume, resume
+    assert "INSET " + ", ".join(sorted(map(str, committed))) in resume, resume
     # the salted repartition sits ABOVE the kernel
     salted = extracted.repartition(
         4, "partition_id", F.pmod(F.xxhash64("url"), F.lit(8)).alias("salt")
