@@ -1,4 +1,4 @@
-"""Payload dispatch: one document in, (text, spans, status) out.
+"""Payload dispatch: one document in, (text, spans, status, error class) out.
 
 This is the engine's core custom kernel (SURVEY.md §2.1 S5, §2.10 D1/D2) and
 the pure-Python ORACLE for the byte-identity fidelity suite. The Spark
@@ -59,6 +59,10 @@ class ExtractResult:
     # Counted from the decoded text — the kernel's decoders are the only
     # U+FFFD producers in the PDF branch.
     font_unmapped: int = 0
+    # WHY a failing document failed, the dead-letter triage taxonomy:
+    # 'empty_payload' | 'binary_payload' | 'encrypted_pdf' | the exception
+    # class name. None for ok/empty results.
+    error_class: str | None = None
 
 
 # well-known non-text magics seen in crawl payloads. Only unambiguous
@@ -86,32 +90,6 @@ def _is_non_text_binary(raw: bytes) -> bool:
     return b"\x00" in raw[:1024]
 
 
-def failure_class(raw: bytes | None) -> str | None:
-    """WHY a payload fails (None when it extracts ok/empty) — the triage
-    taxonomy behind the dead-letter sample sink. extract_document folds all
-    failures into parse_status='failed' for the hot path; this re-derives
-    the class for the capped sample a 100 TB pipeline keeps for operators:
-    'empty_payload' | 'binary_payload' | exception class name."""
-    if raw is None or len(raw) == 0:
-        return "empty_payload"
-    if _is_non_text_binary(raw):
-        return "binary_payload"
-    if raw.startswith(PDF_MAGIC) and pdf_is_encrypted(raw):
-        from pdf_extractor_spark.kernel import pdf_crypt
-
-        if pdf_crypt.try_open(raw) is None:
-            return "encrypted_pdf"
-        return None  # empty-user-password RC4: decryptable, extracts fine
-    try:
-        if raw.startswith(PDF_MAGIC):
-            extract_pdf(raw)
-        else:
-            extract_html(raw)
-    except Exception as e:  # mirror of extract_document's failure arm
-        return type(e).__name__
-    return None
-
-
 def extract_document(
     raw: bytes | None, charset_hint: str | None = None
 ) -> ExtractResult:
@@ -122,18 +100,21 @@ def extract_document(
     HTML branch between BOM and meta-tag, per WHATWG precedence.
 
     Failures are data, not exceptions: a malformed payload yields
-    parse_status='failed' and is counted in partition lineage
-    (control table `parse_failures`), never a task failure — the
-    reference's per-doc try/except analog (core/extractor.py:340-347).
+    parse_status='failed' (or 'encrypted') with its `error_class`, and is
+    counted in partition lineage (control table `parse_failures`), never a
+    task failure — the reference's per-doc try/except analog
+    (core/extractor.py:340-347), classifying each document exactly once.
     """
     if raw is None or len(raw) == 0:
-        return ExtractResult(parse_status=STATUS_FAILED)
+        return ExtractResult(parse_status=STATUS_FAILED, error_class="empty_payload")
     try:
         if _is_non_text_binary(raw):
             # images / archives / NUL-ridden payloads in the html column
             # (inevitable in crawl data) must be flagged, not decoded into
             # mojibake 'ok' rows that pollute the corpus
-            return ExtractResult(parse_status=STATUS_FAILED)
+            return ExtractResult(
+                parse_status=STATUS_FAILED, error_class="binary_payload"
+            )
         font_unmapped = 0
         if raw.startswith(PDF_MAGIC):
             crypt = None
@@ -147,7 +128,9 @@ def extract_document(
 
                 crypt = pdf_crypt.try_open(raw)
                 if crypt is None:
-                    return ExtractResult(parse_status=STATUS_ENCRYPTED)
+                    return ExtractResult(
+                        parse_status=STATUS_ENCRYPTED, error_class="encrypted_pdf"
+                    )
             text, spans = extract_pdf(raw, crypt)
             truncated = len(spans) > MAX_SPANS_PER_DOC
             if truncated:
@@ -172,5 +155,5 @@ def extract_document(
             truncated=truncated,
             font_unmapped=font_unmapped,
         )
-    except Exception:
-        return ExtractResult(parse_status=STATUS_FAILED)
+    except Exception as e:
+        return ExtractResult(parse_status=STATUS_FAILED, error_class=type(e).__name__)

@@ -1,4 +1,4 @@
-"""HTML main-content extraction: tokenizer + array-encoded DOM + density classifier.
+"""HTML main-content extraction: tokenizer + block list + density classifier.
 
 A from-scratch boilerplate stripper in the Arc90-Readability / Boilerpipe
 family (Kohlschütter et al., WSDM 2010: text density + link density separate
@@ -8,10 +8,12 @@ services/gpt_service.py:21-156); our engine replaces that with a
 deterministic, vectorizable classifier per BASELINE.json `north_star`.
 
 Pipeline per document:
-  1. encoding sniff  (meta charset → utf-8 fallback, deterministic `replace`)
+  1. encoding sniff  (BOM → transport hint → meta charset → utf-8 fallback,
+                      deterministic `replace`)
   2. tokenize        (single compiled regex pass → tag/text/comment tokens)
-  3. node table      (flat arrays: kind, tag_id, depth, text, block boundaries)
-  4. block scoring   (chars, words, anchor chars → link density; numpy)
+  3. block list      (one `Block` per block-level element: tag, depth,
+                      chrome flag, text parts, anchor and total char counts)
+  4. block scoring   (anchor chars / total chars → link density, per block)
   5. classification  (keep block iff density rules pass; drop chrome subtrees)
   6. emit            (extracted_text = kept blocks joined by '\n';
                       span_offsets = [start,end) per kept block)
@@ -100,7 +102,7 @@ def sniff_encoding(raw: bytes, hint: str | None = None) -> str:
 
 @dataclass(slots=True)
 class Block:
-    """One candidate content block (array-encoded downstream)."""
+    """One candidate content block."""
 
     tag: str            # block tag that opened it
     depth: int          # DOM depth at open

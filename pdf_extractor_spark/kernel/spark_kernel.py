@@ -4,15 +4,14 @@ One `mapInPandas` pass runs the whole per-partition pipeline —
 decode → tokenize → classify → serialize — with no intermediate shuffle
 (SURVEY.md §4.2 "pipelining"). Batches arrive Arrow-sized
 (spark.sql.execution.arrow.maxRecordsPerBatch, kept small because `html`
-blobs are large); within a batch the kernel is called per document but all
-scoring/sorting inside it is numpy-vectorized, and no row-at-a-time Spark
-Python UDF is involved (input_hint: "no per-row Python" = no per-row serde;
-Arrow moves whole columns).
+blobs are large); within a batch the kernel is called once per document,
+and no row-at-a-time Spark Python UDF is involved (input_hint: "no per-row
+Python" = no per-row serde; Arrow moves whole columns).
 
-Output schema (FIXTURES.md §2):
+Output schema (FIXTURES.md §2), after any pass-through input columns:
   url string, extracted_text string,
   span_offsets array<struct<start int, end int, page int, bbox array<float>>>,
-  parse_status string, n_bytes long
+  parse_status string, truncated boolean, n_bytes long, font_unmapped int
 """
 
 from __future__ import annotations
@@ -32,20 +31,23 @@ EXTRACTED_SCHEMA = (
 # Columns the kernel needs — select these before mapInPandas so Catalyst
 # prunes `text`/`lang`/`warc_ts` out of the parquet scan.
 KERNEL_INPUT_COLS = ["url", "html"]
+# Input columns the kernel consumes; every other input column passes through.
+_CONSUMED_COLS = ("html", "charset")
 
 
 def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: (url, html[, charset]) batches → extracted rows.
+    """mapInPandas kernel: (..., url, html[, charset]) batches → extracted rows.
 
     The optional `charset` column (WARC sources) is a transport-layer
-    decode hint per document; absent or empty means sniff-only."""
+    decode hint per document; absent or empty means sniff-only. Every other
+    input column (`url`, and `partition_id` in the batch job) passes through
+    unchanged, in input order, ahead of the extracted columns."""
     for pdf in batches:
-        urls = pdf["url"].tolist()
         payloads = pdf["html"].tolist()
         hints = (
             pdf["charset"].tolist()
             if "charset" in pdf.columns
-            else [None] * len(urls)
+            else [None] * len(payloads)
         )
         texts: list[str] = []
         spans: list[list[tuple]] = []
@@ -65,17 +67,16 @@ def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             truncs.append(res.truncated)
             n_bytes.append(len(b) if b is not None else 0)
             unmapped.append(res.font_unmapped)
-        yield pd.DataFrame(
-            {
-                "url": urls,
-                "extracted_text": texts,
-                "span_offsets": spans,
-                "parse_status": statuses,
-                "truncated": truncs,
-                "n_bytes": n_bytes,
-                "font_unmapped": unmapped,
-            }
+        out = {c: pdf[c].to_numpy() for c in pdf.columns if c not in _CONSUMED_COLS}
+        out.update(
+            extracted_text=texts,
+            span_offsets=spans,
+            parse_status=statuses,
+            truncated=truncs,
+            n_bytes=n_bytes,
+            font_unmapped=unmapped,
         )
+        yield pd.DataFrame(out)
 
 
 def kernel_input(pages_df):

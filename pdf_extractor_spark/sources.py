@@ -280,6 +280,17 @@ def parse_warc_records(raw: bytes) -> "list[dict]":
     return list(iter_warc_records(raw))
 
 
+def parse_warc_blobs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas parser: binaryFile `content` batches → pages frames
+    (WARC_PAGES_SCHEMA_DDL). The raw .gz blob itself is still one
+    binaryFile row — that bound is the archive size on disk, set upstream
+    by the crawl's sharding; read_pages_warc_split removes even that
+    bound."""
+    for pdf in batches:
+        for blob in pdf["content"]:
+            yield from _pages_frames(iter_warc_records(bytes(blob)))
+
+
 def read_pages_warc(spark: SparkSession, input_dir: str) -> DataFrame:
     """WARC archives → pages table.
 
@@ -295,16 +306,7 @@ def read_pages_warc(spark: SparkSession, input_dir: str) -> DataFrame:
         .load(input_dir)
         .select("content")
     )
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # the raw .gz blob itself is still one binaryFile row — that bound
-        # is the archive size on disk, set upstream by the crawl's
-        # sharding; read_pages_warc_split removes even that bound
-        for pdf in batches:
-            for blob in pdf["content"]:
-                yield from _pages_frames(iter_warc_records(bytes(blob)))
-
-    return files.mapInPandas(parse, schema=WARC_PAGES_SCHEMA_DDL)
+    return files.mapInPandas(parse_warc_blobs, schema=WARC_PAGES_SCHEMA_DDL)
 
 
 _GZ_MEMBER_MAGIC = b"\x1f\x8b\x08"  # gzip + deflate method (the only real one)

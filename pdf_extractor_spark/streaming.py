@@ -27,11 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_extractor_spark.kernel.spark_kernel import (
-    EXTRACTED_SCHEMA,
-    extract_batches,
-    kernel_input,
-)
+from pdf_extractor_spark.kernel.spark_kernel import run_kernel
 
 from pdf_extractor_spark.synth import PAGES_SCHEMA_DDL as PAGES_DDL
 
@@ -52,11 +48,7 @@ def stream_extract(
     reader = spark.readStream.schema(PAGES_DDL)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    pages = reader.parquet(input_dir)
-
-    extracted = kernel_input(pages).mapInPandas(
-        extract_batches, schema=EXTRACTED_SCHEMA
-    )
+    extracted = run_kernel(reader.parquet(input_dir))
 
     return (
         extracted.writeStream.format("parquet")
@@ -103,11 +95,7 @@ def stream_extract_warc(
     drains what exists, then stops; rerunning with the same checkpoint
     processes only new archives.
     """
-    from pdf_extractor_spark.sources import (
-        WARC_PAGES_SCHEMA_DDL,
-        _pages_frames,
-        iter_warc_records,
-    )
+    from pdf_extractor_spark.sources import WARC_PAGES_SCHEMA_DDL, parse_warc_blobs
 
     reader = (
         spark.readStream.format("binaryFile")
@@ -118,17 +106,8 @@ def stream_extract_warc(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     files = reader.load(input_dir).select("content")
-
-    def parse(batches):
-        # same bounded-frame record parsing as the batch WARC readers
-        for pdf in batches:
-            for blob in pdf["content"]:
-                yield from _pages_frames(iter_warc_records(bytes(blob)))
-
-    pages = files.mapInPandas(parse, schema=WARC_PAGES_SCHEMA_DDL)
-    extracted = kernel_input(pages).mapInPandas(
-        extract_batches, schema=EXTRACTED_SCHEMA
-    )
+    pages = files.mapInPandas(parse_warc_blobs, schema=WARC_PAGES_SCHEMA_DDL)
+    extracted = run_kernel(pages)
     return (
         extracted.writeStream.format("parquet")
         .option("path", out_dir)
@@ -158,11 +137,7 @@ def stream_extract_merge(
     MATCHED THEN INSERT` — same semantics, and the anti-join's full scan of
     existing urls becomes an index-backed merge.
     """
-    reader = spark.readStream.schema(PAGES_DDL)
-    pages = reader.parquet(input_dir)
-    extracted = kernel_input(pages).mapInPandas(
-        extract_batches, schema=EXTRACTED_SCHEMA
-    )
+    extracted = run_kernel(spark.readStream.schema(PAGES_DDL).parquet(input_dir))
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession

@@ -8,14 +8,21 @@ documents every possible byte sequence WILL occur.
 
 from __future__ import annotations
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from pdf_extractor_spark.kernel import extract_document
-from pdf_extractor_spark.kernel.extract import STATUS_EMPTY, STATUS_FAILED, STATUS_OK
+from pdf_extractor_spark.kernel.extract import (
+    FAILURE_STATUSES,
+    STATUS_EMPTY,
+    STATUS_ENCRYPTED,
+    STATUS_FAILED,
+    STATUS_OK,
+)
 from pdf_extractor_spark.kernel.html_extract import extract_html
 from pdf_extractor_spark.kernel.pdf_extract import extract_pdf
 
-STATUSES = {STATUS_OK, STATUS_EMPTY, STATUS_FAILED}
+# '%PDF-' + any bytes containing 'trailer/Encrypt' is flagged encrypted
+STATUSES = {STATUS_OK, STATUS_EMPTY, STATUS_FAILED, STATUS_ENCRYPTED}
 
 
 @settings(max_examples=300, deadline=None)
@@ -26,13 +33,17 @@ def test_total_on_arbitrary_bytes(payload):
     assert r1.parse_status in STATUSES
     assert r1.extracted_text == r2.extracted_text  # deterministic
     assert r1.parse_status == r2.parse_status
+    # every failure, and only a failure, names its class
+    assert (r1.error_class is None) == (r1.parse_status not in FAILURE_STATUSES)
 
 
 @settings(max_examples=200, deadline=None)
 @given(st.binary(max_size=4096))
+@example(b"trailer/Encrypt")
 def test_total_on_pdf_prefixed_bytes(payload):
     r = extract_document(b"%PDF-" + payload)
     assert r.parse_status in STATUSES
+    assert (r.error_class is None) == (r.parse_status not in FAILURE_STATUSES)
 
 
 @settings(max_examples=150, deadline=None)
@@ -297,6 +308,6 @@ def test_mutation_fuzz_corpus_docs_bounded_time():
             got = extract_document(mutated)
             dt = time.perf_counter() - t0
             assert dt < 5.0, (off, len(doc), dt)
-            assert got.parse_status in STATUSES | {"encrypted"}
+            assert got.parse_status in STATUSES
             mutations += 1
     assert mutations > 150

@@ -629,7 +629,6 @@ def test_encrypted_pdf_flagged_not_parsed():
     shape)."""
     import numpy as np
 
-    from pdf_extractor_spark.kernel.extract import failure_class
     from pdf_extractor_spark.kernel.pdf_extract import pdf_is_encrypted
     from pdf_extractor_spark.synth import make_encrypted_pdf
 
@@ -640,7 +639,7 @@ def test_encrypted_pdf_flagged_not_parsed():
         res = extract_document(raw)
         assert res.parse_status == "encrypted", f"xref_stream={xref_stream}"
         assert res.extracted_text == "" and res.span_offsets == []
-        assert failure_class(raw) == "encrypted_pdf"
+        assert res.error_class == "encrypted_pdf"
 
     # same structure, /Encrypt dropped → not flagged, parses as a normal PDF
     plain = make_encrypted_pdf(np.random.default_rng(7)).replace(

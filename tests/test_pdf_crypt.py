@@ -12,7 +12,6 @@ from pdf_extractor_spark.kernel import pdf_crypt
 from pdf_extractor_spark.kernel.extract import (
     STATUS_ENCRYPTED,
     extract_document,
-    failure_class,
 )
 from pdf_extractor_spark.kernel.pdf_extract import pdf_is_encrypted
 from pdf_extractor_spark.synth import encrypt_pdf_rc4
@@ -68,7 +67,7 @@ def test_rc4_empty_user_password_roundtrip():
         got = extract_document(enc)
         assert got.parse_status == "ok", (r, got.parse_status)
         assert got.extracted_text == want.extracted_text, r
-        assert failure_class(enc) is None, r
+        assert got.error_class is None, r
 
 
 def test_real_user_password_stays_encrypted():
@@ -83,7 +82,7 @@ def test_real_user_password_stays_encrypted():
     assert pdf_crypt.try_open(enc) is None
     got = extract_document(enc)
     assert got.parse_status == STATUS_ENCRYPTED and got.extracted_text == ""
-    assert failure_class(enc) == "encrypted_pdf"
+    assert got.error_class == "encrypted_pdf"
 
 
 def test_unsupported_handler_stays_encrypted():
@@ -186,7 +185,7 @@ def test_aes_modes_roundtrip_through_kernel():
         got = extract_document(enc)
         assert got.parse_status == "ok", (mode, got.parse_status)
         assert got.extracted_text == want.extracted_text, mode
-        assert failure_class(enc) is None, mode
+        assert got.error_class is None, mode
 
 
 def test_aes256_wrong_user_password_stays_encrypted():

@@ -271,7 +271,6 @@ def test_build_training_corpus(spark, tmp_path):
 def test_dead_letter_sample(spark):
     """The dead-letter sink captures every failing payload (cap permitting)
     with a stable error class and payload head, never an ok document."""
-    from pdf_extractor_spark.kernel.extract import failure_class
     from pdf_extractor_spark.pipeline import dead_letter_sample
 
     pages = pages_df(spark, 300, seed=SEED, num_partitions=2)
@@ -287,11 +286,11 @@ def test_dead_letter_sample(spark):
     assert 1 <= len(capped) <= 2
 
     # taxonomy
-    assert failure_class(b"\x89PNG\r\n\x1a\n") == "binary_payload"
-    assert failure_class(b"PK\x03\x04zipzip") == "binary_payload"
-    assert failure_class(None) == "empty_payload"
-    assert failure_class(b"") == "empty_payload"
-    assert failure_class(b"<p>perfectly fine text content</p>") is None
+    assert extract_document(b"\x89PNG\r\n\x1a\n").error_class == "binary_payload"
+    assert extract_document(b"PK\x03\x04zipzip").error_class == "binary_payload"
+    assert extract_document(None).error_class == "empty_payload"
+    assert extract_document(b"").error_class == "empty_payload"
+    assert extract_document(b"<p>perfectly fine text content</p>").error_class is None
 
 
 def test_font_unmapped_metric_reaches_control_table(spark, tmp_path):

@@ -46,10 +46,10 @@ def test_kernel_runs_before_any_shuffle(spark, tmp_path):
     over the scan, and the only shuffle moves the kernel OUTPUT to the
     salted write."""
     from pdf_extractor_spark import control as ctl
-    from pdf_extractor_spark.pipeline import (
-        _MetricsRow, _make_kernel_with_pid, with_partition_id,
+    from pdf_extractor_spark.pipeline import _MetricsRow, with_partition_id
+    from pdf_extractor_spark.kernel.spark_kernel import (
+        EXTRACTED_SCHEMA, extract_batches,
     )
-    from pdf_extractor_spark.kernel.spark_kernel import EXTRACTED_SCHEMA
     from pdf_extractor_spark.synth import pages_df
 
     path = str(tmp_path / "pages")
@@ -62,7 +62,7 @@ def test_kernel_runs_before_any_shuffle(spark, tmp_path):
     committed = ctl.committed_ids(spark, control_dir, 16)
     todo = pages_b.filter(~F.col("partition_id").isin(sorted(committed)))
     extracted = todo.select("partition_id", "url", "html").mapInPandas(
-        _make_kernel_with_pid(None), schema="partition_id int, " + EXTRACTED_SCHEMA
+        extract_batches, schema="partition_id int, " + EXTRACTED_SCHEMA
     )
     plan = _plan(extracted)
     pages_side = plan[plan.index("MapInPandas"):]
