@@ -109,6 +109,18 @@ def main(argv: list[str] | None = None) -> int:
                         "agreement with the kernel-side lineage counters")
     p.add_argument("--master", default=None, help="override spark master (default: env/local)")
     args = p.parse_args(argv)
+    if not args.corpus_out:
+        corpus_flags = {
+            "--redact-pii": args.redact_pii,
+            "--strip-dup-spans": args.strip_dup_spans,
+            "--dedup-state-in": args.dedup_state_in,
+            "--dedup-state-out": args.dedup_state_out,
+            "--temperature-lang": args.temperature_lang,
+            "--token-budget": args.token_budget is not None,
+        }
+        stray = [flag for flag, on in corpus_flags.items() if on]
+        if stray:
+            p.error("%s require(s) --corpus-out" % ", ".join(stray))
 
     from pdf_extractor_spark.pipeline import run_extraction
     from pdf_extractor_spark.session import get_spark

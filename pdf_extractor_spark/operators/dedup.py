@@ -9,7 +9,10 @@ Scale design: all pairwise stages go through a shared-token equi-join
 bounds the blow-up: MinHash bands keep candidate pairs ~linear in corpus
 size, which is the entire point of LSH at 10^12 docs (shingle self-join is
 quadratic per hub shingle and is provided for oracle-comparable Jaccard at
-small scale).
+small scale). Every MinHash candidate comes from ONE generator over the
+minhash_band_table state: band_pairs (the (band, band_key) pair join) and
+band_hits (the left-semi state probe); the DuckDB oracles mirror it with
+_band_cte_sql and _band_pairs_sql.
 
 Hash portability: md5 hex strings compare lexicographically the same in
 Spark and DuckDB, so min(md5(...)) is a valid portable MinHash; bit tricks
@@ -67,13 +70,16 @@ def dedup_exact(spark, sf_dir):
 
 # --- shingles (shared by jaccard + minhash) --------------------------------
 
-# char 8-grams at stride 4 over normalized text — deterministic, portable.
-_SHINGLE_SQL = f"""
-  SELECT DISTINCT doc_id, substr(t, CAST(i AS INT), 8) AS s
-  FROM (SELECT doc_id, {_NORM_SQL} AS t FROM documents WHERE doc_id < 300),
-       unnest(range(1, greatest(length(t) - 6, 2), 4)) AS u(i)
-  WHERE length(t) >= 8
-"""
+
+def _shingle_sql(pred: str) -> str:
+    """char 8-grams at stride 4 over normalized text of documents WHERE
+    `pred` — deterministic, portable (DuckDB twin of shingle_frame)."""
+    return f"""
+      SELECT DISTINCT doc_id, substr(t, CAST(i AS INT), 8) AS s
+      FROM (SELECT doc_id, {_NORM_SQL} AS t FROM documents WHERE {pred}),
+           unnest(range(1, greatest(length(t) - 6, 2), 4)) AS u(i)
+      WHERE length(t) >= 8
+    """
 
 
 def shingle_frame(docs, id_col: str = "doc_id", text_col: str = "text"):
@@ -143,10 +149,65 @@ def minhash_band_table(docs, id_col: str = "doc_id", text_col: str = "text"):
     )
 
 
+def band_pairs(left, right=None, id_col: str = "doc_id"):
+    """Distinct (da, db) MinHash candidate pairs — the ONE (band, band_key)
+    equi-join every near-dup candidate comes from. With `right`, pairs are
+    left x right (pass F.broadcast(frame) to broadcast that side); without
+    it, `left`'s own pairs with da < db. Work is bounded by bucket
+    collisions, never all-pairs."""
+    a = left.select(F.col(id_col).alias("da"), "band", "band_key")
+    b = (left if right is None else right).select(
+        F.col(id_col).alias("db"), "band", "band_key"
+    )
+    pairs = a.join(b, ["band", "band_key"])
+    if right is None:
+        pairs = pairs.filter(F.col("da") < F.col("db"))
+    return pairs.select("da", "db").distinct()
+
+
+def band_hits(bands, state, id_col: str = "doc_id"):
+    """Distinct ids in `bands` with at least one band in `state` — the
+    membership probe against a persisted band table. A left-semi join: a
+    state key held by m docs costs one match per probing row, never m
+    output rows."""
+    return (
+        bands.join(state, ["band", "band_key"], "left_semi")
+        .select(id_col)
+        .distinct()
+    )
+
+
+def _band_cte_sql(name: str, pred: str) -> str:
+    """DuckDB CTE chain mirroring minhash_band_table over documents
+    WHERE `pred` — exposes the final band table as CTE `name` (and its
+    shingles as `{name}_sh`)."""
+    return f"""
+    {name}_sh AS ({_shingle_sql(pred)}),
+    {name}_sig AS (
+      SELECT doc_id, k, min(md5(CAST(k AS VARCHAR) || '|' || s)) AS mh
+      FROM {name}_sh, unnest(range(0, 12)) AS kk(k)
+      GROUP BY doc_id, k
+    ),
+    {name} AS (
+      SELECT doc_id, CAST(k // 3 AS INT) AS band,
+             md5(string_agg(mh, '|' ORDER BY k)) AS band_key
+      FROM {name}_sig GROUP BY doc_id, band
+    )"""
+
+
+def _band_pairs_sql(left: str, right: str | None = None) -> str:
+    """DuckDB twin of band_pairs over band CTEs: distinct (da, db), left x
+    right, or `left`'s own pairs with da < db."""
+    self_pairs = "" if right else " AND l.doc_id < r.doc_id"
+    return f"""SELECT DISTINCT l.doc_id AS da, r.doc_id AS db
+      FROM {left} l JOIN {right or left} r
+        ON l.band = r.band AND l.band_key = r.band_key{self_pairs}"""
+
+
 @register(
     "dedup_ngram_jaccard",
     oracle=f"""
-    WITH sh AS ({_SHINGLE_SQL}),
+    WITH sh AS ({_shingle_sql("doc_id < 300")}),
     sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
     inter AS (
       SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
@@ -190,20 +251,8 @@ def dedup_ngram_jaccard(spark, sf_dir):
 @register(
     "dedup_minhash_lsh",
     oracle=f"""
-    WITH sh AS ({_SHINGLE_SQL}),
-    sig AS (  -- MinHash: k=12 independent hashes via seed-salted md5, min as hex-string
-      SELECT doc_id, k, min(md5(CAST(k AS VARCHAR) || '|' || s)) AS mh
-      FROM sh, unnest(range(0, 12)) AS kk(k)
-      GROUP BY doc_id, k
-    ),
-    bands AS (  -- LSH: 4 bands × 3 rows; band key = md5 of concatenated sigs
-      SELECT doc_id, CAST(k // 3 AS INT) AS band,
-             md5(string_agg(mh, '|' ORDER BY k)) AS band_key
-      FROM sig GROUP BY doc_id, band
-    )
-    SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
+    WITH {_band_cte_sql("bands", "doc_id < 300")}
+    {_band_pairs_sql("bands")}
     """,
     doc="MinHash + LSH candidate pairs (Broder '97 resemblance sketch; "
     "banding per Leskovec/Rajaraman/Ullman MMDS ch.3). The band equi-join "
@@ -212,20 +261,10 @@ def dedup_ngram_jaccard(spark, sf_dir):
     "as hex string is portable across engines (lexicographic = bytewise).",
 )
 def dedup_minhash_lsh(spark, sf_dir):
-    bands = minhash_band_table(
-        load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    return band_pairs(
+        minhash_band_table(
+            load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
         )
-        .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .distinct()
     )
 
 
@@ -374,22 +413,8 @@ def min_label_components(edges, max_rounds: int = 1000, jump_from_round: int = 3
 # oracles. Ends with `comp` = (node, root) final labels; callers append
 # either the final SELECT or further CTEs after a comma.
 _COMPONENT_CTES = f"""
-    WITH sh AS ({_SHINGLE_SQL}),
-    sig AS (
-      SELECT doc_id, k, min(md5(CAST(k AS VARCHAR) || '|' || s)) AS mh
-      FROM sh, unnest(range(0, 12)) AS kk(k)
-      GROUP BY doc_id, k
-    ),
-    bands AS (
-      SELECT doc_id, CAST(k // 3 AS INT) AS band,
-             md5(string_agg(mh, '|' ORDER BY k)) AS band_key
-      FROM sig GROUP BY doc_id, band
-    ),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-    ),
+    WITH {_band_cte_sql("bands", "doc_id < 300")},
+    pairs AS ({_band_pairs_sql("bands")}),
     edges AS (
       SELECT da AS a, db AS b FROM pairs
       UNION ALL SELECT db, da FROM pairs
@@ -404,6 +429,32 @@ _COMPONENT_CTES = f"""
     ),
     comp AS (SELECT node, min(root) AS root FROM reach GROUP BY node)
 """
+
+
+def _lsh_components(spark, sf_dir, finish):
+    """Connected components of dedup_minhash_lsh's candidate pairs (symmetric
+    edges → min_label_components), reduced by `finish(labels)` over the
+    (node, root) labels and returned materialized.
+
+    Materialize DISTRIBUTED (executor block storage), never on the driver:
+    cluster count is O(corpus) — at 10^12 docs the final cluster table is
+    billions of rows, so a collect() here would be the scale-killer in an
+    otherwise shuffle-per-round plan. localCheckpoint(eager=True) cuts the
+    lineage at the reduced result with one distributed job, after which
+    every upstream pinned block (edges cache, per-round label checkpoints)
+    is released before returning. No action here ever returns more than
+    the 0/1 rows of the convergence probes to the driver."""
+    pairs = dedup_minhash_lsh(spark, sf_dir)
+    edges = (
+        pairs.selectExpr("da AS a", "db AS b")
+        .unionAll(pairs.selectExpr("db AS a", "da AS b"))
+        .cache()
+    )
+    pinned, _rounds = min_label_components(edges)
+    out = finish(pinned.select("node", "root")).localCheckpoint(eager=True)
+    edges.unpersist()
+    pinned.unpersist()
+    return out
 
 
 @register(
@@ -426,32 +477,15 @@ _COMPONENT_CTES = f"""
     "DuckDB oracle = recursive CTE transitive closure.",
 )
 def dedup_components(spark, sf_dir):
-    pairs = dedup_minhash_lsh(spark, sf_dir)
-    edges = (
-        pairs.selectExpr("da AS a", "db AS b")
-        .unionAll(pairs.selectExpr("db AS a", "da AS b"))
-        .cache()
+    return _lsh_components(
+        spark,
+        sf_dir,
+        lambda labels: labels.groupBy("root").agg(
+            F.min("root").cast("long").alias("component"),
+            F.count("*").cast("long").alias("cluster_size"),
+            F.min("node").cast("long").alias("keep_doc"),
+        ).drop("root"),
     )
-    pinned, _rounds = min_label_components(edges)
-    labels = pinned.select("node", "root")
-
-    result = labels.groupBy("root").agg(
-        F.min("root").cast("long").alias("component"),
-        F.count("*").cast("long").alias("cluster_size"),
-        F.min("node").cast("long").alias("keep_doc"),
-    ).drop("root")
-    # Materialize DISTRIBUTED (executor block storage), never on the driver:
-    # cluster count is O(corpus) — at 10^12 docs the final cluster table is
-    # billions of rows, so a collect() here would be the scale-killer in an
-    # otherwise shuffle-per-round plan. localCheckpoint(eager=True) cuts the
-    # lineage at the aggregated result with one distributed job, after which
-    # every upstream pinned block (edges cache, per-round label checkpoints)
-    # can be released before returning. No action in this operator ever
-    # returns more than the 0/1 rows of the convergence probes to the driver.
-    out = result.localCheckpoint(eager=True)
-    edges.unpersist()
-    pinned.unpersist()
-    return out
 
 
 # Deterministic quality score shared with text_quality (textstats.py):
@@ -500,15 +534,6 @@ _QUALITY_SQL = """
 def dedup_keep_best(spark, sf_dir):
     from pyspark.sql import Window
 
-    pairs = dedup_minhash_lsh(spark, sf_dir)
-    edges = (
-        pairs.selectExpr("da AS a", "db AS b")
-        .unionAll(pairs.selectExpr("db AS a", "da AS b"))
-        .cache()
-    )
-    pinned, _rounds = min_label_components(edges)
-    labels = pinned.select("node", "root")
-
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     words = F.size(F.split(F.trim("text"), r"[ \t\n\r\f\x0B]+"))
     stop_hits = F.regexp_count("text", F.lit(r"\b(data|table|row|value|query)\b"))
@@ -516,29 +541,26 @@ def dedup_keep_best(spark, sf_dir):
         F.log(1 + F.length("text")) * (1 - stop_hits / words.cast("double")), 4
     )
     scored = docs.select(F.col("doc_id").alias("node"), quality.alias("quality"))
-
     part = Window.partitionBy("root")
-    ranked = labels.join(scored, "node").select(
-        "root",
-        "node",
-        "quality",
-        F.row_number()
-        .over(part.orderBy(F.desc("quality"), F.asc("node")))
-        .alias("rn"),
-        F.count(F.lit(1)).over(part).alias("cnt"),
-    )
-    result = ranked.filter("rn = 1").select(
-        F.col("root").cast("long").alias("component"),
-        F.col("cnt").cast("long").alias("cluster_size"),
-        F.col("node").cast("long").alias("keep_doc"),
-        F.col("quality").alias("keep_quality"),
-    )
-    # Same distributed-materialization discipline as dedup_components:
-    # checkpoint the bounded result, then release every upstream pin.
-    out = result.localCheckpoint(eager=True)
-    edges.unpersist()
-    pinned.unpersist()
-    return out
+
+    def keepers(labels):
+        ranked = labels.join(scored, "node").select(
+            "root",
+            "node",
+            "quality",
+            F.row_number()
+            .over(part.orderBy(F.desc("quality"), F.asc("node")))
+            .alias("rn"),
+            F.count(F.lit(1)).over(part).alias("cnt"),
+        )
+        return ranked.filter("rn = 1").select(
+            F.col("root").cast("long").alias("component"),
+            F.col("cnt").cast("long").alias("cluster_size"),
+            F.col("node").cast("long").alias("keep_doc"),
+            F.col("quality").alias("keep_quality"),
+        )
+
+    return _lsh_components(spark, sf_dir, keepers)
 
 
 # --- line-level corpus dedup (CCNet / RefinedWeb boilerplate pass) ---------
@@ -903,54 +925,20 @@ def incremental_dedup_candidates(new_bands, old_bands, id_col: str = "doc_id"):
 
     This is how real crawls dedup: each incremental snapshot is checked
     against the accumulated corpus state, not by rescanning the corpus
-    (the T1 resume discipline applied to dedup). Both legs are (band,
-    band_key) equi-joins — at 10^12 accumulated docs the state table is
-    4 rows/doc keyed by a 32-hex band key, and the join shuffles ONLY the
-    new snapshot plus the state partitions it touches; candidate work
-    stays bounded by bucket collisions exactly as in dedup_minhash_lsh.
+    (the T1 resume discipline applied to dedup). Both legs are band_pairs
+    — at 10^12 accumulated docs the state table is 4 rows/doc keyed by a
+    32-hex band key, and the join shuffles ONLY the new snapshot plus the
+    state partitions it touches; candidate work stays bounded by bucket
+    collisions exactly as in dedup_minhash_lsh.
 
     Returns (da, db, kind): da a new-snapshot id; db the matched old id
     (kind='vs_old') or a later new id (kind='new').
     """
-    n = new_bands.select(F.col(id_col).alias("da"), "band", "band_key")
-    o = old_bands.select(F.col(id_col).alias("db"), "band", "band_key")
-    vs_old = (
-        n.join(o, ["band", "band_key"])
-        .select("da", "db")
-        .distinct()
-        .withColumn("kind", F.lit("vs_old"))
+    vs_old = band_pairs(new_bands, old_bands, id_col)
+    vs_new = band_pairs(new_bands, id_col=id_col)
+    return vs_old.withColumn("kind", F.lit("vs_old")).unionAll(
+        vs_new.withColumn("kind", F.lit("new"))
     )
-    b = new_bands.select(F.col(id_col).alias("db"), "band", "band_key")
-    vs_new = (
-        n.join(b, ["band", "band_key"])
-        .filter(F.col("da") < F.col("db"))
-        .select("da", "db")
-        .distinct()
-        .withColumn("kind", F.lit("new"))
-    )
-    return vs_old.unionAll(vs_new)
-
-
-def _band_cte_sql(name: str, pred: str) -> str:
-    """DuckDB CTE chain mirroring minhash_band_table over documents
-    WHERE `pred` — exposes the final band table as CTE `name`."""
-    return f"""
-    {name}_sh AS (
-      SELECT DISTINCT doc_id, substr(t, CAST(i AS INT), 8) AS s
-      FROM (SELECT doc_id, {_NORM_SQL} AS t FROM documents WHERE {pred}),
-           unnest(range(1, greatest(length(t) - 6, 2), 4)) AS u(i)
-      WHERE length(t) >= 8
-    ),
-    {name}_sig AS (
-      SELECT doc_id, k, min(md5(CAST(k AS VARCHAR) || '|' || s)) AS mh
-      FROM {name}_sh, unnest(range(0, 12)) AS kk(k)
-      GROUP BY doc_id, k
-    ),
-    {name} AS (
-      SELECT doc_id, CAST(k // 3 AS INT) AS band,
-             md5(string_agg(mh, '|' ORDER BY k)) AS band_key
-      FROM {name}_sig GROUP BY doc_id, band
-    )"""
 
 
 @register(
@@ -958,13 +946,9 @@ def _band_cte_sql(name: str, pred: str) -> str:
     oracle=f"""
     WITH {_band_cte_sql("oldb", "doc_id < 300")},
     {_band_cte_sql("newb", "doc_id >= 300")}
-    SELECT DISTINCT n.doc_id AS da, o.doc_id AS db, 'vs_old' AS kind
-    FROM newb n JOIN oldb o
-      ON n.band = o.band AND n.band_key = o.band_key
+    SELECT *, 'vs_old' AS kind FROM ({_band_pairs_sql("newb", "oldb")})
     UNION ALL
-    SELECT DISTINCT a.doc_id AS da, b.doc_id AS db, 'new' AS kind
-    FROM newb a JOIN newb b
-      ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
+    SELECT *, 'new' AS kind FROM ({_band_pairs_sql("newb")})
     """,
     doc="Incremental dedup vs a prior snapshot (round-4 verdict #7): the "
     "documents table split at doc_id 300 into an OLD snapshot (whose "
@@ -987,12 +971,11 @@ def dedup_incremental(spark, sf_dir):
     oracle=f"""
     WITH {_band_cte_sql("benchb", "doc_id % 10 = 0")},
     {_band_cte_sql("corpb", "doc_id % 10 <> 0")}
-    SELECT c.doc_id,
-           CAST(count(DISTINCT b.doc_id) AS BIGINT) AS n_bench_hits,
-           CAST(min(b.doc_id) AS BIGINT) AS first_bench
-    FROM corpb c JOIN benchb b
-      ON c.band = b.band AND c.band_key = b.band_key
-    GROUP BY c.doc_id ORDER BY c.doc_id
+    SELECT da AS doc_id,
+           CAST(count(*) AS BIGINT) AS n_bench_hits,
+           CAST(min(db) AS BIGINT) AS first_bench
+    FROM ({_band_pairs_sql("corpb", "benchb")})
+    GROUP BY da ORDER BY doc_id
     """,
     doc="FUZZY benchmark decontamination: the exact path (decontam_ngrams) "
     "misses paraphrased/reformatted leakage; this flags corpus docs whose "
@@ -1007,16 +990,14 @@ def dedup_incremental(spark, sf_dir):
 )
 def decontam_fuzzy(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
-    bench = minhash_band_table(d.filter(F.col("doc_id") % 10 == 0)).select(
-        F.col("doc_id").alias("bench_id"), "band", "band_key"
-    )
+    bench = minhash_band_table(d.filter(F.col("doc_id") % 10 == 0))
     corpus = minhash_band_table(d.filter(F.col("doc_id") % 10 != 0))
     return (
-        corpus.join(F.broadcast(bench), ["band", "band_key"])
-        .groupBy("doc_id")
+        band_pairs(corpus, F.broadcast(bench))
+        .groupBy(F.col("da").alias("doc_id"))
         .agg(
-            F.countDistinct("bench_id").cast("long").alias("n_bench_hits"),
-            F.min("bench_id").cast("long").alias("first_bench"),
+            F.count("*").cast("long").alias("n_bench_hits"),
+            F.min("db").cast("long").alias("first_bench"),
         )
         .orderBy("doc_id")
     )
@@ -1161,15 +1142,14 @@ _SPLIT_DUCK = (
              CASE WHEN {_SPLIT_DUCK} < {_SPLIT_VAL_LIM}
                   THEN 'val' ELSE 'train' END AS split
       FROM documents
-    )
-    SELECT v.doc_id AS val_doc,
-           CAST(count(DISTINCT t.doc_id) AS BIGINT) AS n_train_hits,
-           CAST(min(t.doc_id) AS BIGINT) AS first_train
-    FROM bb v
-    JOIN sp sv ON sv.doc_id = v.doc_id AND sv.split = 'val'
-    JOIN bb t ON v.band = t.band AND v.band_key = t.band_key
-    JOIN sp st ON st.doc_id = t.doc_id AND st.split = 'train'
-    GROUP BY v.doc_id ORDER BY val_doc
+    ),
+    vb AS (SELECT bb.* FROM bb JOIN sp USING (doc_id) WHERE split = 'val'),
+    tb AS (SELECT bb.* FROM bb JOIN sp USING (doc_id) WHERE split = 'train')
+    SELECT da AS val_doc,
+           CAST(count(*) AS BIGINT) AS n_train_hits,
+           CAST(min(db) AS BIGINT) AS first_train
+    FROM ({_band_pairs_sql("vb", "tb")})
+    GROUP BY da ORDER BY val_doc
     """,
     doc="Train/val split leakage audit: documents are split HOST-disjoint "
     "(md5 bucket of the source site — every doc of a site lands on one "
@@ -1177,7 +1157,7 @@ _SPLIT_DUCK = (
     "templating), then MinHash band collisions CROSSING the boundary are "
     "reported per validation doc — near-duplicates of training text "
     "sitting in the eval set, which silently inflate every eval number. "
-    "Same (band, band_key) equi-join scale shape as dedup_minhash_lsh "
+    "Same band_pairs (band, band_key) equi-join as dedup_minhash_lsh "
     "over the shared minhash_band_table state; the split column is a pure "
     "row-local md5 expression, so the audit adds no pass over the text "
     "beyond the band table the pipeline already persists.",
@@ -1189,18 +1169,14 @@ def split_leakage(spark, sf_dir):
     ).otherwise(F.lit("train"))
     sp = d.select("doc_id", split.alias("split"))
     bands = minhash_band_table(d)
-    v = bands.join(sp.filter(F.col("split") == "val"), "doc_id").select(
-        F.col("doc_id").alias("val_doc"), "band", "band_key"
-    )
-    t = bands.join(sp.filter(F.col("split") == "train"), "doc_id").select(
-        F.col("doc_id").alias("train_doc"), "band", "band_key"
-    )
+    v = bands.join(sp.filter(F.col("split") == "val"), "doc_id")
+    t = bands.join(sp.filter(F.col("split") == "train"), "doc_id")
     return (
-        v.join(t, ["band", "band_key"])
-        .groupBy("val_doc")
+        band_pairs(v, t)
+        .groupBy(F.col("da").alias("val_doc"))
         .agg(
-            F.countDistinct("train_doc").cast("long").alias("n_train_hits"),
-            F.min("train_doc").cast("long").alias("first_train"),
+            F.count("*").cast("long").alias("n_train_hits"),
+            F.min("db").cast("long").alias("first_train"),
         )
         .orderBy("val_doc")
     )
@@ -1248,21 +1224,18 @@ def band_skew_stats(spark, sf_dir):
 @register(
     "cross_source_dup",
     oracle=f"""
-    WITH {_band_cte_sql("b", "TRUE")},
-    sb AS (
-      SELECT b.doc_id, b.band, b.band_key, d.source
-      FROM b JOIN documents d ON d.doc_id = b.doc_id
-    ),
-    pairs AS (
-      SELECT DISTINCT least(a.source, c.source) AS src_a,
-             greatest(a.source, c.source) AS src_b,
-             a.doc_id AS da, c.doc_id AS db
-      FROM sb a JOIN sb c
-        ON a.band = c.band AND a.band_key = c.band_key
-       AND a.doc_id < c.doc_id AND a.source <> c.source
+    WITH {_band_cte_sql("bb", "TRUE")},
+    pairs AS ({_band_pairs_sql("bb")}),
+    xs AS (
+      SELECT least(a.source, c.source) AS src_a,
+             greatest(a.source, c.source) AS src_b
+      FROM pairs p
+      JOIN documents a ON a.doc_id = p.da
+      JOIN documents c ON c.doc_id = p.db
+      WHERE a.source <> c.source
     )
     SELECT src_a, src_b, CAST(count(*) AS BIGINT) AS dup_pairs
-    FROM pairs GROUP BY src_a, src_b ORDER BY src_a, src_b
+    FROM xs GROUP BY src_a, src_b ORDER BY src_a, src_b
     """,
     doc="Cross-source duplication matrix: MinHash band collisions between "
     "documents of DIFFERENT sources, aggregated to distinct near-dup pair "
@@ -1270,34 +1243,25 @@ def band_skew_stats(spark, sf_dir):
     "detector (a hot cell means two sources republish the same content; "
     "the per-source dedup budget and the canonical-source choice hang off "
     "this number). Reuses minhash_band_table (the persisted dedup state — "
-    "the report adds NO new pass over text) and stays a (band, band_key) "
-    "equi-join + two hash aggs; the source dimension rides along the "
-    "band table via one doc_id equi-join.",
+    "the report adds NO new pass over text): source joins the band table "
+    "once by doc_id and rides along inside the (doc_id, source) pair id, "
+    "band_pairs forms the distinct candidate pairs, and one hash agg counts "
+    "the cross-source ones.",
 )
 def cross_source_dup(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
+    # the pair id is the (doc_id, source) struct: da < db still orders by
+    # doc_id, and each pair carries both sources without a join back
     bands = minhash_band_table(d).join(d.select("doc_id", "source"), "doc_id")
-    a = bands.select(
-        F.col("doc_id").alias("da"), "band", "band_key",
-        F.col("source").alias("sa"),
-    )
-    b = bands.select(
-        F.col("doc_id").alias("db"), "band", "band_key",
-        F.col("source").alias("sb"),
-    )
-    pairs = (
-        a.join(b, ["band", "band_key"])
-        .filter((F.col("da") < F.col("db")) & (F.col("sa") != F.col("sb")))
-        .select(
-            F.least("sa", "sb").alias("src_a"),
-            F.greatest("sa", "sb").alias("src_b"),
-            "da",
-            "db",
-        )
-        .distinct()
+    pairs = band_pairs(
+        bands.withColumn("doc", F.struct("doc_id", "source")), id_col="doc"
     )
     return (
-        pairs.groupBy("src_a", "src_b")
+        pairs.filter(F.col("da.source") != F.col("db.source"))
+        .groupBy(
+            F.least("da.source", "db.source").alias("src_a"),
+            F.greatest("da.source", "db.source").alias("src_b"),
+        )
         .agg(F.count("*").cast("long").alias("dup_pairs"))
         .orderBy("src_a", "src_b")
     )
@@ -1361,18 +1325,13 @@ def dup_cluster_sizes(spark, sf_dir):
     "near_dup_precision",
     oracle=f"""
     WITH {_band_cte_sql("bb", "doc_id < 300")},
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS da, c.doc_id AS db
-      FROM bb a JOIN bb c
-        ON a.band = c.band AND a.band_key = c.band_key AND a.doc_id < c.doc_id
-    ),
-    sh AS ({_SHINGLE_SQL}),
-    sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY doc_id),
+    pairs AS ({_band_pairs_sql("bb")}),
+    sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM bb_sh GROUP BY doc_id),
     inter AS (
       SELECT p.da, p.db, CAST(count(*) AS BIGINT) AS i
       FROM pairs p
-      JOIN sh x ON x.doc_id = p.da
-      JOIN sh y ON y.doc_id = p.db AND y.s = x.s
+      JOIN bb_sh x ON x.doc_id = p.da
+      JOIN bb_sh y ON y.doc_id = p.db AND y.s = x.s
       GROUP BY p.da, p.db
     )
     SELECT p.da, p.db,
@@ -1391,7 +1350,7 @@ def dup_cluster_sizes(spark, sf_dir):
     "whether the banding parameters (4x3 here) are passing junk pairs to "
     "the expensive verify stage (low-Jaccard candidates = wasted verify "
     "compute; the S-curve in practice). Candidates come from the same "
-    "(band, band_key) equi-join as dedup_minhash_lsh; the exact "
+    "band_pairs (band, band_key) equi-join as dedup_minhash_lsh; the exact "
     "intersection is TWO more equi-joins (pair->shingles of da, then "
     "match on (db, shingle)) — work bounded by candidate count x "
     "shingles-per-doc, NEVER all-pairs: the verification join only "

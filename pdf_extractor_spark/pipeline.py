@@ -381,9 +381,10 @@ def build_training_corpus(
     across crawl snapshots (the T1 control-table discipline applied to
     dedup state, operators/dedup.py): with `dedup_state_in`, docs whose
     MinHash bands collide with the PRIOR snapshot's persisted band table
-    are dropped as near-dup recrawls — a (band, band_key) left-anti
-    semi-join against state that is 4 rows per accumulated doc; the old
-    corpus text is never re-read. With `dedup_state_out`, the SURVIVING
+    are dropped as near-dup recrawls — a band_hits left-semi probe against
+    state that is 4 rows per accumulated doc, then one left join of the
+    hit urls onto the corpus whose drop count is observed; the old corpus
+    text is never re-read. With `dedup_state_out`, the SURVIVING
     corpus's band table is written for the next snapshot to check
     against. Dropped-doc count lands in the funnel.
     """
@@ -409,25 +410,19 @@ def build_training_corpus(
     )
     obs_state = None
     if dedup_state_in:
-        from pyspark.sql import Observation as _Obs
-
-        from pdf_extractor_spark.operators.dedup import minhash_band_table
+        from pdf_extractor_spark.operators.dedup import band_hits, minhash_band_table
 
         # near-dup recrawl drop against the PRIOR snapshot's persisted band
         # table: only this snapshot's docs are shingled; the state side is
-        # a (band, band_key) equi-join probe. The drop count is observed
-        # mid-plan (before the filter) so the funnel costs no extra scan.
-        old_bands = spark.read.parquet(dedup_state_in).select("band", "band_key")
+        # a band_hits semi-join probe. The drop count is observed mid-plan
+        # (before the filter) so the funnel costs no extra scan.
         new_bands = minhash_band_table(
             corpus, id_col="url", text_col="extracted_text"
         )
-        hit = (
-            new_bands.join(old_bands, ["band", "band_key"])
-            .select("url")
-            .distinct()
-            .withColumn("_state_dup", F.lit(1))
-        )
-        obs_state = _Obs("dedup_state")
+        hit = band_hits(
+            new_bands, spark.read.parquet(dedup_state_in), "url"
+        ).withColumn("_state_dup", F.lit(1))
+        obs_state = Observation("dedup_state")
         corpus = (
             corpus.join(hit, "url", "left")
             .observe(
@@ -441,8 +436,6 @@ def build_training_corpus(
         )
     obs_temp = None
     if temperature_lang:
-        from pyspark.sql import Observation as _Obs
-
         from pdf_extractor_spark.operators.curation import _hex_bucket
 
         # alpha=0.5 language-temperature resampling on the deduped corpus:
@@ -461,7 +454,7 @@ def build_training_corpus(
             .cast("long").alias("_thr"),
         )
         bucket = F.expr(_hex_bucket("md5(url)", "instr", 4)).cast("long")
-        obs_temp = _Obs("temperature")
+        obs_temp = Observation("temperature")
         corpus = (
             corpus.withColumn("_lgk", grp)
             .join(F.broadcast(rates), F.col("_lgk") == F.col("_lg"))

@@ -276,15 +276,20 @@ def stream_dedup_corpus(
     within-batch near-dups (min-url survives), then survivors are
     appended to the corpus and THEIR bands appended to the state — the
     streaming twin of the batch `--dedup-state-in/out` job flags, built
-    on the same minhash_band_table so batch and stream dedup decisions
-    are bit-identical for identical inputs.
+    on the same minhash_band_table and the same candidate generator
+    (band_hits for the state probe, band_pairs within the batch) so batch
+    and stream dedup decisions are bit-identical for identical inputs.
 
     Ordering note: the state append happens after the corpus append in
     the same foreachBatch invocation; a crash between the two re-runs the
     batch from the checkpoint, and the url anti-join against the corpus
     output keeps the re-run idempotent (the T2 merge discipline).
     """
-    from pdf_extractor_spark.operators.dedup import minhash_band_table
+    from pdf_extractor_spark.operators.dedup import (
+        band_hits,
+        band_pairs,
+        minhash_band_table,
+    )
 
     reader = spark.readStream.schema(PAGES_DDL)
     pages = reader.parquet(input_dir)
@@ -302,25 +307,12 @@ def stream_dedup_corpus(
         bands = minhash_band_table(
             batch.select("url", "text"), id_col="url", text_col="text"
         ).localCheckpoint(eager=True)
-        drop = None
+        # within-batch near-dups drop the later url of each pair; docs
+        # colliding with the persisted state drop outright
+        drop = band_pairs(bands, id_col="url").select(F.col("db").alias("url"))
         if _sink_has_data_files(sess, state_dir):
-            # membership probe only — project away the state's own url so
-            # the join output has a single unambiguous url column
-            state = sess.read.parquet(state_dir).select("band", "band_key")
-            drop = (
-                bands.join(state, ["band", "band_key"])
-                .select("url")
-                .distinct()
-            )
-        a = bands.selectExpr("url AS ua", "band", "band_key")
-        b = bands.selectExpr("url AS ub", "band", "band_key")
-        within = (
-            a.join(b, ["band", "band_key"])
-            .filter(F.col("ua") < F.col("ub"))
-            .select(F.col("ub").alias("url"))
-            .distinct()
-        )
-        drop = within if drop is None else drop.unionByName(within).distinct()
+            state = sess.read.parquet(state_dir)
+            drop = drop.unionByName(band_hits(bands, state, "url"))
         # drop's lineage traces back into batch (via bands), so a plain
         # "url" join key is self-ambiguous — break it with explicit renames
         dropped = drop.select(F.col("url").alias("_drop_url"))

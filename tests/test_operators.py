@@ -488,6 +488,73 @@ def test_incremental_dedup_uses_persisted_band_state(spark, tmp_path):
     assert not any(b == 2 for _, b, _ in got)
 
 
+def test_band_primitives_hot_key(spark):
+    """band_hits / band_pairs on a hot band key: 40 old docs share one text,
+    so each of the 4 bands is one 40-doc bucket. The state probe is a
+    left-semi join on (band, band_key) returning each hitting id once (the
+    same set the inner-join-plus-distinct form gave); self mode yields
+    exactly the 40*39/2 ordered pairs; cross mode honours a broadcast hint
+    even with auto-broadcast off."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from pdf_extractor_spark.operators.dedup import (
+        band_hits,
+        band_pairs,
+        minhash_band_table,
+    )
+
+    hot = ("cookie settings accept all privacy policy terms of service "
+           "newsletter signup footer links and the same boilerplate everywhere")
+    old_bands = minhash_band_table(
+        spark.createDataFrame(
+            [(i, hot) for i in range(1, 41)], "doc_id long, text string"
+        )
+    ).cache()
+    new_bands = minhash_band_table(
+        spark.createDataFrame(
+            [
+                (100, "a field report on alpine glaciers retreating over "
+                      "four decades of satellite imagery and ground surveys"),
+                (101, hot),  # recrawl of the hot text
+                (102, "notes from a community orchestra rehearsal covering "
+                      "tempo changes bowing choices and the second movement"),
+            ],
+            "doc_id long, text string",
+        )
+    ).cache()
+    try:
+        hits = band_hits(new_bands, old_bands)
+        assert {r.doc_id for r in hits.collect()} == {101}
+        state = old_bands.select("band", "band_key")
+        inner = new_bands.join(state, ["band", "band_key"]).select("doc_id")
+        assert {r.doc_id for r in inner.distinct().collect()} == {101}
+        plan = hits._jdf.queryExecution().executedPlan().toString()
+        assert re.search(
+            r"\[band#\d+L?, band_key#\d+\], \[band#\d+L?, band_key#\d+\], LeftSemi",
+            plan,
+        ), plan
+
+        self_pairs = band_pairs(old_bands).collect()
+        assert len(self_pairs) == 40 * 39 // 2 == 780
+        assert all(r.da < r.db for r in self_pairs)
+
+        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            cross = band_pairs(new_bands, F.broadcast(old_bands))
+            plan = cross._jdf.queryExecution().executedPlan().toString()
+            assert "BroadcastHashJoin" in plan, plan
+            got = {(r.da, r.db) for r in cross.collect()}
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        assert got == {(101, i) for i in range(1, 41)}
+    finally:
+        old_bands.unpersist()
+        new_bands.unpersist()
+
+
 def test_hashed_ngram_classifier_separates_boilerplate(spark):
     """The trained hashed-ngram scorer must separate boilerplate-heavy
     pages from content pages on a fixture DESIGNED so the heuristic stack

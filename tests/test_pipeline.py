@@ -703,6 +703,29 @@ def test_training_examples_approved_xlsx_gate(spark, out_dirs, tmp_path):
         )
 
 
+def test_job_rejects_corpus_flags_without_corpus_out(tmp_path, capsys):
+    """Corpus-only flags without --corpus-out used to be accepted and
+    silently ignored (exit 0); they are a usage error (exit 2) raised
+    before any Spark session starts."""
+    from pdf_extractor_spark import job
+
+    base = ["--synth", "10", "--output", str(tmp_path / "out"),
+            "--control", str(tmp_path / "ctl")]
+    for extra in (
+        ["--dedup-state-in", str(tmp_path / "state")],
+        ["--dedup-state-out", str(tmp_path / "state")],
+        ["--redact-pii"],
+        ["--strip-dup-spans"],
+        ["--temperature-lang"],
+        ["--token-budget", "100"],
+    ):
+        with pytest.raises(SystemExit) as exc:
+            job.main(base + extra)
+        assert exc.value.code == 2
+        assert "--corpus-out" in capsys.readouterr().err
+    assert not (tmp_path / "out").exists()
+
+
 def test_build_training_corpus_temperature_lang(spark, tmp_path):
     """--temperature-lang corpus mode: the rarest language is kept in
     full, the head language is downsampled by the deterministic md5(url)

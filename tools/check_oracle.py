@@ -7,7 +7,9 @@ DuckDB over the same parquet tables, then compares:
   3. order-insensitive value hash (cells stringified with float rounding,
      rows sorted)
 
-Usage: python tools/check_oracle.py [sf_dir] [only_name_substr]
+Usage: python tools/check_oracle.py [sf_dir] [name_substr ...]
+
+With name filters, only queries whose name contains any of them run.
 """
 
 from __future__ import annotations
@@ -57,7 +59,7 @@ def value_hash(cols: list[str], rows: list[tuple]) -> str:
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = sys.argv[2] if len(sys.argv) > 2 else ""
+    only = sys.argv[2:]
 
     import __spark_entry__ as entrymod
 
@@ -91,7 +93,7 @@ def main() -> int:
 
     n_pass = n_fail = n_rows_only = 0
     for name, fn in qs.items():
-        if only and only not in name:
+        if only and not any(o in name for o in only):
             continue
         t0 = time.time()
         try:
