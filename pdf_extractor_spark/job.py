@@ -109,18 +109,25 @@ def main(argv: list[str] | None = None) -> int:
                         "agreement with the kernel-side lineage counters")
     p.add_argument("--master", default=None, help="override spark master (default: env/local)")
     args = p.parse_args(argv)
-    if not args.corpus_out:
-        corpus_flags = {
+    # a flag that acts only together with another one is a usage error
+    # without it, never silently ignored
+    for needed, given, flags in (
+        ("--corpus-out", args.corpus_out, {
             "--redact-pii": args.redact_pii,
             "--strip-dup-spans": args.strip_dup_spans,
             "--dedup-state-in": args.dedup_state_in,
             "--dedup-state-out": args.dedup_state_out,
             "--temperature-lang": args.temperature_lang,
             "--token-budget": args.token_budget is not None,
-        }
-        stray = [flag for flag, on in corpus_flags.items() if on]
-        if stray:
-            p.error("%s require(s) --corpus-out" % ", ".join(stray))
+        }),
+        ("--training-out", args.training_out, {"--approved-xlsx": args.approved_xlsx}),
+        ("--input-warc", args.input_warc, {"--warc-split-mb": args.warc_split_mb is not None}),
+    ):
+        stray = [flag for flag, on in flags.items() if on]
+        if stray and not given:
+            p.error("%s require(s) %s" % (", ".join(stray), needed))
+    if args.warc_split_mb is not None and args.warc_split_mb < 1:
+        p.error("--warc-split-mb must be a positive number of MB")
 
     from pdf_extractor_spark.pipeline import run_extraction
     from pdf_extractor_spark.session import get_spark
@@ -155,7 +162,7 @@ def main(argv: list[str] | None = None) -> int:
 
         pages = read_pages_binary(spark, args.input_files)
     elif args.input_warc:
-        if args.warc_split_mb:
+        if args.warc_split_mb is not None:
             from pdf_extractor_spark.sources import read_pages_warc_split
 
             pages = read_pages_warc_split(

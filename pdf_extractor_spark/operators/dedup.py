@@ -82,11 +82,11 @@ def _shingle_sql(pred: str) -> str:
     """
 
 
-def shingle_frame(docs, id_col: str = "doc_id", text_col: str = "text"):
-    """(id, s) distinct char-8-gram shingles at stride 4 over normalized
-    text — the feature base of the MinHash family, over ANY doc frame."""
+def _shingle_rows(docs, id_col: str, text_col: str):
+    """(id, s) char-8-gram shingles at stride 4 over normalized text, one
+    row per position (a repeated shingle repeats)."""
     t = _norm(F.col(text_col))
-    sh = (
+    return (
         docs.select(id_col, t.alias("t"))
         .filter(F.length("t") >= 8)
         .select(
@@ -100,16 +100,13 @@ def shingle_frame(docs, id_col: str = "doc_id", text_col: str = "text"):
         )
         .select(id_col, F.expr("substr(t, CAST(i AS INT), 8)").alias("s"))
     )
-    # The dedup exchange is pinned to the configured shuffle width as a
-    # USER repartition (same single shuffle — the distinct reuses the
-    # (id, s) clustering): AQE would coalesce this exchange by BYTES, but
-    # what sits downstream is the 12-way md5 signature explode, which is
-    # CPU-bound — byte-coalescing it to a few partitions strands cores at
-    # any scale where the shingle table is small relative to the work.
-    n_shuffle = int(
-        docs.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    return sh.repartition(n_shuffle, id_col, "s").distinct()
+
+
+def shingle_frame(docs, id_col: str = "doc_id", text_col: str = "text"):
+    """(id, s) distinct char-8-gram shingles at stride 4 over normalized
+    text — the shingle sets the Jaccard operators compare, over ANY doc
+    frame."""
+    return _shingle_rows(docs, id_col, text_col).distinct()
 
 
 def _shingles(spark, sf_dir):
@@ -121,32 +118,23 @@ def _shingles(spark, sf_dir):
 def minhash_band_table(docs, id_col: str = "doc_id", text_col: str = "text"):
     """(id, band, band_key) MinHash-LSH band table over a document frame —
     the DEDUP STATE a crawl pipeline persists between snapshots (k=12
-    seed-salted md5 minhashes, 4 bands × 3 rows; identical construction to
-    dedup_minhash_lsh's inline form). Persist this table per snapshot and
-    feed it to incremental_dedup_candidates so the next crawl never
-    re-shingles committed documents — the T1/T2 control-table discipline
-    applied to dedup state."""
-    sh = shingle_frame(docs, id_col, text_col)
-    ks = F.explode(F.sequence(F.lit(0), F.lit(11))).alias("k")
-    sig = (
-        sh.select(id_col, "s", ks)
-        .select(
-            id_col,
-            "k",
-            F.md5(F.concat(F.col("k").cast("string"), F.lit("|"), F.col("s")).cast("binary")).alias("h"),
-        )
-        .groupBy(id_col, "k")
-        .agg(F.min("h").alias("mh"))
-    )
-    return (
-        sig.withColumn("band", (F.col("k") / 3).cast("int"))
-        .groupBy(id_col, "band")
-        .agg(
-            F.md5(
-                F.array_join(F.transform(F.array_sort(F.collect_list(F.struct("k", "mh"))), lambda s: s["mh"]), "|").cast("binary")
-            ).alias("band_key")
-        )
-    )
+    seed-salted md5 minhashes, 4 bands × 3 rows). Persist this table per
+    snapshot and feed it to incremental_dedup_candidates so the next crawl
+    never re-shingles committed documents — the T1/T2 control-table
+    discipline applied to dedup state.
+
+    One shuffle: all 12 minhashes are min aggregates of one groupBy(id)
+    (min ignores repeated shingles, so no distinct; map-side partial
+    aggregation collapses each doc's shingles before the exchange), and
+    the band keys are a projection of them. Rows sharing an id merge into
+    one signature."""
+    mh = [F.min(F.md5(F.concat(F.lit(f"{k}|"), "s").cast("binary"))).alias(f"m{k}") for k in range(12)]
+    sig = _shingle_rows(docs, id_col, text_col).groupBy(id_col).agg(*mh)
+    keys = [
+        F.md5(F.concat_ws("|", f"m{3 * b}", f"m{3 * b + 1}", f"m{3 * b + 2}").cast("binary"))
+        for b in range(4)
+    ]
+    return sig.select(id_col, F.posexplode(F.array(*keys)).alias("band", "band_key"))
 
 
 def band_pairs(left, right=None, id_col: str = "doc_id"):
@@ -178,9 +166,11 @@ def band_hits(bands, state, id_col: str = "doc_id"):
 
 
 def _band_cte_sql(name: str, pred: str) -> str:
-    """DuckDB CTE chain mirroring minhash_band_table over documents
-    WHERE `pred` — exposes the final band table as CTE `name` (and its
-    shingles as `{name}_sh`)."""
+    """DuckDB band table over documents WHERE `pred`, exposed as CTE
+    `name` (its distinct shingles as `{name}_sh`) — the independent twin
+    of minhash_band_table, deliberately built the other way round (distinct
+    shingles, min per (doc, seed), string_agg per (doc, band)) so that hash
+    parity checks two constructions, not one."""
     return f"""
     {name}_sh AS ({_shingle_sql(pred)}),
     {name}_sig AS (

@@ -555,6 +555,34 @@ def test_band_primitives_hot_key(spark):
         new_bands.unpersist()
 
 
+def test_minhash_band_table_merges_rows_sharing_an_id(spark):
+    """Two rows with one id and different texts (the corpus path's one url
+    winning two text hashes) merge into ONE signature: 4 band rows, equal
+    to the DuckDB twin over the same rows, whose GROUP BY doc_id merges
+    them too."""
+    from pdf_extractor_spark.operators.dedup import _band_cte_sql, minhash_band_table
+
+    rows = [
+        (7, "the committee approved the annual budget after a long debate "
+            "about road repairs and library opening hours"),
+        (7, "a short guide to repotting succulents without damaging the "
+            "roots or overwatering the fresh soil mix"),
+        (8, "minutes of the harbour board meeting on dredging schedules"),
+    ]
+    got = minhash_band_table(
+        spark.createDataFrame(rows, "doc_id long, text string")
+    ).collect()
+    assert sorted(r.doc_id for r in got) == [7] * 4 + [8] * 4
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    want = con.sql(
+        f"WITH {_band_cte_sql('bands', 'true')} SELECT * FROM bands"
+    ).fetchall()
+    assert sorted(tuple(r) for r in got) == sorted(want)
+
+
 def test_hashed_ngram_classifier_separates_boilerplate(spark):
     """The trained hashed-ngram scorer must separate boilerplate-heavy
     pages from content pages on a fixture DESIGNED so the heuristic stack

@@ -704,25 +704,33 @@ def test_training_examples_approved_xlsx_gate(spark, out_dirs, tmp_path):
 
 
 def test_job_rejects_corpus_flags_without_corpus_out(tmp_path, capsys):
-    """Corpus-only flags without --corpus-out used to be accepted and
-    silently ignored (exit 0); they are a usage error (exit 2) raised
-    before any Spark session starts."""
+    """Flags that only act together with another one (corpus-only flags
+    without --corpus-out, --approved-xlsx without --training-out,
+    --warc-split-mb without --input-warc) used to be accepted and silently
+    ignored (exit 0), as was --warc-split-mb 0; a negative split size
+    raised a traceback. All are usage errors (exit 2) raised before any
+    Spark session starts."""
     from pdf_extractor_spark import job
 
-    base = ["--synth", "10", "--output", str(tmp_path / "out"),
-            "--control", str(tmp_path / "ctl")]
-    for extra in (
-        ["--dedup-state-in", str(tmp_path / "state")],
-        ["--dedup-state-out", str(tmp_path / "state")],
-        ["--redact-pii"],
-        ["--strip-dup-spans"],
-        ["--temperature-lang"],
-        ["--token-budget", "100"],
+    out = ["--output", str(tmp_path / "out"), "--control", str(tmp_path / "ctl")]
+    synth = ["--synth", "10", *out]
+    warc = ["--input-warc", str(tmp_path / "warc"), *out]
+    for argv, err in (
+        (synth + ["--dedup-state-in", str(tmp_path / "state")], "--corpus-out"),
+        (synth + ["--dedup-state-out", str(tmp_path / "state")], "--corpus-out"),
+        (synth + ["--redact-pii"], "--corpus-out"),
+        (synth + ["--strip-dup-spans"], "--corpus-out"),
+        (synth + ["--temperature-lang"], "--corpus-out"),
+        (synth + ["--token-budget", "100"], "--corpus-out"),
+        (synth + ["--approved-xlsx", str(tmp_path / "ok.xlsx")], "--training-out"),
+        (synth + ["--warc-split-mb", "1"], "--input-warc"),
+        (warc + ["--warc-split-mb", "0"], "positive"),
+        (warc + ["--warc-split-mb", "-1"], "positive"),
     ):
         with pytest.raises(SystemExit) as exc:
-            job.main(base + extra)
+            job.main(argv)
         assert exc.value.code == 2
-        assert "--corpus-out" in capsys.readouterr().err
+        assert err in capsys.readouterr().err
     assert not (tmp_path / "out").exists()
 
 

@@ -773,6 +773,19 @@ def test_split_leakage_is_band_equijoin(spark):
     assert "hashpartitioning(band" in plan
 
 
+def test_minhash_band_table_is_one_shuffle(spark):
+    """The band table is one document's signature per id: all 12 minhashes
+    are aggregates of ONE groupBy(doc_id), and the band keys a projection
+    of them — one hash Exchange on doc_id, no shingle distinct, no
+    per-(doc, band) collect_list."""
+    from pdf_extractor_spark.operators.dedup import minhash_band_table
+
+    plan = _plan(minhash_band_table(spark.read.parquet(f"{SF_DIR}/documents.parquet")))
+    assert plan.count("Exchange") == 1, plan
+    assert "hashpartitioning(doc_id" in plan
+    assert "collect_list" not in plan
+
+
 def test_band_skew_stats_is_two_hash_aggs(spark):
     """Telemetry must be cheaper than the thing it guards: two hash aggs
     over the band table, no joins beyond the band construction, no Python,
