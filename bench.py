@@ -6,7 +6,7 @@ Two parts, one JSON line on stdout:
    headline metric. A pages table (deterministic synthesizer, seed 42,
    heft-5 ≈ 10 KB pages) is written to parquet ONCE, then the full
    extraction job (scan → resume filter → Arrow kernel on scan splits →
-   salted repartition → partitioned write → control commit) runs against it
+   bucket rebalance → partitioned write → control commit) runs against it
    at local[2] and local[8] — the sandbox stand-in for N vs 4N executors
    per the driver instruction. The pair sits low because a mapInPandas
    task keeps ~2 cores busy (JVM I/O + Python kernel worker) and the

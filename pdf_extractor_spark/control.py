@@ -21,7 +21,6 @@ Commit protocol (exactly-once per partition):
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -58,22 +57,20 @@ def committed_ids(spark: SparkSession, control_dir: str, n_buckets: int) -> froz
     Rows committed under a DIFFERENT `n_buckets` raise BucketingMismatchError:
     their ids were computed with another modulus, so honoring them would skip
     or re-run work undetectably. Rows with a null n_buckets (pre-upgrade
-    control dirs) are accepted. Only a missing dir means nothing is committed
-    (no job runs); any other read error, e.g. a corrupt commit file,
-    propagates instead of silently turning resume off.
+    control dirs) are accepted. Only a missing dir (a Hadoop FS check: no
+    job, no logged stack trace) means nothing is committed; any read error,
+    e.g. a corrupt commit file, propagates instead of turning resume off.
     """
-    try:
-        rows = (
-            spark.read.schema(CONTROL_SCHEMA)
-            .parquet(control_dir)
-            .filter(F.col("status") == STATUS_COMMITTED)
-            .select("partition_id", "n_buckets")
-            .collect()
-        )
-    except AnalysisException as exc:
-        if exc.getCondition() != "PATH_NOT_FOUND":
-            raise
+    path = spark._jvm.org.apache.hadoop.fs.Path(control_dir)
+    if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
         return frozenset()
+    rows = (
+        spark.read.schema(CONTROL_SCHEMA)
+        .parquet(control_dir)
+        .filter(F.col("status") == STATUS_COMMITTED)
+        .select("partition_id", "n_buckets")
+        .collect()
+    )
     bad = sorted({r.n_buckets for r in rows} - {None, n_buckets})
     if bad:
         raise BucketingMismatchError(

@@ -3,7 +3,7 @@
     spark-submit --py-files pdf_extractor_spark.zip pdf_extractor_spark/job.py \
         --input /path/to/pages_parquet  (or --synth N to generate pages) \
         --output /path/out --control /path/control \
-        [--n-buckets 64] [--salt-factor 8]
+        [--n-buckets 64]
 
 Replaces the reference's `pdf-extractor <config> <in> <out>` console script
 (reference: pyproject.toml:27, cli.py:63-124) with a cluster job: same
@@ -47,7 +47,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--output", required=True, help="output parquet dir (partitioned by partition_id)")
     p.add_argument("--control", required=True, help="control-table parquet dir (checkpoint/lineage)")
     p.add_argument("--n-buckets", type=int, default=64, help="url-hash partition count")
-    p.add_argument("--salt-factor", type=int, default=8, help="skew salt fan-out per bucket")
     p.add_argument("--enrich", metavar="DIR", default=None,
                    help="also write quality-enriched output (lang/tokens/quality_ok) to DIR")
     p.add_argument("--training-out", metavar="DIR", default=None,
@@ -126,8 +125,10 @@ def main(argv: list[str] | None = None) -> int:
         stray = [flag for flag, on in flags.items() if on]
         if stray and not given:
             p.error("%s require(s) %s" % (", ".join(stray), needed))
-    if args.warc_split_mb is not None and args.warc_split_mb < 1:
-        p.error("--warc-split-mb must be a positive number of MB")
+    for flag, n in (("--warc-split-mb", args.warc_split_mb), ("--n-buckets", args.n_buckets),
+                    ("--compact", args.compact)):
+        if n is not None and n < 1:
+            p.error("%s must be a positive number" % flag)
 
     from pdf_extractor_spark.pipeline import run_extraction
     from pdf_extractor_spark.session import get_spark
@@ -184,7 +185,6 @@ def main(argv: list[str] | None = None) -> int:
             args.output,
             args.control,
             n_buckets=args.n_buckets,
-            salt_factor=args.salt_factor,
             verify_readback=args.verify_readback,
         )
     except BucketingMismatchError as exc:

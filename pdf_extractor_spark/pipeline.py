@@ -1,5 +1,5 @@
 """End-to-end extraction job: scan → resume filter → Arrow kernel →
-salted repartition → partitioned write → control-table commit.
+rebalance by bucket → partitioned write → control-table commit.
 
 The Spark-first restatement of the reference's main loop (reference:
 cli.py:105-119 — sequential per-document processing with a per-doc resume
@@ -9,7 +9,7 @@ check) as one declarative plan:
       |> withColumn(partition_id = pmod(xxhash64(url), n_buckets))
       |> filter(partition_id NOT IN committed ids)               # resume, J3
       |> mapInPandas(extract_kernel)                             # D1/D2
-      |> repartition(shuffle_n, partition_id, salt)              # skew: salt
+      |> rebalance(partition_id), ~one reducer per bucket        # AQE split
       |> write partitionBy(partition_id), dynamic overwrite      # S6
       ;  control <- per-partition metrics appended after success # T1/T2
 
@@ -25,9 +25,10 @@ Scale notes (100 TB / 1000 executors):
   - the committed ids are ≤ n_buckets ints, read once on the driver and
     planned as an InSet filter on the scan: no join, no exchange and no
     Spark job for the resume check beyond the one control-table read;
-  - the salt's scan-split term spreads a hot url-hash bucket across write
-    tasks so no reducer owns it alone; AQE skew handling stays on as
-    backstop;
+  - the write is sized by the data: each url-hash bucket goes to one write
+    task (one file), and AQE splits only a bucket whose shuffle bytes
+    exceed one task's fair share of the run, so a hot bucket spreads and
+    no reducer owns it alone;
   - the kernel stage reads only (url, html) — column pruning keeps the scan
     narrow (the `text` column, ~50% of table bytes, is never read);
   - dynamic partition overwrite makes reruns idempotent per partition.
@@ -51,7 +52,6 @@ from pdf_extractor_spark.kernel.spark_kernel import (
 )
 
 DEFAULT_N_BUCKETS = 64
-DEFAULT_SALT_FACTOR = 8
 
 _MetricsRow = namedtuple(
     "_MetricsRow",
@@ -105,7 +105,6 @@ def run_extraction(
     out_dir: str,
     control_dir: str,
     n_buckets: int = DEFAULT_N_BUCKETS,
-    salt_factor: int = DEFAULT_SALT_FACTOR,
     shuffle_partitions: int | None = None,
     verify_readback: bool = False,
 ) -> RunStats:
@@ -122,6 +121,8 @@ def run_extraction(
     `verify_readback=True` additionally re-reads the newly-written
     partitions as a belt-and-braces audit and fails on any disagreement.
     """
+    if n_buckets < 1:
+        raise ValueError(f"n_buckets must be at least 1, got {n_buckets}")
     # the overwrite below is only safe under DYNAMIC partition overwrite —
     # static mode would truncate ALREADY-COMMITTED partitions while the
     # control table still lists them, silently losing their documents on
@@ -154,34 +155,35 @@ def run_extraction(
         schema="partition_id int, " + EXTRACTED_SCHEMA,
     )
 
-    # Salted spread of the WRITE: partition_id alone would map each url-hash
-    # bucket to one reducer; a hot host (zipf head) would serialize it.
-    # salt_factor divides n_buckets (8 | 64), so the url-hash term is a
-    # function of partition_id and salt = (partition_id + spid) mod k: only
-    # the spark_partition_id term (the kernel task's scan split, evaluated
-    # map-side, deterministic under retry) spreads a bucket, over at most
-    # min(k, scan splits feeding it) write tasks — ~2 files per bucket on
-    # a 1,000-page input, not k. It also spreads IDENTICAL urls: a url
-    # recrawled 10^6 times spans many scan splits. An independent salt hash
-    # would write ~3× the files at that scale, at ~13 ms per file, so the
-    # salt stays. The partitioned write regroups by directory, and only the
-    # kernel output (≈3× smaller than the raw html) crosses this shuffle.
-    salted = extracted.repartition(
-        shuffle_n,
-        "partition_id",
-        F.pmod(F.xxhash64("url") + F.spark_partition_id(), F.lit(salt_factor)).alias(
-            "salt"
-        ),
+    # About one reducer per bucket: AQE splits a reducer at map-output
+    # boundaries once its bytes exceed the advisory size, so a split spreads
+    # a hot bucket, not every cold bucket hashed to the same reducer. For
+    # this write the advisory size is capped at one task's fair share of the
+    # run (the plan's estimate of todo's bytes / shuffle_n); AQE coalesces
+    # cold reducers up to it. An underestimate only spreads more; an
+    # overestimate falls back to the session's advisory size.
+    advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    session_advisory = spark.conf.get(advisory, None)  # None: unset, so unset again
+    cap = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get(advisory)
     )
-
-    (
-        salted.write.mode("overwrite")
-        .partitionBy("partition_id")
-        # snappy, not zstd: the write shares cores with the Python kernel
-        # workers; cheap compression keeps the JVM off the critical path
-        .option("compression", "snappy")
-        .parquet(out_dir)
-    )
+    fair_share = todo._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() // shuffle_n
+    spark.conf.set(advisory, str(max(1, min(cap, fair_share))))
+    try:
+        (
+            extracted.hint("rebalance", max(shuffle_n, n_buckets), "partition_id")
+            .write.mode("overwrite")
+            .partitionBy("partition_id")
+            # snappy, not zstd: the write shares cores with the Python kernel
+            # workers; cheap compression keeps the JVM off the critical path
+            .option("compression", "snappy")
+            .parquet(out_dir)
+        )
+    finally:
+        if session_advisory is None:
+            spark.conf.unset(advisory)
+        else:
+            spark.conf.set(advisory, session_advisory)
 
     # Lineage from the kernel-side accumulator: the write action above is
     # what materialized the plan, so by now the accumulator holds, per
@@ -261,7 +263,7 @@ def compact_output(
 ) -> CompactStats:
     """Small-file compaction for the partitioned extraction output.
 
-    Every write pass adds `salt_factor × waves` files per bucket directory;
+    The extraction write gives a cold bucket one file but a hot one several;
     at 10^12 docs the file count (not the byte count) becomes the metadata
     bottleneck for every downstream scan. This rewrites each url-hash
     bucket with exactly `files_per_bucket` files: one shuffle keyed on

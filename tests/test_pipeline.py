@@ -402,8 +402,8 @@ def test_corrupt_control_file_fails_resume(spark, tmp_path):
 def test_skew_runtime_hot_url_spread(spark, tmp_path):
     """Runtime skew stress (round-2 verdict #8, complements the plan-level
     AQE skew-join test): ONE url recrawled at ~100× density — identical
-    rows, so a url-only salt would map them all to a single write task. The
-    salt's scan-split term must fan them across write tasks: the job
+    rows, so a url-keyed shuffle would map them all to a single write task.
+    The write's size-aware split must fan them across write tasks: the job
     completes, lineage is exact, and no single task file owns the hot url."""
     import glob
     import os
@@ -431,7 +431,7 @@ def test_skew_runtime_hot_url_spread(spark, tmp_path):
 
     out, ctl = str(tmp_path / "out"), str(tmp_path / "ctl")
     stats = run_extraction(
-        spark, pages, out, ctl, n_buckets=16, salt_factor=8, shuffle_partitions=16
+        spark, pages, out, ctl, n_buckets=16, shuffle_partitions=16
     )
     assert stats.docs_processed == 100 + n_hot
 
@@ -447,6 +447,41 @@ def test_skew_runtime_hot_url_spread(spark, tmp_path):
     assert sum(hot_counts) == n_hot + 1  # +1: the base table's own copy
     assert len(hot_counts) >= 2, "hot url serialized onto one write task"
     assert max(hot_counts) <= int(n_hot * 0.6), hot_counts
+
+
+def test_write_layout_one_file_per_cold_bucket(spark, tmp_path):
+    """A run without a hot bucket writes exactly one file per non-empty
+    bucket dir: the write spreads a bucket only when its shuffle bytes
+    exceed one task's fair share. The input is file-backed, so the plan's
+    size estimate is the real one, and spans 4 scan splits — a layout keyed
+    on the scan split would give a bucket up to 4 files."""
+    import glob
+    import os
+
+    src = str(tmp_path / "pages")
+    pages_df(spark, 300, seed=SEED, num_partitions=4).write.parquet(src)
+    out, ctl = str(tmp_path / "out"), str(tmp_path / "ctl")
+    stats = run_extraction(spark, spark.read.parquet(src), out, ctl)
+    assert stats.docs_processed == 300
+
+    dirs = glob.glob(os.path.join(out, "partition_id=*"))
+    files = {d: glob.glob(os.path.join(d, "*.parquet")) for d in dirs}
+    assert len(dirs) == stats.partitions_committed
+    assert all(len(f) == 1 for f in files.values()), {
+        os.path.basename(d): len(f) for d, f in files.items() if len(f) != 1
+    }
+    # the write restores the session's advisory size
+    assert spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", None) is None
+
+
+def test_run_extraction_rejects_no_buckets(spark, tmp_path):
+    """n_buckets < 1 used to return an all-zero RunStats: every committed
+    set looked complete, so nothing ran and nothing failed."""
+    pages = pages_df(spark, 10, seed=SEED, num_partitions=1)
+    for n in (0, -1):
+        with pytest.raises(ValueError, match="n_buckets"):
+            run_extraction(spark, pages, str(tmp_path / "out"), str(tmp_path / "ctl"), n_buckets=n)
+    assert not (tmp_path / "out").exists()
 
 
 def test_skew_spread(spark):
@@ -709,7 +744,8 @@ def test_job_rejects_corpus_flags_without_corpus_out(tmp_path, capsys):
     --warc-split-mb without --input-warc) used to be accepted and silently
     ignored (exit 0), as was --warc-split-mb 0; a negative split size
     raised a traceback. All are usage errors (exit 2) raised before any
-    Spark session starts."""
+    Spark session starts. So are a bucket count or a compaction target
+    below 1: --n-buckets 0 used to exit 0 having processed nothing."""
     from pdf_extractor_spark import job
 
     out = ["--output", str(tmp_path / "out"), "--control", str(tmp_path / "ctl")]
@@ -726,6 +762,10 @@ def test_job_rejects_corpus_flags_without_corpus_out(tmp_path, capsys):
         (synth + ["--warc-split-mb", "1"], "--input-warc"),
         (warc + ["--warc-split-mb", "0"], "positive"),
         (warc + ["--warc-split-mb", "-1"], "positive"),
+        (synth + ["--n-buckets", "0"], "--n-buckets"),
+        (synth + ["--n-buckets", "-4"], "--n-buckets"),
+        (synth + ["--compact", "0"], "--compact"),
+        (synth + ["--compact", "-1"], "--compact"),
     ):
         with pytest.raises(SystemExit) as exc:
             job.main(argv)

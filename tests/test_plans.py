@@ -2,7 +2,7 @@
 
 Each assertion pins a scale property from SURVEY.md §4.2 / the pipeline
 docstring: column pruning into the scan, predicate pushdown, broadcast of
-dim sides, no shuffle before the extraction kernel, and the salted shuffle
+dim sides, no shuffle before the extraction kernel, and the write's rebalance
 placed AFTER it.
 """
 
@@ -44,7 +44,7 @@ def test_kernel_runs_before_any_shuffle(spark, tmp_path):
     """pipeline.py stage order: no Exchange and no join below the Arrow
     kernel — the resume check is a literal-set Filter on partition_id right
     over the scan, and the only shuffle moves the kernel OUTPUT to the
-    salted write."""
+    bucket-rebalanced write."""
     from pdf_extractor_spark import control as ctl
     from pdf_extractor_spark.pipeline import _MetricsRow, with_partition_id
     from pdf_extractor_spark.kernel.spark_kernel import (
@@ -74,11 +74,8 @@ def test_kernel_runs_before_any_shuffle(spark, tmp_path):
     resume = [l for l in pages_side.splitlines() if "Filter" in l][0]
     assert "pmod(xxhash64(url" in resume and "16)" in resume, resume
     assert "INSET " + ", ".join(sorted(map(str, committed))) in resume, resume
-    # the salted repartition sits ABOVE the kernel
-    salted = extracted.repartition(
-        4, "partition_id", F.pmod(F.xxhash64("url"), F.lit(8)).alias("salt")
-    )
-    plan2 = _plan(salted)
+    # the write's rebalance sits ABOVE the kernel
+    plan2 = _plan(extracted.hint("rebalance", 4, "partition_id"))
     assert plan2.index("Exchange") < plan2.index("MapInPandas")
 
 
