@@ -27,8 +27,8 @@ Scale notes (100 TB / 1000 executors):
     Spark job for the resume check beyond the one control-table read;
   - the write is sized by the data: each url-hash bucket goes to one write
     task (one file), and AQE splits only a bucket whose shuffle bytes
-    exceed one task's fair share of the run, so a hot bucket spreads and
-    no reducer owns it alone;
+    exceed one task's fair share of the kernel input (at least AQE's
+    minPartitionSize), so a hot bucket spreads and no reducer owns it;
   - the kernel stage reads only (url, html) — column pruning keeps the scan
     narrow (the `text` column, ~50% of table bytes, is never read);
   - dynamic partition overwrite makes reruns idempotent per partition.
@@ -150,25 +150,24 @@ def run_extraction(
     # Kernel first, on scan splits: parallelism = input bytes / split size,
     # uniform by construction, so no key skew can serialize the compute.
     metrics_acc = spark.sparkContext.accumulator({}, _PerTaskMetricsParam())
-    extracted = todo.select("partition_id", *kernel_input(pages).columns).mapInPandas(
+    kernel_in = todo.select("partition_id", *kernel_input(pages).columns)
+    extracted = kernel_in.mapInPandas(
         _make_counting_kernel(metrics_acc),
         schema="partition_id int, " + EXTRACTED_SCHEMA,
     )
 
-    # About one reducer per bucket: AQE splits a reducer at map-output
-    # boundaries once its bytes exceed the advisory size, so a split spreads
-    # a hot bucket, not every cold bucket hashed to the same reducer. For
-    # this write the advisory size is capped at one task's fair share of the
-    # run (the plan's estimate of todo's bytes / shuffle_n); AQE coalesces
-    # cold reducers up to it. An underestimate only spreads more; an
-    # overestimate falls back to the session's advisory size.
+    # About one reducer per bucket, so AQE's split at map-output boundaries
+    # (past the advisory size) spreads a hot bucket, not every cold bucket
+    # sharing its reducer. The write's advisory size is AQE's coalescing
+    # target with the plan estimate for the measured total: the kernel
+    # input / shuffle_n, capped at the session's advisory size and floored
+    # at minPartitionSize, so an underestimated source cannot split small.
+    bytes_of = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
     advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     session_advisory = spark.conf.get(advisory, None)  # None: unset, so unset again
-    cap = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get(advisory)
-    )
-    fair_share = todo._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() // shuffle_n
-    spark.conf.set(advisory, str(max(1, min(cap, fair_share))))
+    fair_share = kernel_in._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() // shuffle_n
+    floor = bytes_of(spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize"))
+    spark.conf.set(advisory, str(max(floor, min(bytes_of(spark.conf.get(advisory)), fair_share))))
     try:
         (
             extracted.hint("rebalance", max(shuffle_n, n_buckets), "partition_id")

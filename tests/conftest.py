@@ -22,11 +22,18 @@ def spark():
     # the suite can exercise retry/speculation safety (WARC sink commit
     # protocol, exactly-once lineage); plain local[4] makes any task
     # failure job-fatal, hiding that whole defect class
+    # minPartitionSize floors the extraction write's split size (and AQE's
+    # coalescing). Spark's 1 MB default sits below a production run's fair
+    # share per write task; test runs are KBs, so the suite scales it down
+    # with them, or no bucket in a test could ever split
     s = get_spark(
         app_name="pdf_extractor_spark_tests",
         master="local[4,2]",
         shuffle_partitions=8,
-        extra_conf={"spark.driver.memory": "6g"},
+        extra_conf={
+            "spark.driver.memory": "6g",
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize": "8k",
+        },
     )
     yield s
     s.stop()

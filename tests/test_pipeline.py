@@ -450,28 +450,73 @@ def test_skew_runtime_hot_url_spread(spark, tmp_path):
 
 
 def test_write_layout_one_file_per_cold_bucket(spark, tmp_path):
-    """A run without a hot bucket writes exactly one file per non-empty
-    bucket dir: the write spreads a bucket only when its shuffle bytes
-    exceed one task's fair share. The input is file-backed, so the plan's
-    size estimate is the real one, and spans 4 scan splits — a layout keyed
-    on the scan split would give a bucket up to 4 files."""
+    """Only a hot bucket spreads: the write splits a bucket only when its
+    shuffle bytes exceed one task's fair share. The input is file-backed,
+    so the plan's size estimate is the real one, and one url recrawled
+    2,000 times spans its scan splits. The hot url's bucket dir holds ≥ 2
+    files, none with more than 60% of the copies; every other non-empty
+    bucket dir holds exactly one file, where a layout keyed on the scan
+    split would give it up to one file per split."""
     import glob
     import os
 
+    base = pages_df(spark, 300, seed=SEED, num_partitions=4)
+    hot = next(r for i in range(50) if (r := synth_row(SEED, i))["_kind"] == "html")
+    n_hot = 2000
+    hot_df = spark.createDataFrame([tuple(hot[c] for c in base.columns)] * n_hot, base.schema)
     src = str(tmp_path / "pages")
-    pages_df(spark, 300, seed=SEED, num_partitions=4).write.parquet(src)
+    base.unionByName(hot_df.repartition(8)).write.parquet(src)
     out, ctl = str(tmp_path / "out"), str(tmp_path / "ctl")
     stats = run_extraction(spark, spark.read.parquet(src), out, ctl)
-    assert stats.docs_processed == 300
+    assert stats.docs_processed == 300 + n_hot
 
-    dirs = glob.glob(os.path.join(out, "partition_id=*"))
-    files = {d: glob.glob(os.path.join(d, "*.parquet")) for d in dirs}
-    assert len(dirs) == stats.partitions_committed
+    files = {
+        int(d.rsplit("=", 1)[1]): glob.glob(os.path.join(d, "*.parquet"))
+        for d in glob.glob(os.path.join(out, "partition_id=*"))
+    }
+    assert len(files) == stats.partitions_committed
+    hot_bucket = with_partition_id(
+        spark.createDataFrame([(hot["url"],)], "url string"), 64
+    ).collect()[0].partition_id
+    hot_counts = [
+        spark.read.parquet(f).filter(F.col("url") == hot["url"]).count()
+        for f in files.pop(hot_bucket)
+    ]
+    assert sum(hot_counts) == n_hot + 1  # +1: the base table's own copy
+    assert len(hot_counts) >= 2, "hot url serialized onto one write task"
+    assert max(hot_counts) <= int(n_hot * 0.6), hot_counts
     assert all(len(f) == 1 for f in files.values()), {
-        os.path.basename(d): len(f) for d, f in files.items() if len(f) != 1
+        b: len(f) for b, f in files.items() if len(f) != 1
     }
     # the write restores the session's advisory size
     assert spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", None) is None
+
+
+def test_write_layout_floor_bounds_underestimated_source(spark, tmp_path):
+    """pages_df is spark.range-based, so the plan estimates a few bytes per
+    row and the fair share falls to a few bytes: unfloored, every bucket
+    split at every map output. The split size is floored at AQE's
+    minPartitionSize; at Spark's 1 MB default every bucket of this run is
+    below it, so each gets one file whatever the estimate."""
+    import glob
+    import os
+
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    suite_floor = spark.conf.get(key)
+    spark.conf.set(key, "1m")
+    try:
+        stats = run_extraction(
+            spark, pages_df(spark, 300, seed=SEED, num_partitions=4),
+            str(tmp_path / "out"), str(tmp_path / "ctl"),
+        )
+    finally:
+        spark.conf.set(key, suite_floor)
+    counts = [
+        len(glob.glob(os.path.join(d, "*.parquet")))
+        for d in glob.glob(str(tmp_path / "out" / "partition_id=*"))
+    ]
+    assert len(counts) == stats.partitions_committed
+    assert set(counts) == {1}, counts
 
 
 def test_run_extraction_rejects_no_buckets(spark, tmp_path):
