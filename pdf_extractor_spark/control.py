@@ -50,20 +50,27 @@ class BucketingMismatchError(RuntimeError):
     """Control dir was written under a different n_buckets than the run's."""
 
 
-def committed_ids(spark: SparkSession, control_dir: str, n_buckets: int) -> frozenset[int]:
-    """Committed partition ids (J3): one driver-side collect of ≤ n_buckets
-    rows per pass, which the caller turns into a literal-set scan filter.
+def committed_ids(
+    spark: SparkSession, control_dir: str, n_buckets: int | None = None
+) -> tuple[frozenset[int], int | None]:
+    """Committed partition ids (J3) and the bucket count they were computed
+    under: one driver-side collect of ≤ n_buckets rows per pass, which the
+    caller turns into a literal-set scan filter.
 
-    Rows committed under a DIFFERENT `n_buckets` raise BucketingMismatchError:
-    their ids were computed with another modulus, so honoring them would skip
-    or re-run work undetectably. Rows with a null n_buckets (pre-upgrade
-    control dirs) are accepted. Only a missing dir (a Hadoop FS check: no
-    job, no logged stack trace) means nothing is committed; any read error,
+    With `n_buckets` given, rows committed under a DIFFERENT count raise
+    BucketingMismatchError: their ids were computed with another modulus, so
+    honoring them would skip or re-run work undetectably. Rows with a null
+    n_buckets (pre-upgrade control dirs) are accepted, and the count
+    returned is `n_buckets`. Without it, the count is the rows' one stamp;
+    several stamps or a null one raise, since the modulus cannot be
+    inferred. Only a missing dir (a Hadoop FS check: no job, no logged stack
+    trace) or one without committed rows means nothing is committed, and the
+    count returned is then `n_buckets` (None if not given); any read error,
     e.g. a corrupt commit file, propagates instead of turning resume off.
     """
     path = spark._jvm.org.apache.hadoop.fs.Path(control_dir)
     if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
-        return frozenset()
+        return frozenset(), n_buckets
     rows = (
         spark.read.schema(CONTROL_SCHEMA)
         .parquet(control_dir)
@@ -71,14 +78,25 @@ def committed_ids(spark: SparkSession, control_dir: str, n_buckets: int) -> froz
         .select("partition_id", "n_buckets")
         .collect()
     )
-    bad = sorted({r.n_buckets for r in rows} - {None, n_buckets})
-    if bad:
+    ids = frozenset(r.partition_id for r in rows)
+    stamps = {r.n_buckets for r in rows}
+    if n_buckets is not None:
+        bad = sorted(stamps - {None, n_buckets})
+        if bad:
+            raise BucketingMismatchError(
+                f"control dir {control_dir} was committed with n_buckets={bad}, "
+                f"current run uses {n_buckets}; pass n_buckets={bad[0]} "
+                f"(--n-buckets {bad[0]}) to resume it"
+            )
+        return ids, n_buckets
+    if len(stamps) > 1 or None in stamps:
         raise BucketingMismatchError(
-            f"control dir {control_dir} was committed with n_buckets={bad}, "
-            f"current run uses {n_buckets}; refusing to resume with a "
-            "mismatched bucketing"
+            f"control dir {control_dir} holds rows stamped n_buckets="
+            f"{sorted(stamps, key=lambda s: (s is None, s))}, so the bucket "
+            "count cannot be inferred; pass the count it was committed under "
+            "as n_buckets (--n-buckets)"
         )
-    return frozenset(r.partition_id for r in rows)
+    return ids, next(iter(stamps), None)
 
 
 def append_commits_rows(rows, control_dir: str, n_buckets: int | None = None) -> None:

@@ -3,7 +3,7 @@
     spark-submit --py-files pdf_extractor_spark.zip pdf_extractor_spark/job.py \
         --input /path/to/pages_parquet  (or --synth N to generate pages) \
         --output /path/out --control /path/control \
-        [--n-buckets 64]
+        [--n-buckets N]
 
 Replaces the reference's `pdf-extractor <config> <in> <out>` console script
 (reference: pyproject.toml:27, cli.py:63-124) with a cluster job: same
@@ -46,7 +46,10 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--seed", type=int, default=42, help="synthesizer seed (with --synth)")
     p.add_argument("--output", required=True, help="output parquet dir (partitioned by partition_id)")
     p.add_argument("--control", required=True, help="control-table parquet dir (checkpoint/lineage)")
-    p.add_argument("--n-buckets", type=int, default=64, help="url-hash partition count")
+    p.add_argument("--n-buckets", type=int, default=None,
+                   help="url-hash partition count (default: the count stamped "
+                        "in the control dir, or else the session's "
+                        "spark.sql.shuffle.partitions)")
     p.add_argument("--enrich", metavar="DIR", default=None,
                    help="also write quality-enriched output (lang/tokens/quality_ok) to DIR")
     p.add_argument("--training-out", metavar="DIR", default=None,

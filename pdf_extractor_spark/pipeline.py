@@ -22,6 +22,10 @@ serialize/compress/deserialize, and hot-host skew would land on the compute
 stage rather than the cheap write stage.
 
 Scale notes (100 TB / 1000 executors):
+  - n_buckets defaults to the run's shuffle parallelism (8k at 100 TB, one
+    setting for both), and a resume adopts the count stamped in the control
+    table; it is never taken from the plan's size estimate, which a WARC
+    byte-range source puts at a few bytes per row;
   - the committed ids are ≤ n_buckets ints, read once on the driver and
     planned as an InSet filter on the scan: no join, no exchange and no
     Spark job for the resume check beyond the one control-table read;
@@ -50,8 +54,6 @@ from pdf_extractor_spark.kernel.spark_kernel import (
     extract_batches,
     kernel_input,
 )
-
-DEFAULT_N_BUCKETS = 64
 
 _MetricsRow = namedtuple(
     "_MetricsRow",
@@ -104,7 +106,7 @@ def run_extraction(
     pages: DataFrame,
     out_dir: str,
     control_dir: str,
-    n_buckets: int = DEFAULT_N_BUCKETS,
+    n_buckets: int | None = None,
     shuffle_partitions: int | None = None,
     verify_readback: bool = False,
 ) -> RunStats:
@@ -120,8 +122,14 @@ def run_extraction(
     protocol restores it for the transformation case — round-2 verdict #3).
     `verify_readback=True` additionally re-reads the newly-written
     partitions as a belt-and-braces audit and fails on any disagreement.
+
+    Without `n_buckets`, a control dir holding committed rows sets the
+    bucket count through its stamp (BucketingMismatchError if its rows carry
+    several stamps or a null, pre-stamp one); otherwise the count is
+    `shuffle_partitions or spark.sql.shuffle.partitions`. An explicit
+    `n_buckets` must match every stamped row.
     """
-    if n_buckets < 1:
+    if n_buckets is not None and n_buckets < 1:
         raise ValueError(f"n_buckets must be at least 1, got {n_buckets}")
     # the overwrite below is only safe under DYNAMIC partition overwrite —
     # static mode would truncate ALREADY-COMMITTED partitions while the
@@ -130,22 +138,22 @@ def run_extraction(
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     shuffle_n = shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    pages_b = with_partition_id(pages, n_buckets)
-
     # ≤ n_buckets ints, read once on the driver (fails fast on a mismatched
-    # bucketing). Ids outside [0, n_buckets) can only come from a pre-stamp
-    # control dir — drop them so the fully-committed check and the metrics
-    # pruning stay keyed to the CURRENT bucketing.
-    committed = {
-        p for p in ctl.committed_ids(spark, control_dir, n_buckets) if 0 <= p < n_buckets
-    }
+    # bucketing). Without an explicit count a resume adopts the control
+    # dir's stamp and a fresh run buckets by the shuffle parallelism. Ids
+    # outside [0, n_buckets) can only come from a pre-stamp control dir —
+    # drop them so the fully-committed check and the metrics pruning stay
+    # keyed to the CURRENT bucketing.
+    committed, n_buckets = ctl.committed_ids(spark, control_dir, n_buckets)
+    n_buckets = n_buckets or shuffle_n
+    committed = {p for p in committed if 0 <= p < n_buckets}
     if len(committed) >= n_buckets:
         # fully-committed resume: return WITHOUT building the plan — the
         # filter would still scan the whole input to write nothing
         return RunStats(0, 0, 0, 0, 0)
-    todo = pages_b
+    todo = with_partition_id(pages, n_buckets)
     if committed:  # an InSet Filter over the scan: no join, exchange or job
-        todo = pages_b.filter(~F.col("partition_id").isin(sorted(committed)))
+        todo = todo.filter(~F.col("partition_id").isin(sorted(committed)))
 
     # Kernel first, on scan splits: parallelism = input bytes / split size,
     # uniform by construction, so no key skew can serialize the compute.

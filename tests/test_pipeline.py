@@ -347,6 +347,41 @@ def test_resume_rejects_mismatched_bucketing(spark, tmp_path):
     assert stats.partitions_committed == 0
 
 
+def test_default_buckets_follow_shuffle_partitions(spark, tmp_path):
+    """Without n_buckets a fresh run buckets by the shuffle partitions
+    (the suite's 8) and stamps that count; a resume adopts the stamp
+    whatever its own shuffle parallelism, and an explicit other count is
+    refused. A pre-stamp (null) row cannot say its modulus, so it needs an
+    explicit n_buckets."""
+    import glob
+    import os
+
+    from pdf_extractor_spark.control import BucketingMismatchError, append_commits_rows
+    from pdf_extractor_spark.pipeline import _MetricsRow
+
+    out, ctl = str(tmp_path / "out"), str(tmp_path / "ctl")
+    pages = pages_df(spark, 300, seed=SEED, num_partitions=2)
+    stats = run_extraction(spark, pages, out, ctl)
+    dirs = glob.glob(os.path.join(out, "partition_id=*"))
+    assert len(dirs) == stats.partitions_committed == 8
+    assert all(glob.glob(os.path.join(d, "*.parquet")) for d in dirs)
+    stamps = spark.read.parquet(ctl).groupBy("n_buckets").count().collect()
+    assert [(r.n_buckets, r["count"]) for r in stamps] == [(8, 8)]
+
+    stats = run_extraction(spark, pages, out, ctl, shuffle_partitions=16)
+    assert stats.docs_processed == 0
+    with pytest.raises(BucketingMismatchError, match="n_buckets=8"):
+        run_extraction(spark, pages, out, ctl, n_buckets=16)
+
+    pre_stamp = str(tmp_path / "ctl-pre-stamp")
+    append_commits_rows([_MetricsRow(0, 1, 10, 0, 0)], pre_stamp, n_buckets=None)
+    with pytest.raises(BucketingMismatchError, match="cannot be inferred"):
+        run_extraction(spark, pages, str(tmp_path / "out2"), pre_stamp)
+    assert not (tmp_path / "out2").exists()
+    stats = run_extraction(spark, pages, str(tmp_path / "out2"), pre_stamp, n_buckets=8)
+    assert stats.partitions_committed == 7
+
+
 def _jobs_in(spark, group, fn):
     """(fn(), number of Spark jobs fn launched)."""
     sc = spark.sparkContext
@@ -370,7 +405,7 @@ def test_committed_ids_one_read(spark, tmp_path):
 
     control_dir = str(tmp_path / "control")
     ids, jobs = _jobs_in(spark, "ctl-missing", lambda: committed_ids(spark, control_dir, 8))
-    assert (ids, jobs) == (frozenset(), 0)
+    assert (ids, jobs) == ((frozenset(), 8), 0)
 
     spark.createDataFrame(
         [(p, "committed", 1, 10, 0, 0, None, 8) for p in (0, 1)], CONTROL_SCHEMA
@@ -378,7 +413,7 @@ def test_committed_ids_one_read(spark, tmp_path):
     append_commits_rows([_MetricsRow(p, 1, 10, 0, 0) for p in (2, 3)], control_dir, n_buckets=8)
     append_commits_rows([_MetricsRow(5, 1, 10, 0, 0)], control_dir, n_buckets=None)
     ids, jobs = _jobs_in(spark, "ctl-union", lambda: committed_ids(spark, control_dir, 8))
-    assert ids == {0, 1, 2, 3, 5}
+    assert ids == ({0, 1, 2, 3, 5}, 8)
     assert jobs == 1
 
     append_commits_rows([_MetricsRow(6, 1, 10, 0, 0)], control_dir, n_buckets=16)
@@ -467,7 +502,7 @@ def test_write_layout_one_file_per_cold_bucket(spark, tmp_path):
     src = str(tmp_path / "pages")
     base.unionByName(hot_df.repartition(8)).write.parquet(src)
     out, ctl = str(tmp_path / "out"), str(tmp_path / "ctl")
-    stats = run_extraction(spark, spark.read.parquet(src), out, ctl)
+    stats = run_extraction(spark, spark.read.parquet(src), out, ctl, n_buckets=64)
     assert stats.docs_processed == 300 + n_hot
 
     files = {

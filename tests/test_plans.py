@@ -59,7 +59,7 @@ def test_kernel_runs_before_any_shuffle(spark, tmp_path):
     ctl.append_commits_rows(
         [_MetricsRow(p, 1, 10, 0, 0) for p in range(12)], control_dir, n_buckets=16
     )
-    committed = ctl.committed_ids(spark, control_dir, 16)
+    committed, _ = ctl.committed_ids(spark, control_dir, 16)
     todo = pages_b.filter(~F.col("partition_id").isin(sorted(committed)))
     extracted = todo.select("partition_id", "url", "html").mapInPandas(
         extract_batches, schema="partition_id int, " + EXTRACTED_SCHEMA
