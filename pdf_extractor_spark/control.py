@@ -16,7 +16,10 @@ Commit protocol (exactly-once per partition):
   1. output written first (dynamic partition overwrite → idempotent);
   2. control rows appended only after the write action succeeds;
   3. a crash between 1 and 2 leaves the partition uncommitted → the rerun
-     overwrites it in place. No partial state is ever visible.
+     overwrites it in place. No partial state is ever visible. The bucket
+     count is stamped only in step 2, so a rerun over output whose control
+     dir holds no stamp must be given the count (the pipeline refuses to
+     default it); under another modulus the dirs it does not reach survive.
 """
 
 from __future__ import annotations
@@ -51,26 +54,29 @@ class BucketingMismatchError(RuntimeError):
 
 
 def committed_ids(
-    spark: SparkSession, control_dir: str, n_buckets: int | None = None
+    spark: SparkSession,
+    control_dir: str,
+    n_buckets: int | None = None,
+    default: int | None = None,
 ) -> tuple[frozenset[int], int | None]:
-    """Committed partition ids (J3) and the bucket count they were computed
-    under: one driver-side collect of ≤ n_buckets rows per pass, which the
-    caller turns into a literal-set scan filter.
+    """Committed partition ids (J3) and the bucket count the run must use:
+    one driver-side collect of ≤ n_buckets rows per pass, which the caller
+    turns into a literal-set scan filter.
 
-    With `n_buckets` given, rows committed under a DIFFERENT count raise
-    BucketingMismatchError: their ids were computed with another modulus, so
-    honoring them would skip or re-run work undetectably. Rows with a null
-    n_buckets (pre-upgrade control dirs) are accepted, and the count
-    returned is `n_buckets`. Without it, the count is the rows' one stamp;
-    several stamps or a null one raise, since the modulus cannot be
-    inferred. Only a missing dir (a Hadoop FS check: no job, no logged stack
-    trace) or one without committed rows means nothing is committed, and the
-    count returned is then `n_buckets` (None if not given); any read error,
-    e.g. a corrupt commit file, propagates instead of turning resume off.
+    The count is `n_buckets` if given, else the committed rows' stamp, else
+    `default` (None only if that is None too). With `n_buckets` given, rows
+    committed under a DIFFERENT count raise BucketingMismatchError: their
+    ids were computed with another modulus, so honoring them would skip or
+    re-run work undetectably; rows with a null n_buckets (pre-upgrade
+    control dirs) are accepted. Without it, several stamps or a null one
+    raise, since the modulus cannot be inferred. Only a missing dir (a
+    Hadoop FS check: no job, no logged stack trace) or one without committed
+    rows means nothing is committed; any read error, e.g. a corrupt commit
+    file, propagates instead of turning resume off.
     """
     path = spark._jvm.org.apache.hadoop.fs.Path(control_dir)
     if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
-        return frozenset(), n_buckets
+        return frozenset(), default if n_buckets is None else n_buckets
     rows = (
         spark.read.schema(CONTROL_SCHEMA)
         .parquet(control_dir)
@@ -96,7 +102,7 @@ def committed_ids(
             "count cannot be inferred; pass the count it was committed under "
             "as n_buckets (--n-buckets)"
         )
-    return ids, next(iter(stamps), None)
+    return ids, next(iter(stamps), default)
 
 
 def append_commits_rows(rows, control_dir: str, n_buckets: int | None = None) -> None:

@@ -92,6 +92,19 @@ def with_partition_id(df: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
+def _refuse_unstamped_output(spark: SparkSession, out_dir: str, control_dir: str) -> None:
+    """BucketingMismatchError if `out_dir` holds bucket dirs: with no stamp
+    in the control dir, the modulus they were written under is unknown."""
+    pattern = spark._jvm.org.apache.hadoop.fs.Path(out_dir.rstrip("/") + "/partition_id=*")
+    found = pattern.getFileSystem(spark._jsc.hadoopConfiguration()).globStatus(pattern)
+    if found:
+        raise ctl.BucketingMismatchError(
+            f"output dir {out_dir} already holds {len(found)} partition_id dirs "
+            f"but control dir {control_dir} has no stamped bucket count; pass "
+            "the count they were written under as n_buckets (--n-buckets)"
+        )
+
+
 @dataclass
 class RunStats:
     partitions_committed: int
@@ -126,8 +139,10 @@ def run_extraction(
     Without `n_buckets`, a control dir holding committed rows sets the
     bucket count through its stamp (BucketingMismatchError if its rows carry
     several stamps or a null, pre-stamp one); otherwise the count is
-    `shuffle_partitions or spark.sql.shuffle.partitions`. An explicit
-    `n_buckets` must match every stamped row.
+    `shuffle_partitions or spark.sql.shuffle.partitions`, and an `out_dir`
+    that already holds bucket dirs raises BucketingMismatchError instead,
+    since they may come from another count. An explicit `n_buckets` must
+    match every stamped row.
     """
     if n_buckets is not None and n_buckets < 1:
         raise ValueError(f"n_buckets must be at least 1, got {n_buckets}")
@@ -140,12 +155,18 @@ def run_extraction(
 
     # ≤ n_buckets ints, read once on the driver (fails fast on a mismatched
     # bucketing). Without an explicit count a resume adopts the control
-    # dir's stamp and a fresh run buckets by the shuffle parallelism. Ids
-    # outside [0, n_buckets) can only come from a pre-stamp control dir —
-    # drop them so the fully-committed check and the metrics pruning stay
+    # dir's stamp and a fresh run buckets by the shuffle parallelism.
+    committed, count = ctl.committed_ids(spark, control_dir, n_buckets, default=shuffle_n)
+    if n_buckets is None and not committed:
+        # The count is the shuffle default, but output already on disk may
+        # come from another modulus (a crash between write and commit, or a
+        # reused out_dir): dynamic overwrite would keep the dirs the new
+        # count does not reach, and their docs would be written twice.
+        _refuse_unstamped_output(spark, out_dir, control_dir)
+    n_buckets = count
+    # Ids outside [0, n_buckets) can only come from a pre-stamp control dir
+    # — drop them so the fully-committed check and the metrics pruning stay
     # keyed to the CURRENT bucketing.
-    committed, n_buckets = ctl.committed_ids(spark, control_dir, n_buckets)
-    n_buckets = n_buckets or shuffle_n
     committed = {p for p in committed if 0 <= p < n_buckets}
     if len(committed) >= n_buckets:
         # fully-committed resume: return WITHOUT building the plan — the

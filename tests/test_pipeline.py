@@ -382,6 +382,33 @@ def test_default_buckets_follow_shuffle_partitions(spark, tmp_path):
     assert stats.partitions_committed == 7
 
 
+def test_default_buckets_refuse_unstamped_output(spark, tmp_path):
+    """Output left without its control rows (a crash between write and
+    commit, or a reused out_dir) cannot take the shuffle default: under a
+    smaller count the dirs it does not reach would survive next to the
+    rewritten ones. The rerun refuses, and with the count given it
+    overwrites the output in place."""
+    import shutil
+
+    from pdf_extractor_spark.control import BucketingMismatchError
+
+    out, ctl = str(tmp_path / "out"), str(tmp_path / "ctl")
+    pages = pages_df(spark, 300, seed=SEED, num_partitions=2)
+    run_extraction(spark, pages, out, ctl, shuffle_partitions=16)
+    shutil.rmtree(ctl)
+
+    def written():
+        df = spark.read.parquet(out)
+        return df.count(), df.select("url").distinct().count()
+
+    with pytest.raises(BucketingMismatchError, match="--n-buckets"):
+        run_extraction(spark, pages, out, ctl, shuffle_partitions=8)
+    assert written() == (300, 300)
+    stats = run_extraction(spark, pages, out, ctl, n_buckets=16, shuffle_partitions=8)
+    assert stats.docs_processed == 300
+    assert written() == (300, 300)
+
+
 def _jobs_in(spark, group, fn):
     """(fn(), number of Spark jobs fn launched)."""
     sc = spark.sparkContext
