@@ -21,7 +21,7 @@ Two parts, one JSON line on stdout:
    /root/testdata/sf0.1): representative operators from SURVEY.md §2 plus
    the training-data suite (minhash dedup, ANN top-k, text quality).
 
-Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default 32),
+Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default os.cpu_count()),
 BENCH_EXTRACT_DOCS (default 200000), BENCH_DOC_HEFT (default 5),
 BENCH_WORK_DIR (default /dev/shm/pdf_extractor_bench).
 """
@@ -39,7 +39,7 @@ if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 N_DOCS = int(os.environ.get("BENCH_EXTRACT_DOCS", "200000"))
 # heft=5 → ~10 KB avg page, Common-Crawl-realistic; tests use heft=1 (~2 KB)
 HEFT = int(os.environ.get("BENCH_DOC_HEFT", "5"))

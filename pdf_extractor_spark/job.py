@@ -100,12 +100,12 @@ def main(argv: list[str] | None = None) -> int:
                         "(distributed prefix-sum budget fill over the final "
                         "shipped text)")
     p.add_argument("--dead-letter-out", metavar="DIR", default=None,
-                   help="also write a capped per-partition sample of failing "
-                        "payloads (url, error_class, payload head) to DIR for "
-                        "triage; costs a second pass over the input (runs even "
-                        "on a fully-resumed job, where this run's "
-                        "parse_failures counter is 0 but failures exist in "
-                        "the data)")
+                   help="also write a capped per-bucket sample of failing "
+                        "documents (url, error_class, payload_head) to DIR for "
+                        "triage: a filter over the written output, no second "
+                        "kernel pass (runs even on a fully-resumed job, where "
+                        "this run's parse_failures counter is 0 but failures "
+                        "exist in the data)")
     p.add_argument("--verify-readback", action="store_true",
                    help="audit mode: re-read written partitions and require exact "
                         "agreement with the kernel-side lineage counters")
@@ -258,11 +258,13 @@ def main(argv: list[str] | None = None) -> int:
     # gate on the flag alone: stats.parse_failures counts only partitions
     # newly extracted THIS run, so a resumed job would silently skip triage
     # even though failures exist in the data (round-3 ADVICE);
-    # dead_letter_sample yields an empty result when nothing fails
+    # dead_letter_sample yields an empty result when nothing fails. Buckets
+    # written before error_class existed read it as null under OUTPUT_SCHEMA.
     if args.dead_letter_out:
-        from pdf_extractor_spark.pipeline import dead_letter_sample
+        from pdf_extractor_spark.pipeline import OUTPUT_SCHEMA, dead_letter_sample
 
-        dead_letter_sample(pages).write.mode("overwrite").parquet(args.dead_letter_out)
+        written = spark.read.schema(OUTPUT_SCHEMA).parquet(args.output)
+        dead_letter_sample(written).write.mode("overwrite").parquet(args.dead_letter_out)
         print("dead-letter sample written to %s" % args.dead_letter_out, file=sys.stderr)
 
     if args.training_out:

@@ -11,7 +11,10 @@ Python" = no per-row serde; Arrow moves whole columns).
 Output schema (FIXTURES.md §2), after any pass-through input columns:
   url string, extracted_text string,
   span_offsets array<struct<start int, end int, page int, bbox array<float>>>,
-  parse_status string, truncated boolean, n_bytes long, font_unmapped int
+  parse_status string, truncated boolean, n_bytes long, font_unmapped int,
+  error_class string, payload_head binary
+The last two are set only for failing documents; pipeline.dead_letter_sample
+filters them instead of running the kernel again.
 """
 
 from __future__ import annotations
@@ -25,8 +28,10 @@ from pdf_extractor_spark.kernel.extract import extract_document
 EXTRACTED_SCHEMA = (
     "url string, extracted_text string, "
     "span_offsets array<struct<start: int, end: int, page: int, bbox: array<float>>>, "
-    "parse_status string, truncated boolean, n_bytes long, font_unmapped int"
+    "parse_status string, truncated boolean, n_bytes long, font_unmapped int, "
+    "error_class string, payload_head binary"
 )
+PAYLOAD_HEAD_BYTES = 64  # of a failing payload: its magic and first tag, never a blob
 
 # Columns the kernel needs — select these before mapInPandas so Catalyst
 # prunes `text`/`lang`/`warc_ts` out of the parquet scan.
@@ -55,6 +60,8 @@ def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         truncs: list[bool] = []
         n_bytes: list[int] = []
         unmapped: list[int] = []
+        errors: list[str | None] = []
+        heads: list[bytes | None] = []
         for raw, hint in zip(payloads, hints):
             b = bytes(raw) if raw is not None else None
             res = extract_document(b, hint or None)
@@ -67,6 +74,8 @@ def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             truncs.append(res.truncated)
             n_bytes.append(len(b) if b is not None else 0)
             unmapped.append(res.font_unmapped)
+            errors.append(res.error_class)
+            heads.append(None if res.error_class is None else (b or b"")[:PAYLOAD_HEAD_BYTES])
         out = {c: pdf[c].to_numpy() for c in pdf.columns if c not in _CONSUMED_COLS}
         out.update(
             extracted_text=texts,
@@ -75,6 +84,8 @@ def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             truncated=truncs,
             n_bytes=n_bytes,
             font_unmapped=unmapped,
+            error_class=errors,
+            payload_head=heads,
         )
         yield pd.DataFrame(out)
 

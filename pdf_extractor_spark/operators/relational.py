@@ -1132,15 +1132,16 @@ def g1_grouped_trend(spark, sf_dir):
     """,
     doc="Dead-letter sample sink (also gated by tests/test_pipeline.py"
     "::test_dead_letter_sample): pipeline.dead_letter_sample keeps a capped "
-    "per-partition sample of (url, error_class, payload head) for payloads "
-    "that fail extraction — the triage artifact a 100 TB crawl pipeline "
-    "needs beside the parse_failures counter. Input: 400 synthesized pages "
-    "plus crafted binary/NUL payloads; output aggregated per error class "
+    "per-bucket sample of the kernel's (url, error_class, payload_head) for "
+    "failing documents — the triage artifact a 100 TB crawl pipeline needs "
+    "beside the parse_failures counter. Input: 400 synthesized pages plus "
+    "crafted binary/NUL payloads, 2 buckets; output aggregated per error class "
     "(cap set above the fixture failure count, so the aggregate is exact "
     "and matches a frozen expected table).",
 )
 def dead_letter_triage(spark, sf_dir):
-    from pdf_extractor_spark.pipeline import dead_letter_sample
+    from pdf_extractor_spark.kernel.spark_kernel import run_kernel
+    from pdf_extractor_spark.pipeline import dead_letter_sample, with_partition_id
     from pdf_extractor_spark.synth import PAGES_SCHEMA_DDL, pages_df
 
     crafted = spark.createDataFrame(
@@ -1151,7 +1152,7 @@ def dead_letter_triage(spark, sf_dir):
         PAGES_SCHEMA_DDL,
     )
     pages = pages_df(spark, 400, seed=42, num_partitions=2).unionByName(crafted)
-    sample = dead_letter_sample(pages, max_per_partition=50)
+    sample = dead_letter_sample(with_partition_id(run_kernel(pages), 2), max_per_bucket=50)
     return (
         sample.groupBy("error_class")
         .agg(

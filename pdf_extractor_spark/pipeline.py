@@ -48,12 +48,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark import control as ctl
-from pdf_extractor_spark.kernel.extract import FAILURE_STATUSES
 from pdf_extractor_spark.kernel.spark_kernel import (
     EXTRACTED_SCHEMA,
     extract_batches,
     kernel_input,
 )
+
+# The written table. Read back with it, a bucket written by an older kernel
+# reads the columns it lacks as null.
+OUTPUT_SCHEMA = "partition_id int, " + EXTRACTED_SCHEMA
 
 _MetricsRow = namedtuple(
     "_MetricsRow",
@@ -92,16 +95,21 @@ def with_partition_id(df: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
-def _refuse_unstamped_output(spark: SparkSession, out_dir: str, control_dir: str) -> None:
-    """BucketingMismatchError if `out_dir` holds bucket dirs: with no stamp
-    in the control dir, the modulus they were written under is unknown."""
+def _refuse_unstamped_output(
+    spark: SparkSession, out_dir: str, control_dir: str, n_buckets: int | None
+) -> None:
+    """BucketingMismatchError if `out_dir` holds bucket dirs a run under
+    `n_buckets` (None: any count) might not overwrite: with no stamp in the
+    control dir, the modulus they were written under is unknown."""
     pattern = spark._jvm.org.apache.hadoop.fs.Path(out_dir.rstrip("/") + "/partition_id=*")
-    found = pattern.getFileSystem(spark._jsc.hadoopConfiguration()).globStatus(pattern)
-    if found:
+    found = pattern.getFileSystem(spark._jsc.hadoopConfiguration()).globStatus(pattern) or []
+    ids = [int(st.getPath().getName().split("=", 1)[1]) for st in found]
+    if any(n_buckets is None or p >= n_buckets for p in ids):
         raise ctl.BucketingMismatchError(
-            f"output dir {out_dir} already holds {len(found)} partition_id dirs "
-            f"but control dir {control_dir} has no stamped bucket count; pass "
-            "the count they were written under as n_buckets (--n-buckets)"
+            f"output dir {out_dir} already holds {len(ids)} partition_id dirs "
+            f"(highest id {max(ids)}) but control dir {control_dir} has no "
+            "stamped bucket count; pass the count they were written under as "
+            "n_buckets (--n-buckets)"
         )
 
 
@@ -142,7 +150,7 @@ def run_extraction(
     `shuffle_partitions or spark.sql.shuffle.partitions`, and an `out_dir`
     that already holds bucket dirs raises BucketingMismatchError instead,
     since they may come from another count. An explicit `n_buckets` must
-    match every stamped row.
+    match every stamped row, or with no stamp exceed every bucket dir's id.
     """
     if n_buckets is not None and n_buckets < 1:
         raise ValueError(f"n_buckets must be at least 1, got {n_buckets}")
@@ -157,12 +165,12 @@ def run_extraction(
     # bucketing). Without an explicit count a resume adopts the control
     # dir's stamp and a fresh run buckets by the shuffle parallelism.
     committed, count = ctl.committed_ids(spark, control_dir, n_buckets, default=shuffle_n)
-    if n_buckets is None and not committed:
-        # The count is the shuffle default, but output already on disk may
-        # come from another modulus (a crash between write and commit, or a
-        # reused out_dir): dynamic overwrite would keep the dirs the new
-        # count does not reach, and their docs would be written twice.
-        _refuse_unstamped_output(spark, out_dir, control_dir)
+    if not committed:
+        # Output already on disk may come from another modulus (a crash
+        # between write and commit, or a reused out_dir): dynamic overwrite
+        # would keep the dirs the new count does not reach, and their docs
+        # would be written twice.
+        _refuse_unstamped_output(spark, out_dir, control_dir, n_buckets)
     n_buckets = count
     # Ids outside [0, n_buckets) can only come from a pre-stamp control dir
     # — drop them so the fully-committed check and the metrics pruning stay
@@ -182,7 +190,7 @@ def run_extraction(
     kernel_in = todo.select("partition_id", *kernel_input(pages).columns)
     extracted = kernel_in.mapInPandas(
         _make_counting_kernel(metrics_acc),
-        schema="partition_id int, " + EXTRACTED_SCHEMA,
+        schema=OUTPUT_SCHEMA,
     )
 
     # About one reducer per bucket, so AQE's split at map-output boundaries
@@ -246,15 +254,13 @@ def run_extraction(
             r.partition_id: (
                 r.docs_processed, r.bytes_parsed, r.parse_failures, r.font_unmapped
             )
-            for r in spark.read.parquet(out_dir)
+            for r in spark.read.schema(OUTPUT_SCHEMA).parquet(out_dir)
             .filter(F.col("partition_id").isin(new_ids))
             .groupBy("partition_id")
             .agg(
                 F.count("*").alias("docs_processed"),
                 F.sum("n_bytes").alias("bytes_parsed"),
-                F.sum(
-                    F.when(F.col("parse_status").isin(*FAILURE_STATUSES), 1).otherwise(0)
-                ).alias("parse_failures"),
+                F.count("error_class").alias("parse_failures"),
                 F.sum("font_unmapped").alias("font_unmapped"),
             )
             .collect()
@@ -310,7 +316,7 @@ def compact_output(
     import os
     import shutil
 
-    df = spark.read.parquet(out_dir)
+    df = spark.read.schema(OUTPUT_SCHEMA).parquet(out_dir)  # keeps columns older buckets lack
     files_before = df.select(F.input_file_name()).distinct().count()
     shuffle_n = shuffle_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions")
@@ -600,51 +606,27 @@ def build_training_corpus(
     )
 
 
-def dead_letter_sample(
-    pages: DataFrame, max_per_partition: int = 20, head_bytes: int = 64
-) -> DataFrame:
-    """Capped per-partition sample of FAILING payloads for triage — the
+def dead_letter_sample(extracted: DataFrame, max_per_bucket: int = 20) -> DataFrame:
+    """Capped per-bucket sample of FAILING documents for triage — the
     operability companion to run_extraction's `parse_failures` counter: the
-    count says how many broke; this keeps (url, error_class, payload head)
+    count says how many broke; this keeps (url, error_class, payload_head)
     for a bounded few so an operator can see WHAT broke without re-running
     the crawl (round-2 verdict #9).
 
-    Bounded by construction: ≤ max_per_partition rows × head_bytes bytes
-    per task, and each task STOPS classifying once its cap is hit — at
-    10^12 docs the sink's size is O(tasks), not O(failures). The class is
-    the kernel's own `ExtractResult.error_class`, set where the kernel sets
-    the failing `parse_status`.
+    `extracted` is kernel output with its `partition_id` (the written
+    table read back with OUTPUT_SCHEMA, or `with_partition_id(run_kernel(
+    pages), n)`), so this is a JVM filter and a per-bucket `row_number()`
+    cap, with no second kernel pass: deterministic (the lowest urls of each
+    bucket) and at most n_buckets × max_per_bucket rows.
     """
-    from pdf_extractor_spark.kernel.extract import extract_document
+    from pyspark.sql import Window
 
-    def kernel(batches):
-        import pandas as pd
-
-        left = max_per_partition
-        for pdf in batches:
-            if left <= 0:
-                break
-            rows = []
-            for url, payload in zip(pdf["url"], pdf["html"]):
-                b = bytes(payload) if payload is not None else None
-                cls = extract_document(b).error_class
-                if cls is None:
-                    continue
-                rows.append(
-                    {
-                        "url": url,
-                        "error_class": cls,
-                        "payload_head": (b or b"")[:head_bytes],
-                    }
-                )
-                left -= 1
-                if left <= 0:
-                    break
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return pages.select("url", "html").mapInPandas(
-        kernel, schema="url string, error_class string, payload_head binary"
+    rank = F.row_number().over(Window.partitionBy("partition_id").orderBy("url"))
+    return (
+        extracted.filter(F.col("error_class").isNotNull())
+        .withColumn("_rank", rank)
+        .filter(F.col("_rank") <= max_per_bucket)
+        .select("url", "error_class", "payload_head")
     )
 
 
@@ -752,14 +734,14 @@ def _make_counting_kernel(metrics_acc):
 
         local: dict[int, list] = {}
         for out in extract_batches(batches):
-            for pid, nb, status, fu in zip(
+            for pid, nb, cls, fu in zip(
                 out["partition_id"].tolist(), out["n_bytes"].tolist(),
-                out["parse_status"].tolist(), out["font_unmapped"].tolist(),
+                out["error_class"].tolist(), out["font_unmapped"].tolist(),
             ):
                 cur = local.setdefault(pid, [0, 0, 0, 0])
                 cur[0] += 1
                 cur[1] += nb
-                cur[2] += status in FAILURE_STATUSES
+                cur[2] += cls is not None
                 cur[3] += fu
             yield out
         if local:

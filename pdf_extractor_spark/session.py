@@ -25,7 +25,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get("SPARK_MASTER", "local[%s]" % os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    master = master or os.environ.get("SPARK_MASTER", "local[%s]" % (os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()))
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SPARK_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
     )

@@ -28,19 +28,37 @@ def out_dirs(tmp_path_factory):
 
 
 def test_fidelity_byte_identity(spark):
-    """Pipeline output == oracle output, byte for byte, for every url."""
-    pages = pages_df(spark, N_DOCS, seed=SEED, num_partitions=4)
+    """Pipeline output == oracle output, byte for byte, for every url; a
+    failing document also carries the oracle's error class and its
+    payload's first 64 bytes (null for ok and empty documents)."""
+    from pdf_extractor_spark.synth import PAGES_SCHEMA_DDL
+
+    crafted = {
+        "https://x/logo.png": b"\x89PNG\r\n\x1a\n000",
+        "https://x/blob": b"bytes with \x00 NULs " * 60,
+    }
+    pages = pages_df(spark, N_DOCS, seed=SEED, num_partitions=4).unionByName(
+        spark.createDataFrame(
+            [(u, None, bytearray(b), "", "") for u, b in crafted.items()], PAGES_SCHEMA_DDL
+        )
+    )
     got = {
-        r.url: (r.extracted_text, r.parse_status)
+        r.url: (r.extracted_text, r.parse_status, r.error_class, r.payload_head)
         for r in run_kernel(pages).collect()
     }
-    assert len(got) == N_DOCS
-    for i in range(N_DOCS):
-        sr = synth_row(SEED, i)
-        res = extract_document(sr["html"])
-        text, status = got[sr["url"]]
-        assert status == res.parse_status, sr["url"]
-        assert text == res.extracted_text, sr["url"]
+    assert len(got) == N_DOCS + len(crafted)
+    payloads = {(sr := synth_row(SEED, i))["url"]: sr["html"] for i in range(N_DOCS)}
+    payloads.update(crafted)
+    classes = set()
+    for url, payload in payloads.items():
+        res = extract_document(payload)
+        text, status, error_class, head = got[url]
+        assert status == res.parse_status, url
+        assert text == res.extracted_text, url
+        assert error_class == res.error_class, url
+        assert head == (None if res.error_class is None else payload[:64]), url
+        classes.add(error_class)
+    assert classes == {None, "empty_payload", "binary_payload"}
 
 
 def test_end_to_end_with_control(spark, out_dirs):
@@ -268,22 +286,52 @@ def test_build_training_corpus(spark, tmp_path):
     )
 
 
-def test_dead_letter_sample(spark):
-    """The dead-letter sink captures every failing payload (cap permitting)
-    with a stable error class and payload head, never an ok document."""
-    from pdf_extractor_spark.pipeline import dead_letter_sample
+def test_dead_letter_sample(spark, tmp_path):
+    """The dead-letter sample over the written output holds every failing
+    document (cap permitting) with its error class and payload head, never
+    an ok one; the cap keeps the lowest urls of each bucket; and a bucket
+    written before the class columns existed still lets the others sample,
+    also after compaction."""
+    from pdf_extractor_spark.pipeline import OUTPUT_SCHEMA, compact_output, dead_letter_sample
 
     pages = pages_df(spark, 300, seed=SEED, num_partitions=2)
-    rows = dead_letter_sample(pages, max_per_partition=50).collect()
-    failed_urls = {
+    out = str(tmp_path / "out")
+    run_extraction(spark, pages, out, str(tmp_path / "ctl"), n_buckets=4)
+    rows = dead_letter_sample(spark.read.parquet(out), max_per_bucket=50).collect()
+    failed = {
         r["url"] for i in range(300) if (r := synth_row(SEED, i))["_kind"] == "failed"
     }
-    assert {r.url for r in rows} == failed_urls
-    assert all(r.error_class == "empty_payload" for r in rows)
+    assert {r.url for r in rows} == failed and len(rows) == len(failed)
+    assert all(r.error_class == "empty_payload" and r.payload_head == b"" for r in rows)
 
-    # cap bounds the sample per task
-    capped = dead_letter_sample(pages, max_per_partition=1).collect()
-    assert 1 <= len(capped) <= 2
+    # cap bounds the sample per bucket: at most n_buckets rows, the lowest
+    # failing url of each bucket
+    bucket_of = {
+        r.url: r.partition_id
+        for r in with_partition_id(pages, 4).filter(F.col("url").isin(sorted(failed))).collect()
+    }
+    capped = dead_letter_sample(spark.read.parquet(out), max_per_bucket=1).collect()
+    assert len(capped) <= 4
+    assert {r.url for r in capped} == {
+        min(u for u in failed if bucket_of[u] == b) for b in set(bucket_of.values())
+    }
+
+    # one bucket rewritten as an older kernel wrote it, without error_class
+    # and payload_head: read with OUTPUT_SCHEMA it samples as null
+    old = sorted(set(bucket_of.values()))[0]
+    old_dir = f"{out}/partition_id={old}"
+    spark.read.parquet(old_dir).drop("error_class", "payload_head").write.parquet(
+        str(tmp_path / "old_bucket")
+    )
+    shutil.rmtree(old_dir)
+    shutil.move(str(tmp_path / "old_bucket"), old_dir)
+    mixed = dead_letter_sample(spark.read.schema(OUTPUT_SCHEMA).parquet(out), 50).collect()
+    assert {r.url for r in mixed} == {u for u in failed if bucket_of[u] != old}
+    assert mixed
+    # compaction rewrites every bucket with the columns, the old one's null
+    compact_output(spark, out)
+    compacted = dead_letter_sample(spark.read.parquet(out), 50).collect()
+    assert sorted(compacted) == sorted(mixed)
 
     # taxonomy
     assert extract_document(b"\x89PNG\r\n\x1a\n").error_class == "binary_payload"
@@ -386,8 +434,9 @@ def test_default_buckets_refuse_unstamped_output(spark, tmp_path):
     """Output left without its control rows (a crash between write and
     commit, or a reused out_dir) cannot take the shuffle default: under a
     smaller count the dirs it does not reach would survive next to the
-    rewritten ones. The rerun refuses, and with the count given it
-    overwrites the output in place."""
+    rewritten ones. The rerun refuses, as does one given a smaller count,
+    and with the count it was written under it overwrites the output in
+    place."""
     import shutil
 
     from pdf_extractor_spark.control import BucketingMismatchError
@@ -403,6 +452,10 @@ def test_default_buckets_refuse_unstamped_output(spark, tmp_path):
 
     with pytest.raises(BucketingMismatchError, match="--n-buckets"):
         run_extraction(spark, pages, out, ctl, shuffle_partitions=8)
+    assert written() == (300, 300)
+    # an explicit smaller count would leave partition_id=8..15 beside it too
+    with pytest.raises(BucketingMismatchError, match="--n-buckets"):
+        run_extraction(spark, pages, out, ctl, n_buckets=8)
     assert written() == (300, 300)
     stats = run_extraction(spark, pages, out, ctl, n_buckets=16, shuffle_partitions=8)
     assert stats.docs_processed == 300
@@ -644,7 +697,7 @@ def test_encrypted_pdf_counts_as_parse_failure(spark, tmp_path):
     assert enc.parse_status == "encrypted" and enc.extracted_text == ""
     assert got["https://ok.example/a.html"].parse_status == "ok"
 
-    triage = {r.url: r.error_class for r in dead_letter_sample(pages).collect()}
+    triage = {r.url: r.error_class for r in dead_letter_sample(spark.read.parquet(out)).collect()}
     assert triage == {"https://enc.example/doc.pdf": "encrypted_pdf"}
 
 

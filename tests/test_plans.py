@@ -79,6 +79,27 @@ def test_kernel_runs_before_any_shuffle(spark, tmp_path):
     assert plan2.index("Exchange") < plan2.index("MapInPandas")
 
 
+def test_dead_letter_sample_is_a_jvm_filter(spark, tmp_path):
+    """The dead-letter sample over the read-back output reads the kernel's
+    error_class column: a filter and a per-bucket window over the scan, with
+    no Python node, so the kernel runs once per document. The scan skips
+    the text, and the cap applies on the map side before the one shuffle."""
+    from pdf_extractor_spark.pipeline import OUTPUT_SCHEMA, dead_letter_sample, run_extraction
+    from pdf_extractor_spark.synth import pages_df
+
+    out = str(tmp_path / "out")
+    run_extraction(spark, pages_df(spark, 50, num_partitions=1), out, str(tmp_path / "ctl"), 4)
+    plan = _plan(dead_letter_sample(spark.read.schema(OUTPUT_SCHEMA).parquet(out)))
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, plan
+    assert "FileScan parquet" in plan and "isnotnull(error_class" in plan, plan
+    assert "hashpartitioning(partition_id" in plan, plan
+    assert "extracted_text" not in plan, plan
+    # the per-bucket cap runs map-side too: the shuffle moves ≤ cap rows per
+    # bucket per task, not every failure
+    assert plan.index("Exchange") < plan.index("row_number(), 20, Partial"), plan
+
+
 def test_filter_pushdown_reaches_scan(spark):
     """A filtered parquet read must show PushedFilters on the scan node."""
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").filter(
