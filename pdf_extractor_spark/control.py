@@ -110,28 +110,29 @@ def append_commits_rows(rows, control_dir: str, n_buckets: int | None = None) ->
 
     `rows` is a driver-side list (≤ n_buckets entries, already collected) of
     objects with partition_id / docs_processed / bytes_parsed /
-    parse_failures. Written directly with pyarrow — a Spark job for a ≤64-row
-    append costs ~2 s of scheduler latency per run, which at bench scale is
-    pure fixed overhead. The file layout stays spark.read.parquet-compatible;
-    on a real cluster this append targets an Iceberg control table instead.
+    parse_failures. `control_dir` resolves through the same Hadoop FS that
+    committed_ids reads. On a local FS (a bare path, `file:/…` or
+    `file:///…`) the rows are written directly with pyarrow at the resolved
+    path — a Spark job for a ≤64-row append costs ~2 s of scheduler latency
+    per run, which at bench scale is pure fixed overhead. Any other FS
+    (hdfs://, s3a://, …) gets a Spark append, or the commit would land on
+    the driver's disk and resume would silently re-run everything. The file
+    layout stays spark.read.parquet-compatible; on a real cluster this
+    append targets an Iceberg control table instead.
     """
     import datetime as _dt
     import os
-    import re as _re
     import uuid
 
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql import SparkSession
 
-    # pyarrow writes through the LOCAL filesystem; a remote control_dir
-    # (hdfs://, s3a://, …) must go through Spark's Hadoop FS layer or the
-    # commit lands on the driver's disk and resume silently re-runs
-    # everything. file:// and bare paths stay on the fast local path.
-    scheme_m = _re.match(r"^[a-z0-9+.-]+://", control_dir, _re.IGNORECASE)
-    if scheme_m and not control_dir.lower().startswith("file://"):
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
+    now = _dt.datetime.now(_dt.timezone.utc)
+    spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
+    path = spark._jvm.org.apache.hadoop.fs.Path(control_dir)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.getUri().getScheme() != "file":
         (
             spark.createDataFrame(
                 [
@@ -142,7 +143,7 @@ def append_commits_rows(rows, control_dir: str, n_buckets: int | None = None) ->
                         int(r.bytes_parsed or 0),
                         int(r.parse_failures or 0),
                         int(getattr(r, "font_unmapped", 0) or 0),
-                        _dt.datetime.now(_dt.timezone.utc),
+                        now,
                         n_buckets,
                     )
                     for r in rows
@@ -155,7 +156,7 @@ def append_commits_rows(rows, control_dir: str, n_buckets: int | None = None) ->
         )
         return
 
-    now = _dt.datetime.now(_dt.timezone.utc)
+    local_dir = fs.makeQualified(path).toUri().getPath()
     table = pa.table(
         {
             "partition_id": pa.array([int(r.partition_id) for r in rows], pa.int32()),
@@ -170,5 +171,5 @@ def append_commits_rows(rows, control_dir: str, n_buckets: int | None = None) ->
             "n_buckets": pa.array([n_buckets] * len(rows), pa.int32()),
         }
     )
-    os.makedirs(control_dir, exist_ok=True)
-    pq.write_table(table, os.path.join(control_dir, f"commit-{uuid.uuid4().hex}.parquet"))
+    os.makedirs(local_dir, exist_ok=True)
+    pq.write_table(table, os.path.join(local_dir, f"commit-{uuid.uuid4().hex}.parquet"))

@@ -41,6 +41,8 @@ from hashlib import md5, sha256, sha384, sha512
 
 import numpy as np
 
+from pdf_extractor_spark.kernel.pdf_extract import _balanced_dict
+
 # Optional C-speed cipher backend. The from-scratch implementations below
 # are the reference semantics and the always-available fallback (this repo
 # must run from a bare pyspark image); when the `cryptography` wheel is
@@ -395,9 +397,9 @@ def _parse_pdf_string(tok: bytes) -> bytes | None:
             c = body[i : i + 1]
             if c == b"\\" and i + 1 < len(body):
                 nxt = body[i + 1 : i + 2]
-                if nxt.isdigit():  # \ddd octal, 1-3 digits
+                if b"0" <= nxt <= b"7":  # \ddd octal, 1-3 digits
                     j = i + 1
-                    while j < min(i + 4, len(body)) and body[j : j + 1].isdigit():
+                    while j < min(i + 4, len(body)) and b"0" <= body[j : j + 1] <= b"7":
                         j += 1
                     out.append(int(body[i + 1 : j], 8) & 0xFF)
                     i = j
@@ -546,40 +548,18 @@ class StandardCrypt:
         return iv + aes_cbc_encrypt(self._object_key(objnum, gen, b"sAlT"), iv, data)
 
 
-def _balanced_at(data: bytes, start: int) -> bytes | None:
-    """Inner bytes of the balanced '<< ... >>' opening at `start`."""
-    if data[start : start + 2] != b"<<":
-        return None
-    depth = 0
-    i = start
-    n = len(data)
-    while i < n - 1:
-        pair = data[i : i + 2]
-        if pair == b"<<":
-            depth += 1
-            i += 2
-        elif pair == b">>":
-            depth -= 1
-            if depth == 0:
-                return data[start + 2 : i]
-            i += 2
-        else:
-            i += 1
-    return None
-
-
 def _crypt_filter_method(head: bytes, name: bytes) -> bytes | None:
     """/CFM of the named crypt filter inside the /CF dictionary."""
     cm = re.search(rb"/CF\s*<<", head)
     if cm is None:
         return None
-    cf = _balanced_at(head, cm.end() - 2)
+    cf = _balanced_dict(head, cm.end() - 2)
     if cf is None:
         return None
     fm = re.search(rb"/" + re.escape(name) + rb"\s*<<", cf)
     if fm is None:
         return None
-    fdict = _balanced_at(cf, fm.end() - 2)
+    fdict = _balanced_dict(cf, fm.end() - 2)
     if fdict is None:
         return None
     mm = re.search(rb"/CFM\s*/(\w+)", fdict)

@@ -8,23 +8,28 @@ top of either source.
 
 Raw files:   `spark.read.format("binaryFile")` — Spark's built-in whole-file
              source; one row per file, content as binary, no Python I/O.
-WARC:        binaryFile over `*.warc` / `*.warc.gz` + an Arrow-vectorized
-             record parser (mapInPandas — same execution shape as the
-             extraction kernel). Handles WARC/1.0 response records, the
-             embedded HTTP response header block, and the Common-Crawl
-             member-gzip layout (each record its own gzip member,
-             concatenated).
+WARC:        binaryFile over `*.warc*` + an Arrow-vectorized record parser
+             (mapInPandas — same execution shape as the extraction
+             kernel). Handles WARC/1.0 response records, the embedded HTTP
+             response header block, and the Common-Crawl member-gzip layout
+             (each record its own gzip member, concatenated).
+
+One decoder, _iter_records, serves every reader (whole blob, byte range,
+stream). It sniffs the layout from the gzip magic at offset 0, so a plain
+archive named `*.warc.gz` or a member-gzip one named `*.warc` reads the
+same through every reader.
 
 Scale note: binaryFile assigns WHOLE files to tasks — parallelism equals
 file count, so WARC inputs should be the archive-standard ~100 MB-1 GB
 members (Common Crawl ships ~1 GB .warc.gz; a crawl segment has thousands
-of them → plenty of tasks). A single giant WARC would serialize; that is a
-property of the container, not this reader — re-shard upstream.
+of them → plenty of tasks). read_pages_warc_split lifts that bound for
+member-gzip archives; a plain archive is read whole by its first range.
 """
 
 from __future__ import annotations
 
 import gzip as _gzip
+import io
 import re
 import zlib
 from collections.abc import Iterator
@@ -113,6 +118,7 @@ def read_pages_binary(
 # --- WARC ------------------------------------------------------------------
 
 _GZIP_MAGIC = b"\x1f\x8b"
+_GZ_MEMBER_MAGIC = _GZIP_MAGIC + b"\x08"  # + deflate, the only real method
 _HDR_SPLIT = re.compile(rb"\r?\n\r?\n", re.DOTALL)
 _HDR_LINE = re.compile(rb"^([A-Za-z0-9\-]+):[ \t]*(.*?)\r?$", re.MULTILINE)
 _CHARSET_PARAM_RE = re.compile(
@@ -212,65 +218,145 @@ def _scan_records(buf: bytes, pos: int, final: bool) -> "tuple[list[dict], int]"
     return records, pos
 
 
-def iter_warc_records(raw: bytes) -> "Iterator[dict]":
-    """WARC/1.0 bytes → {url, warc_ts, html} generator for response records.
+def _validated_start(f, pos: int, end: int) -> int | None:
+    """First byte offset ≥ pos and < end of `f` that opens a REAL gzip
+    member. Candidates are found by scanning for the gzip magic and
+    VALIDATED — the decompressed stream must begin with 'WARC/' — so a
+    magic-looking byte sequence inside compressed data can never misalign
+    the member chain (it either fails to inflate or fails the WARC check)."""
+    f.seek(pos)
+    window = b""
+    wbase = pos
+    while True:
+        if len(window) < 4:
+            more = f.read(WARC_CHUNK_BYTES)
+            if not more:
+                return None
+            window += more
+        idx = window.find(_GZ_MEMBER_MAGIC)
+        if idx < 0:
+            if len(window) > 2:  # keep a 2-byte tail for a split magic
+                wbase += len(window) - 2
+                window = window[-2:]
+            if wbase >= end:
+                return None
+            continue
+        cand = wbase + idx
+        if cand >= end:
+            return None
+        # validate: inflate the head; real members open with 'WARC/' — the
+        # match is EXACT (a <5-byte prefix match would let a lucky in-member
+        # byte run masquerade as a boundary; a real member's first 512
+        # compressed bytes always inflate past 5 bytes, and one
+        # decompressing to less is not a record)
+        d = zlib.decompressobj(wbits=16 + zlib.MAX_WBITS)
+        f.seek(cand)
+        try:
+            head = d.decompress(f.read(512), 16)
+        except zlib.error:
+            head = b""
+        if head[:5] == b"WARC/":
+            return cand
+        wbase += idx + 3
+        window = window[idx + 3 :]
+        f.seek(wbase + len(window))
 
-    Bounded-memory: gzip archives (the Common-Crawl member-per-record
-    layout) decompress in WARC_CHUNK_BYTES chunks into a parse buffer that
-    is flushed as records complete — peak Python heap is ~(largest single
-    record + one chunk), not the whole decompressed archive (round-2
-    verdict "What's missing" #2). Records spanning gzip member boundaries
-    parse correctly (the buffer carries across members). Tolerates:
-    missing/short Content-Length (falls back to the next `WARC/` boundary),
-    an embedded HTTP response header block (stripped), non-response records
-    (skipped), and a truncated/corrupt trailing member (earlier records
-    survive; the remainder degrades to fewer records, never an error).
+
+def _iter_records(f, start: int = 0, end: int | None = None) -> "Iterator[dict]":
+    """The one WARC decoder: {url, warc_ts, html, charset} for the response
+    records of the archive in the seekable binary stream `f` that belong to
+    the byte range [start, end) (`end=None`: to the end of the stream).
+
+    The layout is sniffed from the 2-byte gzip magic at offset 0, never
+    taken from a file name:
+      * plain archive — not byte-splittable, so the range starting at 0
+        owns the whole archive and every other range yields nothing;
+      * member-gzip (the Common-Crawl member-per-record layout) — the range
+        owns the members STARTING in [start, end); a member may extend past
+        `end` (its owner reads it to completion), one starting before
+        `start` belongs to the previous range. A mid-file `start` is
+        aligned by _validated_start; from the first real member on,
+        boundaries come exactly from the decompressor's unused input.
+
+    Bounded memory: the archive streams through WARC_CHUNK_BYTES reads into
+    a parse buffer flushed as records complete — peak Python heap is
+    ~(largest single record + one chunk; up to twice the record for a
+    plain one longer than a chunk), not the decompressed archive (round-2
+    verdict "What's missing" #2). Records spanning gzip member
+    boundaries parse correctly (the buffer carries across members).
+    Tolerates missing/short Content-Length (falls back to the next `WARC/`
+    boundary), an embedded HTTP response header block (stripped),
+    non-response records (skipped), and a truncated/corrupt member (earlier
+    records survive; the archive ends there, never an error).
     """
-    if raw[:2] != _GZIP_MAGIC:
-        records, _ = _scan_records(raw, 0, final=True)
+    fsize = f.seek(0, 2)
+    end = fsize if end is None else min(end, fsize)
+    f.seek(0)
+    buf = b""
+    if f.read(2) != _GZIP_MAGIC:
+        if start != 0:
+            return
+        f.seek(0)
+        # a record longer than a chunk doubles the next read, so a record
+        # without a usable Content-Length is rescanned O(log n) times, not
+        # once per chunk
+        while chunk := f.read(max(WARC_CHUNK_BYTES, len(buf))):
+            buf += chunk
+            records, consumed = _scan_records(buf, 0, final=False)
+            yield from records
+            if consumed:
+                buf = buf[consumed:]
+        records, _ = _scan_records(buf, 0, final=True)
         yield from records
         return
 
-    # `pending` carries compressed bytes already sliced but not yet
-    # consumed (the decompressor's unused tail) into the NEXT member, so
-    # each input byte is sliced exactly once — per-member re-slicing from
-    # the member boundary would memcpy ~chunk/member_size× the archive
-    # (≈50× for Common-Crawl-sized members; round-3 review finding).
-    buf = b""
+    pos = 0 if start == 0 else _validated_start(f, start, end)
+    if pos is None:
+        return
+    # `pending` carries the decompressor's unused compressed tail into the
+    # next member — every byte is read once (a per-member seek+reread costs
+    # ~chunk/member_size× the range in I/O; round-3 review finding). The
+    # next member's ABSOLUTE offset is consumed_abs - len(pending), which
+    # drives the end-of-range ownership check.
     pending = b""
-    read_pos = 0
-    n = len(raw)
+    f.seek(pos)
+    consumed_abs = pos
     while True:
-        if len(pending) < 2 and read_pos < n:
-            take = raw[read_pos : read_pos + WARC_CHUNK_BYTES]
-            read_pos += len(take)
+        if consumed_abs - len(pending) >= end:
+            break  # next member starts in the following range
+        if len(pending) < 2:
+            take = f.read(WARC_CHUNK_BYTES)
+            consumed_abs += len(take)
             pending += take
         if pending[:2] != _GZIP_MAGIC:
-            break  # archive end or trailing non-member garbage
+            break  # archive end or trailing non-member bytes
         d = zlib.decompressobj(wbits=16 + zlib.MAX_WBITS)
         while not d.eof:
             if not pending:
-                pending = raw[read_pos : read_pos + WARC_CHUNK_BYTES]
-                read_pos += len(pending)
+                pending = f.read(WARC_CHUNK_BYTES)
+                consumed_abs += len(pending)
                 if not pending:
                     break
             try:
                 buf += d.decompress(pending)
             except zlib.error:
-                # corrupt member: everything buffered so far is final
-                records, _ = _scan_records(buf, 0, final=True)
-                yield from records
-                return
+                break  # corrupt member: everything buffered so far is final
             pending = b""
             records, consumed = _scan_records(buf, 0, final=False)
             yield from records
             if consumed:
                 buf = buf[consumed:]
         if not d.eof:
-            break  # archive ended mid-member (truncated)
+            break  # corrupt, or the archive ended mid-member (truncated)
         pending = d.unused_data
     records, _ = _scan_records(buf, 0, final=True)
     yield from records
+
+
+def iter_warc_records(raw: bytes) -> "Iterator[dict]":
+    """WARC/1.0 bytes (plain or member-gzip) → record generator
+    (_iter_records over the whole blob)."""
+    return _iter_records(io.BytesIO(raw))
 
 
 def parse_warc_records(raw: bytes) -> "list[dict]":
@@ -309,113 +395,11 @@ def read_pages_warc(spark: SparkSession, input_dir: str) -> DataFrame:
     return files.mapInPandas(parse_warc_blobs, schema=WARC_PAGES_SCHEMA_DDL)
 
 
-_GZ_MEMBER_MAGIC = b"\x1f\x8b\x08"  # gzip + deflate method (the only real one)
-
-
 def _iter_range_records(path: str, start: int, end: int) -> "Iterator[dict]":
-    """Yield response records from gzip members STARTING in [start, end) of
-    one member-gzip WARC archive — the per-split worker of the splittable
-    reader. A member may extend past `end` (its owner reads it to
-    completion); a member starting before `start` belongs to the previous
-    split. Memory is bounded exactly like iter_warc_records: one
-    decompression chunk + the incomplete-record buffer.
-
-    Alignment: at a mid-file split boundary the first member start is found
-    by scanning for the gzip magic and VALIDATING the candidate — the
-    decompressed stream must begin with 'WARC/' — so a magic-looking byte
-    sequence inside compressed data can never misalign the chain (it either
-    fails to inflate or fails the WARC check). From the first real member
-    on, boundaries come exactly from the decompressor's unused input, no
-    scanning.
-    """
+    """Records of the archive at `path` owned by the byte range [start,
+    end) — the per-split worker of the splittable reader (_iter_records)."""
     with open(path, "rb") as f:
-        fsize = f.seek(0, 2)
-        end = min(end, fsize)
-
-        def _validated_start(pos: int) -> int | None:
-            """First byte offset ≥ pos in [start, end) opening a REAL member."""
-            f.seek(pos)
-            window = b""
-            wbase = pos
-            while True:
-                if len(window) < 4:
-                    more = f.read(WARC_CHUNK_BYTES)
-                    if not more:
-                        return None
-                    window += more
-                idx = window.find(_GZ_MEMBER_MAGIC)
-                if idx < 0:
-                    if len(window) > 2:  # keep a 2-byte tail for a split magic
-                        wbase += len(window) - 2
-                        window = window[-2:]
-                    if wbase >= end:
-                        return None
-                    continue
-                cand = wbase + idx
-                if cand >= end:
-                    return None
-                # validate: inflate the head; real members open with 'WARC/'
-                # — the match is EXACT (a <5-byte prefix match would let a
-                # lucky in-member byte run masquerade as a boundary; a real
-                # member's first 512 compressed bytes always inflate past 5
-                # bytes, and one decompressing to less is not a record)
-                d = zlib.decompressobj(wbits=16 + zlib.MAX_WBITS)
-                f.seek(cand)
-                try:
-                    head = d.decompress(f.read(512), 16)
-                except zlib.error:
-                    head = b""
-                if head[:5] == b"WARC/":
-                    return cand
-                wbase += idx + 3
-                window = window[idx + 3 :]
-                f.seek(wbase + len(window))
-
-        pos = 0 if start == 0 else _validated_start(start)
-        if pos is None:
-            return
-        # `pending` carries the decompressor's unused compressed tail into
-        # the next member — every file byte is read once (a per-member
-        # seek+reread costs ~chunk/member_size× the range in I/O;
-        # round-3 review finding). The next member's ABSOLUTE offset is
-        # consumed_abs - len(pending), which drives the end-of-range
-        # ownership check.
-        buf = b""
-        pending = b""
-        f.seek(pos)
-        consumed_abs = pos
-        while True:
-            if consumed_abs - len(pending) >= end:
-                break  # next member starts in the following split
-            if len(pending) < 2:
-                take = f.read(WARC_CHUNK_BYTES)
-                consumed_abs += len(take)
-                pending += take
-            if pending[:2] != _GZIP_MAGIC:
-                break  # file end or non-member bytes
-            d = zlib.decompressobj(wbits=16 + zlib.MAX_WBITS)
-            while not d.eof:
-                if not pending:
-                    pending = f.read(WARC_CHUNK_BYTES)
-                    consumed_abs += len(pending)
-                    if not pending:
-                        break
-                try:
-                    buf += d.decompress(pending)
-                except zlib.error:
-                    records, _ = _scan_records(buf, 0, final=True)
-                    yield from records
-                    return
-                pending = b""
-                records, consumed = _scan_records(buf, 0, final=False)
-                yield from records
-                if consumed:
-                    buf = buf[consumed:]
-            if not d.eof:
-                break  # truncated trailing member
-            pending = d.unused_data
-        records, _ = _scan_records(buf, 0, final=True)
-        yield from records
+        yield from _iter_records(f, start, end)
 
 
 def read_pages_warc_split(
@@ -426,13 +410,14 @@ def read_pages_warc_split(
     reader: one giant archive serialized onto one task).
 
     The driver lists archives with sizes and fans out (path, start, end)
-    byte ranges; each task reads ONLY gzip members starting inside its
-    range (boundary-validated — see _iter_range_records), so every member
-    is owned by exactly one task and records never duplicate. Requires the
-    Common-Crawl member-per-record gzip layout for mid-file alignment;
-    plain .warc files get one whole-file range. Local/POSIX paths (a real
-    deployment lists via the Hadoop FS API or uses the crawl's cdx index
-    offsets — same ranges, same worker).
+    byte ranges for every archive, whatever its name; each task sniffs the
+    layout (_iter_records). Of a member-gzip archive it reads ONLY the
+    members starting inside its range (boundary-validated), so every member
+    is owned by exactly one task and records never duplicate. A plain
+    archive is not byte-splittable: its first range reads it whole and the
+    others return at once. Local/POSIX paths (a real deployment lists via
+    the Hadoop FS API or uses the crawl's cdx index offsets — same ranges,
+    same worker).
     """
     import os
 
@@ -454,13 +439,10 @@ def read_pages_warc_split(
                 continue
             p = os.path.join(root, name)
             size = os.path.getsize(p)
-            if name.lower().endswith(".gz"):
-                ranges.extend(
-                    (p, off, min(off + split_bytes, size))
-                    for off in range(0, max(size, 1), split_bytes)
-                )
-            else:
-                ranges.append((p, 0, size))
+            ranges.extend(
+                (p, off, min(off + split_bytes, size))
+                for off in range(0, max(size, 1), split_bytes)
+            )
     if not ranges:
         return spark.createDataFrame([], WARC_PAGES_SCHEMA_DDL)
 
@@ -471,34 +453,9 @@ def read_pages_warc_split(
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for path, s, e in zip(pdf["path"], pdf["start"], pdf["end"]):
-                it = (
-                    _iter_range_records(path, int(s), int(e))
-                    if path.lower().endswith(".gz")
-                    else _iter_plain_file_records(path)
-                )
-                yield from _pages_frames(it)
+                yield from _pages_frames(_iter_range_records(path, int(s), int(e)))
 
     return rdf.mapInPandas(parse, schema=WARC_PAGES_SCHEMA_DDL)
-
-
-def _iter_plain_file_records(path: str) -> "Iterator[dict]":
-    """Uncompressed .warc file → records with bounded memory (chunked reads
-    through the incremental scanner; the file handle is closed — the old
-    whole-file `open(...).read()` both leaked the fd and materialized the
-    archive; round-3 review finding)."""
-    with open(path, "rb") as f:
-        buf = b""
-        while True:
-            chunk = f.read(WARC_CHUNK_BYTES)
-            if not chunk:
-                break
-            buf += chunk
-            records, consumed = _scan_records(buf, 0, final=False)
-            yield from records
-            if consumed:
-                buf = buf[consumed:]
-        records, _ = _scan_records(buf, 0, final=True)
-        yield from records
 
 
 def export_pages_warc(

@@ -127,6 +127,30 @@ def test_encrypted_tounicode_stream_decrypts():
     assert got.extracted_text == "café"
 
 
+def test_literal_string_octal_escapes():
+    """An octal escape takes 1-3 digits of [0-7] only: a short escape may be
+    followed by a literal 8 or 9, and a backslash before a non-octal digit
+    is dropped (ISO 32000-1 §7.3.4.2)."""
+    assert pdf_crypt._parse_pdf_string(rb"(\9)") == b"9"
+    assert pdf_crypt._parse_pdf_string(rb"(\08)") == b"\x008"
+    assert pdf_crypt._parse_pdf_string(rb"(\1010)") == b"A0"
+
+
+def test_literal_id_with_short_octal_escape_decrypts():
+    """A trailer /ID written as a literal string whose short octal escape is
+    followed by a digit 8 keys the decryption like its hex form."""
+    from pdf_extractor_spark.synth import encrypt_pdf
+
+    id0 = b"\x008ABCDEFGHIJKLMN"
+    enc = encrypt_pdf(_mini_pdf(), "rc4-r3", id0=id0)
+    hex_id = b"<" + id0.hex().encode() + b">"
+    assert enc.count(hex_id) == 2
+    enc = enc.replace(hex_id, rb"(\08ABCDEFGHIJKLMN)")
+    got = extract_document(enc)
+    assert got.parse_status == "ok", got.error_class
+    assert got.extracted_text == extract_document(_mini_pdf()).extracted_text
+
+
 # --- AES modes (V4 /AESV2, V5 /AESV3) ---------------------------------------
 
 

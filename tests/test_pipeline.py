@@ -462,6 +462,18 @@ def test_default_buckets_refuse_unstamped_output(spark, tmp_path):
     assert written() == (300, 300)
 
 
+def test_file_uri_control_dir_commits(spark, tmp_path, monkeypatch):
+    """A `file://` control dir resolves through the Hadoop FS: the commit
+    lands at the real path (the rerun resumes it), not under a `file:`
+    directory beside the working directory."""
+    monkeypatch.chdir(tmp_path)
+    out, ctl = str(tmp_path / "out"), "file://" + str(tmp_path / "ctl")
+    pages = pages_df(spark, 40, seed=SEED, num_partitions=1)
+    assert run_extraction(spark, pages, out, ctl, n_buckets=4).docs_processed == 40
+    assert run_extraction(spark, pages, out, ctl, n_buckets=4).docs_processed == 0
+    assert not (tmp_path / "file:").exists()
+
+
 def _jobs_in(spark, group, fn):
     """(fn(), number of Spark jobs fn launched)."""
     sc = spark.sparkContext

@@ -336,17 +336,23 @@ def test_warc_split_reader_matches_unsplit(spark, tmp_path):
 
     d = tmp_path / "warc"
     d.mkdir()
-    rows = _synth_rows(150)
+    rows = _synth_rows(190)
     write_warc(rows[:70], str(d / "a.warc.gz"), gzip_members=True)
     write_warc(rows[70:120], str(d / "b.warc.gz"), gzip_members=True)
-    # plain (non-gzip) archive: not byte-splittable → one whole-file range
-    write_warc(rows[120:], str(d / "c.warc"))
+    # plain (non-gzip) archive: not byte-splittable → its first range reads
+    # it whole
+    write_warc(rows[120:150], str(d / "c.warc"))
+    # misnamed archives: the layout is sniffed, never taken from the name
+    write_warc(rows[150:170], str(d / "d.warc.gz"))
+    write_warc(rows[170:], str(d / "e.warc"), gzip_members=True)
 
     got = {
         r.url: (bytes(r.html), r.warc_ts)
         for r in read_pages_warc_split(spark, str(d), split_bytes=1500).collect()
     }
-    assert len(got) == 150
+    assert len(got) == 190
+    unsplit = {r.url: (bytes(r.html), r.warc_ts) for r in read_pages_warc(spark, str(d)).collect()}
+    assert got == unsplit
     for r in rows:
         html, ts = got[r["url"]]
         assert html == r["html"]
@@ -515,16 +521,17 @@ def test_warc_job_end_to_end(spark, tmp_path):
     assert out.select("url").distinct().count() == 60
 
 
-def test_warc_scanner_mutation_fuzz_bounded():
+def test_warc_scanner_mutation_fuzz_bounded(tmp_path):
     """Byte-flip mutation fuzz over a realistic multi-record archive
     (plain + member-gzip): every mutation must scan to completion in
     bounded time without raising — the scanner's contract is fewer/
     degraded records, never a wedged task (the round-3 negative-length
-    busy-loop is this class)."""
+    busy-loop is this class). Each mutated member-gzip archive also goes
+    through the byte-range reader over a small split grid."""
     import datetime as dt
     import time
 
-    from pdf_extractor_spark.sources import parse_warc_records
+    from pdf_extractor_spark.sources import _iter_range_records, parse_warc_records
 
     rows = [
         {
@@ -536,6 +543,7 @@ def test_warc_scanner_mutation_fuzz_bounded():
     ]
     from pdf_extractor_spark.sources import encode_warc_record
 
+    p = tmp_path / "mutated.warc.gz"
     for gz in (False, True):
         raw = b"".join(
             encode_warc_record(r["url"], r["warc_ts"], r["html"], gz) for r in rows
@@ -552,3 +560,47 @@ def test_warc_scanner_mutation_fuzz_bounded():
             assert len(recs) <= len(rows) + 1  # never invents extra records
             for r in recs:
                 assert isinstance(r["url"], str)
+            if not gz:
+                continue
+            # the byte-range path over the same damage: mid-file alignment
+            # and member ownership must degrade the same way
+            p.write_bytes(mutated)
+            for sb in (97, 400, len(mutated)):
+                t0 = time.perf_counter()
+                n = sum(
+                    1
+                    for s in range(0, len(mutated), sb)
+                    for _ in _iter_range_records(str(p), s, min(s + sb, len(mutated)))
+                )
+                dt_s = time.perf_counter() - t0
+                assert dt_s < 5.0, (off, sb, dt_s)
+                assert n <= len(rows) + 1, (off, sb, n)
+
+
+def test_plain_record_without_length_scans_linearly(monkeypatch, tmp_path):
+    """A plain-archive record with no Content-Length is only complete at
+    the next `WARC/` boundary. It may span many chunks; each refill must
+    not rescan the whole buffer, or a long record costs
+    O(size² / chunk)."""
+    import time
+
+    from pdf_extractor_spark import sources as src
+
+    monkeypatch.setattr(src, "WARC_CHUNK_BYTES", 1024)
+    body = b"<p>no length</p>" * (1 << 19)  # 8 MiB, 8,192 chunks
+    raw = (
+        b"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: https://t/long\r\n"
+        b"\r\n" + body + b"\r\n\r\n"
+        + src.encode_warc_record("https://t/next", "2024-01-02T03:04:05Z", b"tail")
+    )
+    p = tmp_path / "long.warc"
+    p.write_bytes(raw)
+    for read in (
+        lambda: src.parse_warc_records(raw),
+        lambda: list(src._iter_range_records(str(p), 0, len(raw))),
+    ):
+        t0 = time.perf_counter()
+        recs = read()
+        assert time.perf_counter() - t0 < 2.0
+        assert [r["url"] for r in recs] == ["https://t/long", "https://t/next"]
+        assert recs[0]["html"] == body
