@@ -37,11 +37,13 @@ def main(argv: list[str] | None = None) -> int:
     src.add_argument("--input-files", metavar="DIR",
                      help="raw .html/.pdf files on disk (binaryFile source, recursive)")
     src.add_argument("--input-warc", metavar="DIR",
-                     help="WARC archives (*.warc / *.warc.gz, Common-Crawl layout)")
+                     help="WARC archives (plain or Common-Crawl member-gzip; every "
+                          "non-hidden file with .warc in its name, any case), a "
+                          "path or a Hadoop URI, read in byte ranges")
     p.add_argument("--warc-split-mb", type=int, default=None, metavar="MB",
-                   help="with --input-warc: read archives in MB-sized byte ranges "
-                        "(splittable member-gzip reader; parallelism = bytes/split "
-                        "instead of archive count)")
+                   help="with --input-warc: byte-range size in MB (default 128); "
+                        "parallelism = archive bytes / range size, not archive "
+                        "count")
     src.add_argument("--synth", type=int, metavar="N", help="synthesize N deterministic pages instead")
     p.add_argument("--seed", type=int, default=42, help="synthesizer seed (with --synth)")
     p.add_argument("--output", required=True, help="output parquet dir (partitioned by partition_id)")
@@ -138,6 +140,9 @@ def main(argv: list[str] | None = None) -> int:
     from pdf_extractor_spark.synth import pages_df
 
     spark = get_spark(app_name="extract_job", master=args.master)
+    # the Python workers import the package too: without --py-files they
+    # find it only through PYTHONPATH, which Spark merges into theirs
+    spark.sparkContext.environment["PYTHONPATH"] = _REPO_ROOT
     # under spark-submit the driver JVM already exists, so the session
     # builder's spark.driver.memory cannot apply — and local[*] runs
     # EVERYTHING in that one JVM. The stock 1g default OOMs large runs
@@ -166,16 +171,10 @@ def main(argv: list[str] | None = None) -> int:
 
         pages = read_pages_binary(spark, args.input_files)
     elif args.input_warc:
-        if args.warc_split_mb is not None:
-            from pdf_extractor_spark.sources import read_pages_warc_split
+        from pdf_extractor_spark.sources import read_pages_warc
 
-            pages = read_pages_warc_split(
-                spark, args.input_warc, split_bytes=args.warc_split_mb << 20
-            )
-        else:
-            from pdf_extractor_spark.sources import read_pages_warc
-
-            pages = read_pages_warc(spark, args.input_warc)
+        split = {} if args.warc_split_mb is None else {"split_bytes": args.warc_split_mb << 20}
+        pages = read_pages_warc(spark, args.input_warc, **split)
     else:
         pages = pages_df(spark, args.synth, seed=args.seed)
 

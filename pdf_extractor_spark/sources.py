@@ -8,26 +8,23 @@ top of either source.
 
 Raw files:   `spark.read.format("binaryFile")` — Spark's built-in whole-file
              source; one row per file, content as binary, no Python I/O.
-WARC:        binaryFile over `*.warc*` + an Arrow-vectorized record parser
-             (mapInPandas — same execution shape as the extraction
-             kernel). Handles WARC/1.0 response records, the embedded HTTP
-             response header block, and the Common-Crawl member-gzip layout
-             (each record its own gzip member, concatenated).
+WARC:        byte ranges of every archive whose name matches WARC_GLOB,
+             listed through the Hadoop FS and decoded by an Arrow-vectorized
+             record parser (mapInPandas — same execution shape as the
+             extraction kernel). Handles WARC/1.0 response records, the
+             embedded HTTP response header block, and the Common-Crawl
+             member-gzip layout (each record its own gzip member,
+             concatenated).
 
-One decoder, _iter_records, serves every reader (whole blob, byte range,
-stream). It sniffs the layout from the gzip magic at offset 0, so a plain
-archive named `*.warc.gz` or a member-gzip one named `*.warc` reads the
-same through every reader.
-
-Scale note: binaryFile assigns WHOLE files to tasks — parallelism equals
-file count, so WARC inputs should be the archive-standard ~100 MB-1 GB
-members (Common Crawl ships ~1 GB .warc.gz; a crawl segment has thousands
-of them → plenty of tasks). read_pages_warc_split lifts that bound for
-member-gzip archives; a plain archive is read whole by its first range.
+One decoder, _iter_records, serves both the batch reader (byte ranges)
+and the stream (whole blobs). It sniffs the layout from the gzip magic at
+offset 0, so a plain archive named `*.warc.gz` or a member-gzip one named
+`*.warc` reads the same through every reader.
 """
 
 from __future__ import annotations
 
+import fnmatch
 import gzip as _gzip
 import io
 import re
@@ -117,6 +114,11 @@ def read_pages_binary(
 
 # --- WARC ------------------------------------------------------------------
 
+# the one archive-name rule of every WARC reader: `.warc` anywhere in the
+# name, any case (a Hadoop pathGlobFilter for the stream, fnmatchcase for
+# the batch listing; both also skip `_`/`.` hidden names)
+WARC_GLOB = "*.[wW][aA][rR][cC]*"
+
 _GZIP_MAGIC = b"\x1f\x8b"
 _GZ_MEMBER_MAGIC = _GZIP_MAGIC + b"\x08"  # + deflate, the only real method
 _HDR_SPLIT = re.compile(rb"\r?\n\r?\n", re.DOTALL)
@@ -133,7 +135,7 @@ _CHARSET_PARAM_RE = re.compile(
 WARC_CHUNK_BYTES = 1 << 20
 
 
-def _scan_records(buf: bytes, pos: int, final: bool) -> "tuple[list[dict], int]":
+def _scan_records(buf: "bytes | bytearray", pos: int, final: bool) -> "tuple[list[dict], int]":
     """Parse COMPLETE records from buf[pos:]. Returns (records, consumed).
 
     Incremental core shared by the streaming and one-shot parsers: a record
@@ -192,7 +194,7 @@ def _scan_records(buf: bytes, pos: int, final: bool) -> "tuple[list[dict], int]"
                 body_end = n
             else:
                 body_end = nxt
-        body = buf[body_start:body_end]
+        body = memoryview(buf)[body_start:body_end]  # copied once, if kept
         pos = body_end
         if headers.get(b"warc-type", b"").lower() != b"response":
             continue
@@ -204,7 +206,7 @@ def _scan_records(buf: bytes, pos: int, final: bool) -> "tuple[list[dict], int]"
         # HTTP header and the page's meta tag often enough to matter for
         # byte fidelity (the header wins below the BOM, per WHATWG).
         charset = ""
-        if body[:5] in (b"HTTP/",):
+        if body[:5] == b"HTTP/":
             m = _HDR_SPLIT.search(body)
             if m is not None:
                 cm = _CHARSET_PARAM_RE.search(body[: m.start()])
@@ -213,7 +215,7 @@ def _scan_records(buf: bytes, pos: int, final: bool) -> "tuple[list[dict], int]"
                 body = body[m.end() :]
         if url:
             records.append(
-                {"url": url, "warc_ts": ts, "html": body, "charset": charset}
+                {"url": url, "warc_ts": ts, "html": bytes(body), "charset": charset}
             )
     return records, pos
 
@@ -280,34 +282,41 @@ def _iter_records(f, start: int = 0, end: int | None = None) -> "Iterator[dict]"
 
     Bounded memory: the archive streams through WARC_CHUNK_BYTES reads into
     a parse buffer flushed as records complete — peak Python heap is
-    ~(largest single record + one chunk; up to twice the record for a
-    plain one longer than a chunk), not the decompressed archive (round-2
-    verdict "What's missing" #2). Records spanning gzip member
-    boundaries parse correctly (the buffer carries across members).
+    ~(largest single record + one chunk; up to twice the record when it is
+    longer than a chunk), not the decompressed archive (round-2 verdict
+    "What's missing" #2). The buffer is rescanned only once it has doubled
+    since the last scan, so a record without a usable Content-Length that
+    spans many chunks costs O(log n) scans, not one per chunk. Records
+    spanning gzip member boundaries parse correctly (the buffer carries
+    across members).
     Tolerates missing/short Content-Length (falls back to the next `WARC/`
     boundary), an embedded HTTP response header block (stripped),
     non-response records (skipped), and a truncated/corrupt member (earlier
     records survive; the archive ends there, never an error).
     """
+    buf = bytearray()
+    scanned = 0
+    for data in _owned_bytes(f, start, end):
+        buf += data
+        if len(buf) < 2 * scanned:
+            continue
+        records, consumed = _scan_records(buf, 0, final=False)
+        yield from records
+        del buf[:consumed]
+        scanned = len(buf)
+    yield from _scan_records(buf, 0, final=True)[0]
+
+
+def _owned_bytes(f, start: int, end: int | None) -> "Iterator[bytes]":
+    """The decoded bytes of the records _iter_records(f, start, end) owns,
+    in pieces, from reads of WARC_CHUNK_BYTES."""
     fsize = f.seek(0, 2)
     end = fsize if end is None else min(end, fsize)
     f.seek(0)
-    buf = b""
     if f.read(2) != _GZIP_MAGIC:
-        if start != 0:
-            return
-        f.seek(0)
-        # a record longer than a chunk doubles the next read, so a record
-        # without a usable Content-Length is rescanned O(log n) times, not
-        # once per chunk
-        while chunk := f.read(max(WARC_CHUNK_BYTES, len(buf))):
-            buf += chunk
-            records, consumed = _scan_records(buf, 0, final=False)
-            yield from records
-            if consumed:
-                buf = buf[consumed:]
-        records, _ = _scan_records(buf, 0, final=True)
-        yield from records
+        if start == 0:
+            f.seek(0)
+            yield from iter(lambda: f.read(WARC_CHUNK_BYTES), b"")
         return
 
     pos = 0 if start == 0 else _validated_start(f, start, end)
@@ -318,39 +327,32 @@ def _iter_records(f, start: int = 0, end: int | None = None) -> "Iterator[dict]"
     # ~chunk/member_size× the range in I/O; round-3 review finding). The
     # next member's ABSOLUTE offset is consumed_abs - len(pending), which
     # drives the end-of-range ownership check.
-    pending = b""
+    pending = memoryview(b"")
     f.seek(pos)
     consumed_abs = pos
-    while True:
-        if consumed_abs - len(pending) >= end:
-            break  # next member starts in the following range
+    while consumed_abs - len(pending) < end:  # else: the next range's member
         if len(pending) < 2:
             take = f.read(WARC_CHUNK_BYTES)
             consumed_abs += len(take)
-            pending += take
+            pending = memoryview(bytes(pending) + take)
         if pending[:2] != _GZIP_MAGIC:
-            break  # archive end or trailing non-member bytes
+            return  # archive end or trailing non-member bytes
         d = zlib.decompressobj(wbits=16 + zlib.MAX_WBITS)
         while not d.eof:
             if not pending:
-                pending = f.read(WARC_CHUNK_BYTES)
+                pending = memoryview(f.read(WARC_CHUNK_BYTES))
                 consumed_abs += len(pending)
                 if not pending:
-                    break
+                    return  # the archive ended mid-member (truncated)
+            # at a member's end zlib copies the rest of its input to
+            # unused_data: feeding 64 KiB views instead of the whole chunk
+            # keeps that copy from costing a chunk per member
+            feed = pending[: 1 << 16]
             try:
-                buf += d.decompress(pending)
+                yield d.decompress(feed)
             except zlib.error:
-                break  # corrupt member: everything buffered so far is final
-            pending = b""
-            records, consumed = _scan_records(buf, 0, final=False)
-            yield from records
-            if consumed:
-                buf = buf[consumed:]
-        if not d.eof:
-            break  # corrupt, or the archive ended mid-member (truncated)
-        pending = d.unused_data
-    records, _ = _scan_records(buf, 0, final=True)
-    yield from records
+                return  # corrupt member: everything decoded so far is final
+            pending = pending[len(feed) - len(d.unused_data) :]
 
 
 def iter_warc_records(raw: bytes) -> "Iterator[dict]":
@@ -368,92 +370,84 @@ def parse_warc_records(raw: bytes) -> "list[dict]":
 
 def parse_warc_blobs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas parser: binaryFile `content` batches → pages frames
-    (WARC_PAGES_SCHEMA_DDL). The raw .gz blob itself is still one
-    binaryFile row — that bound is the archive size on disk, set upstream
-    by the crawl's sharding; read_pages_warc_split removes even that
-    bound."""
+    (WARC_PAGES_SCHEMA_DDL). Each archive is one binaryFile row, so this is
+    for the stream (streaming.stream_extract_warc), which cannot read byte
+    ranges; batch reads go through read_pages_warc."""
     for pdf in batches:
         for blob in pdf["content"]:
             yield from _pages_frames(iter_warc_records(bytes(blob)))
 
 
-def read_pages_warc(spark: SparkSession, input_dir: str) -> DataFrame:
-    """WARC archives → pages table.
+def _iter_range_records(uri: str, start: int, end: int) -> "Iterator[dict]":
+    """Records of the archive at `uri` (a path or a URI pyarrow.fs opens)
+    owned by the byte range [start, end) — the per-range worker of
+    read_pages_warc (_iter_records)."""
+    from pyarrow import fs
 
-    binaryFile lists the archives (one task per file — see module scale
-    note), then an Arrow mapInPandas parses records; only (url, ts, payload)
-    leave the parser, and the pages schema matches the parquet source so
-    every downstream stage is identical.
-    """
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc*")
-        .option("recursiveFileLookup", "true")
-        .load(input_dir)
-        .select("content")
-    )
-    return files.mapInPandas(parse_warc_blobs, schema=WARC_PAGES_SCHEMA_DDL)
-
-
-def _iter_range_records(path: str, start: int, end: int) -> "Iterator[dict]":
-    """Records of the archive at `path` owned by the byte range [start,
-    end) — the per-split worker of the splittable reader (_iter_records)."""
-    with open(path, "rb") as f:
+    filesystem, path = fs.FileSystem.from_uri(uri)
+    with filesystem.open_input_file(path) as f:
         yield from _iter_records(f, start, end)
 
 
-def read_pages_warc_split(
+def read_pages_warc(
     spark: SparkSession, input_dir: str, split_bytes: int = 128 << 20
 ) -> DataFrame:
-    """Splittable WARC source: parallelism = total bytes / split_bytes, not
-    archive count (the r2 scale note's documented limit of the binaryFile
-    reader: one giant archive serialized onto one task).
+    """WARC archives → pages table, read in byte ranges: parallelism =
+    total bytes / split_bytes, not archive count.
 
-    The driver lists archives with sizes and fans out (path, start, end)
-    byte ranges for every archive, whatever its name; each task sniffs the
-    layout (_iter_records). Of a member-gzip archive it reads ONLY the
-    members starting inside its range (boundary-validated), so every member
-    is owned by exactly one task and records never duplicate. A plain
-    archive is not byte-splittable: its first range reads it whole and the
-    others return at once. Local/POSIX paths (a real deployment lists via
-    the Hadoop FS API or uses the crawl's cdx index offsets — same ranges,
-    same worker).
+    The driver lists `input_dir` (a path or any Hadoop URI) recursively
+    through the Hadoop FS and keeps every file whose name matches WARC_GLOB
+    and neither it nor a directory below `input_dir` starts with `_` or `.`
+    (Spark's hidden-path rule, which the stream's file index applies too:
+    an orphaned `_tmp-*-attempt*.warc.gz` left by a hard-killed export task
+    or a committer's `_temporary/` dir is never double-counted). Each archive fans out into (uri, start, end)
+    ranges, whatever its name; each task opens its range's qualified URI
+    through pyarrow.fs (local paths and `file:`; HDFS where libhdfs is
+    present; a scheme pyarrow cannot open, e.g. `s3a://`, fails the task)
+    and sniffs the layout (_iter_records). Of a member-gzip archive it
+    reads ONLY the members starting inside its range (boundary-validated),
+    so every member is owned by exactly one task and records never
+    duplicate. A plain archive is not byte-splittable: its first range
+    reads it whole and the others return at once. Only (url, ts, payload,
+    charset) leave the parser, and the pages schema matches the parquet
+    source so every downstream stage is identical.
     """
-    import os
-
     if split_bytes <= 0:
         # range(0, n, negative) is silently empty — every archive would be
         # dropped without an error (round-3 review)
         raise ValueError(f"split_bytes must be positive, got {split_bytes}")
 
+    root = spark._jvm.org.apache.hadoop.fs.Path(input_dir)
+    hfs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    root_len = len(hfs.makeQualified(root).toUri().getPath())
+    files = hfs.listFiles(root, True)
     ranges: list[tuple[str, int, int]] = []
-    for root, _dirs, names in os.walk(input_dir):
-        for name in sorted(names):
-            if ".warc" not in name.lower():
-                continue
-            if name.startswith(("_", ".")):
-                # Spark's binaryFile reader skips hidden files; without the
-                # same rule here the split reader would double-count an
-                # orphaned `_tmp-*-attempt*.warc.gz` left by a hard-killed
-                # export task (round-3 ADVICE)
-                continue
-            p = os.path.join(root, name)
-            size = os.path.getsize(p)
-            ranges.extend(
-                (p, off, min(off + split_bytes, size))
-                for off in range(0, max(size, 1), split_bytes)
-            )
+    while files.hasNext():
+        status = files.next()
+        path = status.getPath()
+        name = path.getName()
+        # hidden like Spark's file index: the name or any dir below the root
+        dirs = path.toUri().getPath()[root_len:].split("/")[:-1]
+        if any(p.startswith(("_", ".")) for p in [*dirs, name]):
+            continue
+        if not fnmatch.fnmatchcase(name, WARC_GLOB):
+            continue
+        uri, size = path.toUri().toString(), status.getLen()
+        ranges.extend(
+            (uri, off, min(off + split_bytes, size))
+            for off in range(0, max(size, 1), split_bytes)
+        )
     if not ranges:
         return spark.createDataFrame([], WARC_PAGES_SCHEMA_DDL)
 
     rdf = spark.createDataFrame(
-        ranges, "path string, start long, end long"
+        sorted(ranges), "uri string, start long, end long"
     ).repartition(len(ranges))
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for path, s, e in zip(pdf["path"], pdf["start"], pdf["end"]):
-                yield from _pages_frames(_iter_range_records(path, int(s), int(e)))
+            for uri, s, e in zip(pdf["uri"], pdf["start"], pdf["end"]):
+                yield from _pages_frames(_iter_range_records(uri, int(s), int(e)))
 
     return rdf.mapInPandas(parse, schema=WARC_PAGES_SCHEMA_DDL)
 

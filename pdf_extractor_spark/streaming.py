@@ -95,12 +95,12 @@ def stream_extract_warc(
     drains what exists, then stops; rerunning with the same checkpoint
     processes only new archives.
     """
-    from pdf_extractor_spark.sources import WARC_PAGES_SCHEMA_DDL, parse_warc_blobs
+    from pdf_extractor_spark.sources import WARC_GLOB, WARC_PAGES_SCHEMA_DDL, parse_warc_blobs
 
     reader = (
         spark.readStream.format("binaryFile")
         .schema(_BINARYFILE_DDL)
-        .option("pathGlobFilter", "*.warc*")
+        .option("pathGlobFilter", WARC_GLOB)
         .option("recursiveFileLookup", "true")
     )
     if max_files_per_trigger:

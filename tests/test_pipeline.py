@@ -946,6 +946,27 @@ def test_job_rejects_corpus_flags_without_corpus_out(tmp_path, capsys):
     assert not (tmp_path / "out").exists()
 
 
+def test_job_runs_from_outside_the_repo(tmp_path):
+    """spark-submit job.py from a cwd outside the repo, without --py-files
+    or PYTHONPATH: the Python workers must import the package as the driver
+    does (they used to fail every task with ModuleNotFoundError)."""
+    import json
+    import os
+    import subprocess
+
+    from pdf_extractor_spark import job
+
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    res = subprocess.run(
+        ["spark-submit", "--master", "local[2]", job.__file__, "--synth", "20",
+         "--output", str(tmp_path / "out"), "--control", str(tmp_path / "ctl"),
+         "--n-buckets", "4"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    assert json.loads(res.stdout.splitlines()[-1])["docs_processed"] == 20
+
+
 def test_build_training_corpus_temperature_lang(spark, tmp_path):
     """--temperature-lang corpus mode: the rarest language is kept in
     full, the head language is downsampled by the deterministic md5(url)

@@ -284,14 +284,14 @@ def test_multiband_near_dup_joins_on_band_and_bucket(spark):
 def test_split_warc_reader_parallelism_is_range_count(spark, tmp_path):
     """The splittable WARC source must expose one task per byte range —
     parallelism decoupled from archive count (ONE archive, many ranges)."""
-    from pdf_extractor_spark.sources import read_pages_warc_split, write_warc
+    from pdf_extractor_spark.sources import read_pages_warc, write_warc
     from pdf_extractor_spark.synth import synth_row
 
     d = tmp_path / "warc"
     d.mkdir()
     rows = [synth_row(42, i) for i in range(200)]
     write_warc(rows, str(d / "one-big.warc.gz"), gzip_members=True)
-    df = read_pages_warc_split(spark, str(d), split_bytes=20_000)
+    df = read_pages_warc(spark, str(d), split_bytes=20_000)
     assert df.rdd.getNumPartitions() > 4  # one archive, many byte ranges
     assert df.count() == 200
 

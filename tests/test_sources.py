@@ -7,6 +7,7 @@ import os
 from pdf_extractor_spark.kernel import extract_document
 from pdf_extractor_spark.kernel.spark_kernel import run_kernel
 from pdf_extractor_spark.sources import (
+    _warc_ts,
     parse_warc_records,
     read_pages_binary,
     read_pages_warc,
@@ -126,20 +127,21 @@ def test_warc_negative_content_length():
 
 
 def test_warc_split_reader_skips_hidden_files(spark, tmp_path):
-    """The os.walk listing must follow Spark's hidden-file convention
-    (skip `_`/`.` basenames) so an orphaned `_tmp-*-attempt*.warc.gz` from
-    a hard-killed export task is never double-counted (round-3 ADVICE)."""
-    from pdf_extractor_spark.sources import read_pages_warc_split
-
+    """The Hadoop FS listing must follow Spark's hidden-path convention
+    (skip `_`/`.` basenames and everything under a `_`/`.` dir) so an
+    orphaned `_tmp-*-attempt*.warc.gz` from a hard-killed export task, or
+    a committer's `_temporary/` staging dir, is never double-counted
+    (round-3 ADVICE)."""
     d = tmp_path / "warc"
-    d.mkdir()
+    (d / "_temporary" / "0").mkdir(parents=True)
     rows = _synth_rows(30)
     write_warc(rows[:20], str(d / "a.warc.gz"), gzip_members=True)
     # orphaned temp + hidden file carrying the OTHER rows: must be invisible
     write_warc(rows[20:], str(d / "_tmp-part-0-attempt0.warc.gz"), gzip_members=True)
     write_warc(rows[20:], str(d / ".hidden.warc"))
+    write_warc(rows[20:], str(d / "_temporary" / "0" / "part-0.warc.gz"), gzip_members=True)
 
-    got = {r.url for r in read_pages_warc_split(spark, str(d), split_bytes=1500).collect()}
+    got = {r.url for r in read_pages_warc(spark, str(d), split_bytes=1500).collect()}
     assert got == {r["url"] for r in rows[:20]}
 
 
@@ -181,11 +183,6 @@ def test_warc_http_charset_hint_beats_meta(spark, tmp_path):
     assert pages.select("charset").collect()[0][0] == "iso-8859-1"
     got = run_kernel(pages).collect()[0].extracted_text
     assert got == want
-
-    from pdf_extractor_spark.sources import read_pages_warc_split
-
-    got_split = run_kernel(read_pages_warc_split(spark, str(d))).collect()[0]
-    assert got_split.extracted_text == want
 
 
 def test_warc_bad_date_and_offset_date(spark, tmp_path):
@@ -330,13 +327,14 @@ def test_warc_streaming_member_parse_bounded_buffer(monkeypatch):
 
 def test_warc_split_reader_matches_unsplit(spark, tmp_path):
     """Splittable reader: tiny byte ranges (boundaries landing mid-member
-    everywhere) must produce exactly the unsplit rows — every member owned
-    by exactly one range, none dropped, none duplicated."""
-    from pdf_extractor_spark.sources import read_pages_warc_split
-
+    everywhere) must produce exactly the unsplit rows of the pure-Python
+    oracle (parse_warc_records over each non-hidden archive) — every member
+    owned by exactly one range, none dropped, none duplicated — whatever
+    the case of the archive's name, and the same for the directory given
+    as a `file://` URI."""
     d = tmp_path / "warc"
     d.mkdir()
-    rows = _synth_rows(190)
+    rows = _synth_rows(210)
     write_warc(rows[:70], str(d / "a.warc.gz"), gzip_members=True)
     write_warc(rows[70:120], str(d / "b.warc.gz"), gzip_members=True)
     # plain (non-gzip) archive: not byte-splittable → its first range reads
@@ -344,17 +342,26 @@ def test_warc_split_reader_matches_unsplit(spark, tmp_path):
     write_warc(rows[120:150], str(d / "c.warc"))
     # misnamed archives: the layout is sniffed, never taken from the name
     write_warc(rows[150:170], str(d / "d.warc.gz"))
-    write_warc(rows[170:], str(d / "e.warc"), gzip_members=True)
+    write_warc(rows[170:190], str(d / "e.warc"), gzip_members=True)
+    write_warc(rows[190:], str(d / "F.WARC.GZ"), gzip_members=True)
+    write_warc(rows[:20], str(d / "_tmp-x.warc.gz"), gzip_members=True)
 
-    got = {
-        r.url: (bytes(r.html), r.warc_ts)
-        for r in read_pages_warc_split(spark, str(d), split_bytes=1500).collect()
+    oracle = {
+        r["url"]: (r["html"], _warc_ts(r["warc_ts"]))
+        for p in sorted(d.iterdir())
+        if not p.name.startswith(("_", "."))
+        for r in parse_warc_records(p.read_bytes())
     }
-    assert len(got) == 190
-    unsplit = {r.url: (bytes(r.html), r.warc_ts) for r in read_pages_warc(spark, str(d)).collect()}
-    assert got == unsplit
+    assert len(oracle) == 210
+    for input_dir in (str(d), d.as_uri()):
+        got = [
+            (r.url, (bytes(r.html), r.warc_ts))
+            for r in read_pages_warc(spark, input_dir, split_bytes=1500).collect()
+        ]
+        assert len(got) == 210, input_dir
+        assert dict(got) == oracle, input_dir
     for r in rows:
-        html, ts = got[r["url"]]
+        html, ts = oracle[r["url"]]
         assert html == r["html"]
         assert ts == r["warc_ts"].replace(tzinfo=None, microsecond=0)
 
@@ -578,29 +585,36 @@ def test_warc_scanner_mutation_fuzz_bounded(tmp_path):
 
 
 def test_plain_record_without_length_scans_linearly(monkeypatch, tmp_path):
-    """A plain-archive record with no Content-Length is only complete at
-    the next `WARC/` boundary. It may span many chunks; each refill must
-    not rescan the whole buffer, or a long record costs
-    O(size² / chunk)."""
+    """A record with no Content-Length is only complete at the next `WARC/`
+    boundary. It may span many chunks, plain or inside one gzip member;
+    each refill must not rescan the whole buffer, or a long record costs
+    O(size² / chunk). The member's body is incompressible, so each 1 KiB
+    compressed read inflates to about 1 KiB."""
+    import gzip
+    import random
     import time
 
     from pdf_extractor_spark import sources as src
 
     monkeypatch.setattr(src, "WARC_CHUNK_BYTES", 1024)
+    tail = src.encode_warc_record("https://t/next", "2024-01-02T03:04:05Z", b"tail")
+    head = b"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: https://t/long\r\n\r\n"
     body = b"<p>no length</p>" * (1 << 19)  # 8 MiB, 8,192 chunks
-    raw = (
-        b"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: https://t/long\r\n"
-        b"\r\n" + body + b"\r\n\r\n"
-        + src.encode_warc_record("https://t/next", "2024-01-02T03:04:05Z", b"tail")
-    )
+    raw = head + body + b"\r\n\r\n" + tail
     p = tmp_path / "long.warc"
     p.write_bytes(raw)
-    for read in (
-        lambda: src.parse_warc_records(raw),
-        lambda: list(src._iter_range_records(str(p), 0, len(raw))),
+    noise = random.Random(0).randbytes(8 << 20)  # 8 MiB, ~8,200 chunks
+    member = gzip.compress(head + noise + b"\r\n\r\n" + tail, 1, mtime=0)
+    pm = tmp_path / "long.warc.gz"
+    pm.write_bytes(member)
+    for read, want in (
+        (lambda: src.parse_warc_records(raw), body),
+        (lambda: list(src._iter_range_records(str(p), 0, len(raw))), body),
+        (lambda: src.parse_warc_records(member), noise),
+        (lambda: list(src._iter_range_records(str(pm), 0, len(member))), noise),
     ):
         t0 = time.perf_counter()
         recs = read()
         assert time.perf_counter() - t0 < 2.0
         assert [r["url"] for r in recs] == ["https://t/long", "https://t/next"]
-        assert recs[0]["html"] == body
+        assert recs[0]["html"] == want

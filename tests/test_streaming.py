@@ -49,7 +49,7 @@ def test_stream_merge_sink_no_duplicate_urls(spark, tmp_path):
 def test_stream_extract_warc_incremental(spark, tmp_path):
     """Streaming WARC ingestion: archives process exactly once across
     restarts (file-source checkpoint), output byte-identical to the
-    oracle."""
+    oracle. An archive name in upper case is listed like any other."""
     from pdf_extractor_spark.sources import write_warc
     from pdf_extractor_spark.synth import synth_row
 
@@ -65,7 +65,8 @@ def test_stream_extract_warc_incremental(spark, tmp_path):
     assert spark.read.parquet(out).count() == 40
 
     rows2 = [synth_row(SEED, i) for i in range(40, 70)]
-    write_warc(rows2, str(d / "seg1.warc.gz"), gzip_members=True)
+    write_warc(rows2[:20], str(d / "seg1.warc.gz"), gzip_members=True)
+    write_warc(rows2[20:], str(d / "SEG2.WARC.GZ"), gzip_members=True)
     q2 = st.stream_extract_warc(spark, str(d), out, ckpt)  # same checkpoint
     q2.awaitTermination(120)
     final = spark.read.parquet(out)
