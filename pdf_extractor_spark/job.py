@@ -39,7 +39,7 @@ def main(argv: list[str] | None = None) -> int:
     src.add_argument("--input-warc", metavar="DIR",
                      help="WARC archives (plain or Common-Crawl member-gzip; every "
                           "non-hidden file with .warc in its name, any case), a "
-                          "path or a Hadoop URI, read in byte ranges")
+                          "path, a Hadoop URI or a Hadoop glob, read in byte ranges")
     p.add_argument("--warc-split-mb", type=int, default=None, metavar="MB",
                    help="with --input-warc: byte-range size in MB (default 128); "
                         "parallelism = archive bytes / range size, not archive "
@@ -142,7 +142,9 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(app_name="extract_job", master=args.master)
     # the Python workers import the package too: without --py-files they
     # find it only through PYTHONPATH, which Spark merges into theirs
-    spark.sparkContext.environment["PYTHONPATH"] = _REPO_ROOT
+    # (prepended: spark.executorEnv.PYTHONPATH lands in the same dict)
+    env = spark.sparkContext.environment
+    env["PYTHONPATH"] = os.pathsep.join(filter(None, [_REPO_ROOT, env.get("PYTHONPATH")]))
     # under spark-submit the driver JVM already exists, so the session
     # builder's spark.driver.memory cannot apply — and local[*] runs
     # EVERYTHING in that one JVM. The stock 1g default OOMs large runs
@@ -174,7 +176,11 @@ def main(argv: list[str] | None = None) -> int:
         from pdf_extractor_spark.sources import read_pages_warc
 
         split = {} if args.warc_split_mb is None else {"split_bytes": args.warc_split_mb << 20}
-        pages = read_pages_warc(spark, args.input_warc, **split)
+        try:
+            pages = read_pages_warc(spark, args.input_warc, **split)
+        except FileNotFoundError as exc:
+            print(f"error: {exc}", file=sys.stderr)
+            return 2
     else:
         pages = pages_df(spark, args.synth, seed=args.seed)
 

@@ -9,21 +9,15 @@ top of either source.
 Raw files:   `spark.read.format("binaryFile")` — Spark's built-in whole-file
              source; one row per file, content as binary, no Python I/O.
 WARC:        byte ranges of every archive whose name matches WARC_GLOB,
-             listed through the Hadoop FS and decoded by an Arrow-vectorized
-             record parser (mapInPandas — same execution shape as the
-             extraction kernel). Handles WARC/1.0 response records, the
-             embedded HTTP response header block, and the Common-Crawl
-             member-gzip layout (each record its own gzip member,
-             concatenated).
-
-One decoder, _iter_records, serves both the batch reader (byte ranges)
-and the stream (whole blobs). It sniffs the layout from the gzip magic at
-offset 0, so a plain archive named `*.warc.gz` or a member-gzip one named
-`*.warc` reads the same through every reader.
+             listed through the Hadoop FS, decoded in mapInPandas (the
+             extraction kernel's execution shape) by one decoder,
+             _iter_records, that also serves the stream. It reads plain
+             and Common-Crawl member-gzip archives, sniffed from the bytes.
 """
 
 from __future__ import annotations
 
+import contextlib
 import fnmatch
 import gzip as _gzip
 import io
@@ -114,9 +108,8 @@ def read_pages_binary(
 
 # --- WARC ------------------------------------------------------------------
 
-# the one archive-name rule of every WARC reader: `.warc` anywhere in the
-# name, any case (a Hadoop pathGlobFilter for the stream, fnmatchcase for
-# the batch listing; both also skip `_`/`.` hidden names)
+# the archive-name rule of every WARC reader: `.warc` anywhere in the name,
+# any case (the stream's pathGlobFilter, the batch listing's fnmatchcase)
 WARC_GLOB = "*.[wW][aA][rR][cC]*"
 
 _GZIP_MAGIC = b"\x1f\x8b"
@@ -129,9 +122,8 @@ _CHARSET_PARAM_RE = re.compile(
 )
 
 
-# decompression chunk for gzip archives: records stream out of a bounded
-# buffer instead of one whole-archive bytes object (module-level so tests
-# can shrink it and force many buffer refills)
+# read size of the decoder: records stream out of a bounded buffer (module
+# level so tests can shrink it and force many buffer refills)
 WARC_CHUNK_BYTES = 1 << 20
 
 
@@ -169,11 +161,9 @@ def _scan_records(buf: "bytes | bytearray", pos: int, final: bool) -> "tuple[lis
         try:
             length = int(headers.get(b"content-length", b""))
             if length < 0:
-                # a negative length is malformed, not short: body_start +
-                # length can land back ON this record's own 'WARC/' head
-                # (busy-loop) or slice tail-relative bytes as the body —
-                # treat like a missing length and resync at the next
-                # boundary (round-3 ADVICE, high)
+                # malformed, not short: body_start + length could land back
+                # on this record's own head (busy-loop) — resync at the next
+                # boundary like a missing length
                 raise ValueError("negative Content-Length")
             body_end = body_start + length
             if body_end > n:
@@ -246,11 +236,9 @@ def _validated_start(f, pos: int, end: int) -> int | None:
         cand = wbase + idx
         if cand >= end:
             return None
-        # validate: inflate the head; real members open with 'WARC/' — the
-        # match is EXACT (a <5-byte prefix match would let a lucky in-member
-        # byte run masquerade as a boundary; a real member's first 512
-        # compressed bytes always inflate past 5 bytes, and one
-        # decompressing to less is not a record)
+        # validate: a real member's first 512 bytes inflate to more than 5
+        # bytes, starting EXACTLY with 'WARC/' (a shorter prefix match would
+        # let a lucky in-member byte run pass as a boundary)
         d = zlib.decompressobj(wbits=16 + zlib.MAX_WBITS)
         f.seek(cand)
         try:
@@ -269,30 +257,22 @@ def _iter_records(f, start: int = 0, end: int | None = None) -> "Iterator[dict]"
     records of the archive in the seekable binary stream `f` that belong to
     the byte range [start, end) (`end=None`: to the end of the stream).
 
-    The layout is sniffed from the 2-byte gzip magic at offset 0, never
-    taken from a file name:
-      * plain archive — not byte-splittable, so the range starting at 0
-        owns the whole archive and every other range yields nothing;
-      * member-gzip (the Common-Crawl member-per-record layout) — the range
-        owns the members STARTING in [start, end); a member may extend past
-        `end` (its owner reads it to completion), one starting before
-        `start` belongs to the previous range. A mid-file `start` is
-        aligned by _validated_start; from the first real member on,
-        boundaries come exactly from the decompressor's unused input.
+    The layout is sniffed from the gzip magic at offset 0, never from a
+    file name. A plain archive is not byte-splittable: the range starting
+    at 0 owns it whole. Of a member-gzip archive (Common Crawl's
+    member-per-record layout) a range owns the members STARTING in it, read
+    to completion; a mid-file `start` is aligned by _validated_start, and
+    from there boundaries come from the decompressor's unused input.
 
     Bounded memory: the archive streams through WARC_CHUNK_BYTES reads into
-    a parse buffer flushed as records complete — peak Python heap is
-    ~(largest single record + one chunk; up to twice the record when it is
-    longer than a chunk), not the decompressed archive (round-2 verdict
-    "What's missing" #2). The buffer is rescanned only once it has doubled
-    since the last scan, so a record without a usable Content-Length that
-    spans many chunks costs O(log n) scans, not one per chunk. Records
-    spanning gzip member boundaries parse correctly (the buffer carries
-    across members).
-    Tolerates missing/short Content-Length (falls back to the next `WARC/`
-    boundary), an embedded HTTP response header block (stripped),
-    non-response records (skipped), and a truncated/corrupt member (earlier
-    records survive; the archive ends there, never an error).
+    a parse buffer flushed as records complete, so peak heap is about the
+    largest record (twice it while the buffer grows), not the archive. The
+    buffer is rescanned only once it has doubled since the last scan: a
+    record without a usable Content-Length costs O(log n) scans. Records
+    may span gzip members. Missing or short Content-Length falls back to
+    the next `WARC/` boundary; the HTTP header block is stripped;
+    non-response records are skipped; a truncated or corrupt member ends
+    the archive there, never with an error.
     """
     buf = bytearray()
     scanned = 0
@@ -323,10 +303,8 @@ def _owned_bytes(f, start: int, end: int | None) -> "Iterator[bytes]":
     if pos is None:
         return
     # `pending` carries the decompressor's unused compressed tail into the
-    # next member — every byte is read once (a per-member seek+reread costs
-    # ~chunk/member_size× the range in I/O; round-3 review finding). The
-    # next member's ABSOLUTE offset is consumed_abs - len(pending), which
-    # drives the end-of-range ownership check.
+    # next member, so every byte is read once; the next member's absolute
+    # offset, consumed_abs - len(pending), drives the ownership check.
     pending = memoryview(b"")
     f.seek(pos)
     consumed_abs = pos
@@ -378,13 +356,26 @@ def parse_warc_blobs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             yield from _pages_frames(iter_warc_records(bytes(blob)))
 
 
+# Hadoop schemes that pyarrow.fs knows under another name
+_ARROW_SCHEMES = {"s3a": "s3", "s3n": "s3"}
+
+# packing's per-range cost of a file open (Spark's openCostInBytes default)
+_OPEN_COST = 4 << 20
+
+
+def _arrow_uri(uri: str) -> str:
+    """A Hadoop-listed URI in the scheme pyarrow.fs opens it by."""
+    scheme, colon, rest = uri.partition(":")
+    return _ARROW_SCHEMES.get(scheme, scheme) + colon + rest
+
+
 def _iter_range_records(uri: str, start: int, end: int) -> "Iterator[dict]":
-    """Records of the archive at `uri` (a path or a URI pyarrow.fs opens)
+    """Records of the archive at `uri` (a path or a Hadoop-listed URI)
     owned by the byte range [start, end) — the per-range worker of
     read_pages_warc (_iter_records)."""
     from pyarrow import fs
 
-    filesystem, path = fs.FileSystem.from_uri(uri)
+    filesystem, path = fs.FileSystem.from_uri(_arrow_uri(uri))
     with filesystem.open_input_file(path) as f:
         yield from _iter_records(f, start, end)
 
@@ -392,64 +383,76 @@ def _iter_range_records(uri: str, start: int, end: int) -> "Iterator[dict]":
 def read_pages_warc(
     spark: SparkSession, input_dir: str, split_bytes: int = 128 << 20
 ) -> DataFrame:
-    """WARC archives → pages table, read in byte ranges: parallelism =
-    total bytes / split_bytes, not archive count.
+    """WARC archives → pages table, read in byte ranges of split_bytes.
 
-    The driver lists `input_dir` (a path or any Hadoop URI) recursively
-    through the Hadoop FS and keeps every file whose name matches WARC_GLOB
-    and neither it nor a directory below `input_dir` starts with `_` or `.`
-    (Spark's hidden-path rule, which the stream's file index applies too:
-    an orphaned `_tmp-*-attempt*.warc.gz` left by a hard-killed export task
-    or a committer's `_temporary/` dir is never double-counted). Each archive fans out into (uri, start, end)
-    ranges, whatever its name; each task opens its range's qualified URI
-    through pyarrow.fs (local paths and `file:`; HDFS where libhdfs is
-    present; a scheme pyarrow cannot open, e.g. `s3a://`, fails the task)
-    and sniffs the layout (_iter_records). Of a member-gzip archive it
-    reads ONLY the members starting inside its range (boundary-validated),
-    so every member is owned by exactly one task and records never
-    duplicate. A plain archive is not byte-splittable: its first range
-    reads it whole and the others return at once. Only (url, ts, payload,
-    charset) leave the parser, and the pages schema matches the parquet
-    source so every downstream stage is identical.
+    The driver expands `input_dir` (a path, a Hadoop URI or a Hadoop glob
+    such as `segments/*/warc`) through the Hadoop FS and lists each match
+    recursively. It keeps the files whose name matches WARC_GLOB, unless
+    the name or a dir below the match starts with `_` or `.` (Spark's
+    hidden-path rule: an export task's orphaned `_tmp-*` archive or a
+    committer's `_temporary/` dir is never read). An input that matches
+    nothing raises FileNotFoundError. Ranges pack into tasks as Spark packs
+    file splits (bytes + _OPEN_COST each, up to min(split_bytes, total /
+    default parallelism) per task), so many small archives run in a few
+    tasks and a large one in a task per range. Each range opens its URI
+    through pyarrow.fs (_arrow_uri; a scheme pyarrow cannot open fails the
+    task) and yields the records it owns (_iter_records).
     """
     if split_bytes <= 0:
         # range(0, n, negative) is silently empty — every archive would be
         # dropped without an error (round-3 review)
         raise ValueError(f"split_bytes must be positive, got {split_bytes}")
 
-    root = spark._jvm.org.apache.hadoop.fs.Path(input_dir)
-    hfs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    root_len = len(hfs.makeQualified(root).toUri().getPath())
-    files = hfs.listFiles(root, True)
+    pattern = spark._jvm.org.apache.hadoop.fs.Path(input_dir)
+    hfs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
+    roots = hfs.globStatus(pattern)  # None: no such path; []: no glob match
+    if not roots:
+        raise FileNotFoundError(f"WARC input not found: {input_dir}")
     ranges: list[tuple[str, int, int]] = []
-    while files.hasNext():
-        status = files.next()
-        path = status.getPath()
-        name = path.getName()
-        # hidden like Spark's file index: the name or any dir below the root
-        dirs = path.toUri().getPath()[root_len:].split("/")[:-1]
-        if any(p.startswith(("_", ".")) for p in [*dirs, name]):
-            continue
-        if not fnmatch.fnmatchcase(name, WARC_GLOB):
-            continue
-        uri, size = path.toUri().toString(), status.getLen()
-        ranges.extend(
-            (uri, off, min(off + split_bytes, size))
-            for off in range(0, max(size, 1), split_bytes)
-        )
+    for root in roots:
+        root_len = len(root.getPath().toUri().getPath())
+        files = hfs.listFiles(root.getPath(), True)
+        while files.hasNext():
+            status = files.next()
+            path = status.getPath()
+            name = path.getName()
+            # hidden like Spark's file index: the name or any dir below the root
+            dirs = path.toUri().getPath()[root_len:].split("/")[:-1]
+            hidden = any(p.startswith(("_", ".")) for p in [*dirs, name])
+            if hidden or not fnmatch.fnmatchcase(name, WARC_GLOB):
+                continue
+            uri, size = path.toUri().toString(), status.getLen()
+            ranges.extend(
+                (uri, off, min(off + split_bytes, size))
+                for off in range(0, max(size, 1), split_bytes)
+            )
     if not ranges:
         return spark.createDataFrame([], WARC_PAGES_SCHEMA_DDL)
 
-    rdf = spark.createDataFrame(
-        sorted(ranges), "uri string, start long, end long"
-    ).repartition(len(ranges))
+    ranges.sort()
+    sc = spark.sparkContext
+    total = sum(e - s + _OPEN_COST for _, s, e in ranges)
+    target = min(split_bytes, max(_OPEN_COST, total // sc.defaultParallelism))
+    tasks: list[list[tuple[str, int, int]]] = []
+    for r in ranges:
+        if not tasks or size + r[2] - r[1] > target:
+            tasks.append([])
+            size = 0
+        tasks[-1].append(r)
+        size += r[2] - r[1] + _OPEN_COST
+    # spark.range puts one id in each slice, so Spark task i reads tasks[i];
+    # the range lists reach each worker once, as a broadcast
+    shared = sc.broadcast(tasks)
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for uri, s, e in zip(pdf["uri"], pdf["start"], pdf["end"]):
-                yield from _pages_frames(_iter_range_records(uri, int(s), int(e)))
+            for task in pdf["id"]:
+                for uri, s, e in shared.value[task]:
+                    yield from _pages_frames(_iter_range_records(uri, s, e))
 
-    return rdf.mapInPandas(parse, schema=WARC_PAGES_SCHEMA_DDL)
+    return spark.range(len(tasks), numPartitions=len(tasks)).mapInPandas(
+        parse, schema=WARC_PAGES_SCHEMA_DDL
+    )
 
 
 def export_pages_warc(
@@ -500,13 +503,10 @@ def export_pages_warc(
         except BaseException:
             # failed attempt: remove the temp so only committed (renamed)
             # archives ever exist in out_dir
-            try:
+            # a temp already gone leaves nothing uncommitted; the original
+            # error is the one to surface
+            with contextlib.suppress(OSError):
                 os.remove(tmp)
-            except OSError:
-                # temp already gone (never created / cleaned by the task
-                # runner): nothing uncommitted remains, the original error
-                # below is the one to surface
-                pass
             raise
         if n == 0:
             os.remove(tmp)

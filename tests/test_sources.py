@@ -145,6 +145,53 @@ def test_warc_split_reader_skips_hidden_files(spark, tmp_path):
     assert got == {r["url"] for r in rows[:20]}
 
 
+def test_warc_reader_expands_hadoop_glob(spark, tmp_path):
+    """A Hadoop glob input (Common Crawl's `segments/*/warc` layout) reads
+    every archive under each match and nothing else; a path or a glob that
+    matches nothing raises FileNotFoundError instead of a Java trace."""
+    import pytest
+
+    d = tmp_path / "segments"
+    rows = _synth_rows(30)
+    for seg, sub, part, gz in (
+        ("s1", "warc", rows[:10], True),
+        ("s2", "warc", rows[10:20], False),
+        ("s3", "wet", rows[20:], True),
+    ):
+        (d / seg / sub).mkdir(parents=True)
+        write_warc(part, str(d / seg / sub / f"{seg}.WARC.gz"), gzip_members=gz)
+
+    got = [r.url for r in read_pages_warc(spark, f"{d}/*/warc", split_bytes=1500).collect()]
+    assert sorted(got) == sorted(r["url"] for r in rows[:20])
+    for missing in (f"{d}/nope", f"{d}/*/nope"):
+        with pytest.raises(FileNotFoundError):
+            read_pages_warc(spark, missing)
+
+
+def test_warc_reader_packs_small_archives(spark, tmp_path):
+    """Many small archives pack into at most one task per core, as Spark
+    packs small files, instead of one task per archive."""
+    d = tmp_path / "warc"
+    d.mkdir()
+    rows = _synth_rows(48)
+    for i in range(12):
+        write_warc(rows[4 * i : 4 * i + 4], str(d / f"p{i:02d}.warc.gz"), gzip_members=True)
+    df = read_pages_warc(spark, str(d))
+    assert df.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    assert sorted(r.url for r in df.collect()) == sorted(r["url"] for r in rows)
+
+
+def test_arrow_uri_maps_hadoop_s3_schemes():
+    """Hadoop lists S3 objects as s3a:// (or s3n://); pyarrow.fs opens
+    them as s3://. Other URIs and plain paths pass through unchanged."""
+    from pdf_extractor_spark.sources import _arrow_uri
+
+    assert _arrow_uri("s3a://cc/seg/a.warc.gz") == "s3://cc/seg/a.warc.gz"
+    assert _arrow_uri("s3n://cc/a.warc.gz") == "s3://cc/a.warc.gz"
+    for uri in ("file:/tmp/a.warc.gz", "hdfs://nn:8020/a.warc", "gs://b/a.warc", "/tmp/a.warc"):
+        assert _arrow_uri(uri) == uri
+
+
 def test_warc_http_charset_hint_beats_meta(spark, tmp_path):
     """When the WARC record's HTTP Content-Type charset disagrees with the
     page's meta tag, the transport header wins (WHATWG precedence below
