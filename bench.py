@@ -274,30 +274,6 @@ def main() -> int:
     finally:
         spark.stop()
 
-    # -- part 2b: ANN bucket assignment — explode (SQL-parity) vs numpy
-    # matmul (production). Same logical op (equality pinned by pytest);
-    # this measures the physical-strategy gap at sf scale.
-    from pdf_extractor_spark.operators.similarity import (
-        assign_buckets_explode,
-        assign_buckets_vectorized,
-    )
-
-    spark = _new_spark(CPUS, "ann_assign")
-    assign_times: dict[str, float] = {}
-    try:
-        emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-        for tag, builder in (
-            ("explode", assign_buckets_explode),
-            ("vectorized", assign_buckets_vectorized),
-        ):
-            builder(emb).write.format("noop").mode("overwrite").save()  # warm
-            t0 = time.time()
-            builder(emb).write.format("noop").mode("overwrite").save()
-            assign_times[tag] = round(time.time() - t0, 3)
-            print(f"# ann_assign_{tag}: {assign_times[tag]}s", file=sys.stderr)
-    finally:
-        spark.stop()
-
     try:
         sf = float(os.path.basename(SF_DIR.rstrip("/")).replace("sf", ""))
     except ValueError:  # SF dir without an sf<number> name
@@ -315,7 +291,6 @@ def main() -> int:
         "extract_peak_p%d" % peak_cores: peak,
         "docs_per_sec": peak["docs_per_sec"],
         "scaling_efficiency_%dto%d" % (lo_cores, hi_cores): round(eff, 3),
-        "ann_assign_sec": assign_times,
     }
     print(json.dumps(result))
     return 0

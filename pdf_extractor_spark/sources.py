@@ -474,24 +474,33 @@ def export_pages_warc(
     either replaces the same final file with identical bytes or cleans up
     its temp — no orphan archive can double-count on readback. Records are
     encoded and written one at a time (no whole-partition buffering).
+    Tasks open `out_dir` through pyarrow.fs as the reader opens its input
+    (_arrow_uri), so a `file://`, `s3a://` or `hdfs://` URI is written
+    where it points, not under the task's cwd.
     """
+    import os
+
     cols = pages.select("url", "warc_ts", "html")
+    target = _arrow_uri(out_dir if "://" in out_dir else os.path.abspath(out_dir))
 
     def write_partition(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import os
-
+        from pyarrow import fs
         from pyspark import TaskContext
 
         tc = TaskContext.get()
         pid = tc.partitionId() if tc else 0
         attempt = tc.taskAttemptId() if tc else 0
         suffix = ".warc.gz" if gzip_members else ".warc"
-        final = os.path.join(out_dir, f"part-{pid:05d}{suffix}")
-        tmp = os.path.join(out_dir, f"_tmp-{pid:05d}-attempt{attempt}{suffix}")
-        os.makedirs(out_dir, exist_ok=True)
+        name = f"part-{pid:05d}{suffix}"
+        filesystem, root = fs.FileSystem.from_uri(target)
+        final = f"{root}/{name}"
+        tmp = f"{root}/_tmp-{pid:05d}-attempt{attempt}{suffix}"
+        filesystem.create_dir(root, recursive=True)
         n = 0
         try:
-            with open(tmp, "wb") as f:
+            # compression=None: the records are already gzip members; the
+            # default would gzip the stream again by its .gz name
+            with filesystem.open_output_stream(tmp, compression=None) as f:
                 for pdf in batches:
                     for r in pdf.itertuples(index=False):
                         f.write(
@@ -506,17 +515,17 @@ def export_pages_warc(
             # a temp already gone leaves nothing uncommitted; the original
             # error is the one to surface
             with contextlib.suppress(OSError):
-                os.remove(tmp)
+                filesystem.delete_file(tmp)
             raise
         if n == 0:
-            os.remove(tmp)
+            filesystem.delete_file(tmp)
             return
-        os.replace(tmp, final)  # atomic commit
+        filesystem.move(tmp, final)  # atomic commit
         yield pd.DataFrame(
             {
-                "file": [final],
+                "file": [os.path.join(out_dir, name)],
                 "n_records": [n],
-                "n_bytes": [os.path.getsize(final)],
+                "n_bytes": [filesystem.get_file_info(final).size],
             }
         )
 

@@ -121,20 +121,20 @@ def test_all_registered_ops_have_docs():
 
 
 def test_vectorized_assignment_matches_explode_form(spark):
-    """The numpy-matmul bucket/cell assignment must agree row-for-row with
-    the SQL-parity posexplode form — two physical strategies, one logical
-    op."""
+    """The Arrow-matmul bucket and rank-1 cell reductions must agree
+    row-for-row with an inline posexplode form of the same projection —
+    two physical strategies, one logical op."""
     from pyspark.sql import functions as F
 
     from pdf_extractor_spark.operators.similarity import (
         _N_PLANES,
-        assign_buckets_vectorized,
-        assign_cells_vectorized,
+        _ivf_cells,
+        _lsh_buckets,
     )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
 
-    # explode-form buckets (same expression as ann_lsh_buckets, pre-agg)
+    # explode-form buckets (same expression as ann_lsh_buckets' oracle, pre-agg)
     e = emb.select("vec_id", F.posexplode("embedding").alias("i", "x")).select(
         "vec_id", "i", F.col("x").cast("double").alias("x")
     )
@@ -154,7 +154,7 @@ def test_vectorized_assignment_matches_explode_form(spark):
         )
         .collect()
     }
-    vec_buckets = {r.vec_id: r.bucket for r in assign_buckets_vectorized(emb).collect()}
+    vec_buckets = {r.vec_id: r.bucket for r in _lsh_buckets(emb).collect()}
     assert vec_buckets == sql_buckets
 
     # explode-form cells (same expression as ann_ivf_probe's quantizer)
@@ -169,28 +169,27 @@ def test_vectorized_assignment_matches_explode_form(spark):
         .agg(F.max_by("k", "e_dot").cast("long").alias("cell"))
         .collect()
     }
-    vec_cells = {r.vec_id: r.cell for r in assign_cells_vectorized(emb).collect()}
+    vec_cells = {r.vec_id: r.cells[0] for r in _ivf_cells(emb).collect()}
     assert vec_cells == sql_cells
 
 
-def test_band_vectorized_assignment_matches_explode_form(spark):
-    """The multiband numpy-matmul signature must agree row-for-row with the
-    SQL-parity explode form used by emb_near_dup_multiband."""
-    from pyspark.sql import functions as F
+def test_band_vectorized_assignment_matches_explode_form(spark, duck):
+    """The multiband Arrow-matmul signatures must agree per (vec_id, band)
+    with DuckDB running the signature CTEs (e, coefs, proj, sig) of
+    emb_near_dup_multiband's own oracle — an independent reference."""
+    from pdf_extractor_spark.operators.similarity import _band_buckets
 
-    from pdf_extractor_spark.operators.similarity import (
-        assign_band_buckets_vectorized,
-        band_signatures,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    ctes = all_ops()["emb_near_dup_multiband"].oracle.split("cand AS (")[0]
+    assert "sig AS (" in ctes
     sql_sigs = {
-        (r.vec_id, r.r): r.bucket for r in band_signatures(spark, emb).collect()
+        (v, r): bucket
+        for v, r, bucket in duck.sql(
+            ctes.rstrip().rstrip(",") + " SELECT vec_id, r, bucket FROM sig"
+        ).fetchall()
     }
-    vec_sigs = {
-        (r.vec_id, r.r): r.bucket
-        for r in assign_band_buckets_vectorized(emb).collect()
-    }
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    vec_sigs = {(r.vec_id, r.r): r.bucket for r in _band_buckets(emb).collect()}
+    assert len(vec_sigs) == len(sql_sigs) > 0
     assert vec_sigs == sql_sigs
 
 

@@ -8,6 +8,8 @@ placed AFTER it.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -247,8 +249,8 @@ def test_dedup_keep_best_result_is_distributed(spark):
 
 def test_bucketed_near_dup_pairs_join_on_bucket(spark):
     """emb_near_dup_bucketed's PAIR join must be a hash join on the bucket
-    key (cosine + va<vb as residual condition) — the only nested-loop join
-    allowed in the plan is the 8-row hyperplane broadcast cross."""
+    key (cosine + va<vb as residual condition), and the plan holds no
+    nested-loop join at all: the signature is a row-local projection."""
     import re
 
     from pdf_extractor_spark.operators.registry import all_ops
@@ -258,15 +260,14 @@ def test_bucketed_near_dup_pairs_join_on_bucket(spark):
     assert re.search(r"BroadcastHashJoin \[ba#\d+L?\], \[bb#\d+L?\]", plan) or re.search(
         r"ShuffledHashJoin \[ba#\d+L?\], \[bb#\d+L?\]", plan
     ) or re.search(r"SortMergeJoin \[ba#\d+L?\], \[bb#\d+L?\]", plan)
-    # any NLJ present must be the tiny planes cross-broadcast, never Inner
-    for m in re.finditer(r"BroadcastNestedLoopJoin BuildRight, (\w+)", plan):
-        assert m.group(1) == "Cross"
+    assert "NestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
 
 
 def test_multiband_near_dup_joins_on_band_and_bucket(spark):
     """emb_near_dup_multiband: candidate generation must be an equi-join
     keyed on (band, bucket) — never a cartesian pair enumeration — and the
-    only nested-loop join allowed is the 24-row plane-grid broadcast."""
+    plan holds no nested-loop join at all."""
     import re
 
     from pdf_extractor_spark.operators.registry import all_ops
@@ -277,8 +278,7 @@ def test_multiband_near_dup_joins_on_band_and_bucket(spark):
         plan,
     ), plan[:2000]
     assert "CartesianProduct" not in plan
-    for m in re.finditer(r"BroadcastNestedLoopJoin BuildRight, (\w+)", plan):
-        assert m.group(1) == "Cross"
+    assert "NestedLoopJoin" not in plan
 
 
 def test_split_warc_reader_parallelism_is_range_count(spark, tmp_path):
@@ -508,37 +508,59 @@ def test_incremental_dedup_is_band_equijoins(spark):
     ), plan[:2000]
 
 
+def _subtrees(plan: str, node: str) -> list[list[str]]:
+    """The lines below each `node` line of a plan tree string."""
+    lines = plan.splitlines()
+
+    def depth(line):
+        m = re.match(r"((?:[: ]  )*)[:+]- ", line)
+        return len(m.group(1)) // 3 if m else -1
+
+    out = []
+    for k, line in enumerate(lines):
+        if node in line:
+            d, sub = depth(line), []
+            for below in lines[k + 1:]:
+                if depth(below) <= d:
+                    break
+                sub.append(below)
+            out.append(sub)
+    return out
+
+
 def test_multiband_signatures_arrow_no_inflation(spark):
-    """emb_near_dup_multiband (round 5, 48 md5 bands): the driver query's
-    signature assignment must be the ARROW MATMUL path (one MapInPandas,
-    no per-(vec,dim) explode, no exchange or join below it — the explode
-    form pushes ×dim×planes×bands transient rows through two exchanges
-    and exists only as the SQL-parity/equality-pin twin), and candidate
-    generation stays an equi-join keyed by (r, bucket)."""
-    import re
-
+    """Every query that projects embeddings onto a fixed matrix (LSH sign
+    buckets, md5 band signatures, IVF cell ranks) does it in the one
+    `_project` MapInPandas, straight over the embeddings scan: no
+    per-(vec, dim) explode anywhere (no Generate), and no exchange or join
+    below the projection. A self-join reads it once per side.
+    emb_near_dup_multiband's candidate generation stays an equi-join keyed
+    by (r, bucket)."""
     from pdf_extractor_spark.operators.registry import all_ops
-    from pdf_extractor_spark.operators.similarity import (
-        assign_band_buckets_vectorized,
-    )
 
-    sig_plan = _plan(
-        assign_band_buckets_vectorized(
-            spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-        )
-    )
-    assert "MapInPandas" in sig_plan
-    assert "Exchange" not in sig_plan  # assignment never shuffles
-    assert "Join" not in sig_plan
-    assert "Generate" not in sig_plan  # no posexplode row inflation
-
-    plan = _plan(all_ops()["emb_near_dup_multiband"].build(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "MapInPandas" in plan
-    assert re.search(
-        r"(BroadcastHashJoin|ShuffledHashJoin|SortMergeJoin) \[r#\d+, bucket#\d+L?\]",
-        plan,
-    ), plan[:2000]
+    for name in (
+        "ann_lsh_buckets",
+        "emb_near_dup_bucketed",
+        "emb_near_dup_multiband",
+        "ann_ivf_probe",
+        "ann_ivf_multiprobe",
+    ):
+        plan = _plan(all_ops()[name].build(spark, SF_DIR))
+        assert "Generate" not in plan, name  # no posexplode row inflation
+        projections = _subtrees(plan, "MapInPandas")
+        assert projections, (name, plan[:2000])
+        assert len(re.findall(r"MapInPandas project\(", plan)) == len(projections)
+        for below in projections:
+            text = "\n".join(below)
+            assert "Exchange" not in text, name  # assignment never shuffles
+            assert "Join" not in text, name
+            assert "embeddings.parquet" in below[-1], name  # its only input
+        if name == "emb_near_dup_multiband":
+            assert "CartesianProduct" not in plan
+            assert re.search(
+                r"(BroadcastHashJoin|ShuffledHashJoin|SortMergeJoin) \[r#\d+, bucket#\d+L?\]",
+                plan,
+            ), plan[:2000]
 
 
 def test_semdedup_prune_is_equijoin_on_cell(spark):

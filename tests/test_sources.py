@@ -268,6 +268,17 @@ def test_warc_export_roundtrip(spark, tmp_path):
     orig = {r.url: bytes(r.html) for r in pages.collect()}
     assert back == orig
 
+    # a file:// URI lands under the real directory, not a literal `file:`
+    # tree under the task's cwd
+    real = tmp_path / "export_uri"
+    manifest = export_pages_warc(pages, "file://" + str(real), gzip_members=True).collect()
+    assert sorted(p.name for p in real.iterdir()) == sorted(
+        os.path.basename(m.file) for m in manifest
+    )
+    assert all(m.n_bytes == (real / os.path.basename(m.file)).stat().st_size for m in manifest)
+    back = {r.url: bytes(r.html) for r in read_pages_warc(spark, str(real)).collect()}
+    assert back == orig
+
 
 def test_warc_export_null_timestamp(spark, tmp_path):
     """A null warc_ts (what read_pages_warc yields for malformed WARC-Date)
