@@ -14,7 +14,9 @@ committed_at timestamp.
 
 Commit protocol (exactly-once per partition):
   1. output written first (dynamic partition overwrite → idempotent);
-  2. control rows appended only after the write action succeeds;
+  2. control rows appended only after the write action succeeds, as one
+     new `commit-<uuid>.parquet` file created through the Hadoop FS (the
+     same handle the resume check reads through; no Spark job);
   3. a crash between 1 and 2 leaves the partition uncommitted → the rerun
      overwrites it in place. No partial state is ever visible. The bucket
      count is stamped only in step 2, so a rerun over output whose control
@@ -27,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from pdf_extractor_spark.session import hadoop_fs
 
 CONTROL_SCHEMA = T.StructType(
     [
@@ -74,8 +78,8 @@ def committed_ids(
     rows means nothing is committed; any read error, e.g. a corrupt commit
     file, propagates instead of turning resume off.
     """
-    path = spark._jvm.org.apache.hadoop.fs.Path(control_dir)
-    if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
+    fs, path = hadoop_fs(spark, control_dir)
+    if not fs.exists(path):
         return frozenset(), default if n_buckets is None else n_buckets
     rows = (
         spark.read.schema(CONTROL_SCHEMA)
@@ -110,18 +114,14 @@ def append_commits_rows(rows, control_dir: str, n_buckets: int | None = None) ->
 
     `rows` is a driver-side list (≤ n_buckets entries, already collected) of
     objects with partition_id / docs_processed / bytes_parsed /
-    parse_failures. `control_dir` resolves through the same Hadoop FS that
-    committed_ids reads. On a local FS (a bare path, `file:/…` or
-    `file:///…`) the rows are written directly with pyarrow at the resolved
-    path — a Spark job for a ≤64-row append costs ~2 s of scheduler latency
-    per run, which at bench scale is pure fixed overhead. Any other FS
-    (hdfs://, s3a://, …) gets a Spark append, or the commit would land on
-    the driver's disk and resume would silently re-run everything. The file
-    layout stays spark.read.parquet-compatible; on a real cluster this
-    append targets an Iceberg control table instead.
+    parse_failures. The rows become one parquet file, serialized in memory
+    with pyarrow and created through the Hadoop FS that committed_ids reads,
+    so every scheme (a bare path, file://, hdfs://, s3a://) takes the same
+    path and no Spark job runs. The file layout stays
+    spark.read.parquet-compatible; on a real cluster this append targets an
+    Iceberg control table instead.
     """
     import datetime as _dt
-    import os
     import uuid
 
     import pyarrow as pa
@@ -129,34 +129,6 @@ def append_commits_rows(rows, control_dir: str, n_buckets: int | None = None) ->
     from pyspark.sql import SparkSession
 
     now = _dt.datetime.now(_dt.timezone.utc)
-    spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
-    path = spark._jvm.org.apache.hadoop.fs.Path(control_dir)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.getUri().getScheme() != "file":
-        (
-            spark.createDataFrame(
-                [
-                    (
-                        int(r.partition_id),
-                        STATUS_COMMITTED,
-                        int(r.docs_processed),
-                        int(r.bytes_parsed or 0),
-                        int(r.parse_failures or 0),
-                        int(getattr(r, "font_unmapped", 0) or 0),
-                        now,
-                        n_buckets,
-                    )
-                    for r in rows
-                ],
-                CONTROL_SCHEMA,
-            )
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(control_dir)
-        )
-        return
-
-    local_dir = fs.makeQualified(path).toUri().getPath()
     table = pa.table(
         {
             "partition_id": pa.array([int(r.partition_id) for r in rows], pa.int32()),
@@ -171,5 +143,12 @@ def append_commits_rows(rows, control_dir: str, n_buckets: int | None = None) ->
             "n_buckets": pa.array([n_buckets] * len(rows), pa.int32()),
         }
     )
-    os.makedirs(local_dir, exist_ok=True)
-    pq.write_table(table, os.path.join(local_dir, f"commit-{uuid.uuid4().hex}.parquet"))
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
+    fs, path = hadoop_fs(spark, f"{control_dir.rstrip('/')}/commit-{uuid.uuid4().hex}.parquet")
+    out = fs.create(path, False)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()

@@ -65,10 +65,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--export-warc", metavar="DIR", default=None,
                    help="re-export the INPUT pages as WARC archives to DIR "
                         "(one member-gzip file per partition + stdout manifest count)")
-    p.add_argument("--compact", type=int, metavar="N", default=None,
-                   help="after the run, compact the output to N files per "
-                        "bucket directory (staged rewrite + swap; control table "
-                        "stays valid)")
     p.add_argument("--corpus-out", metavar="DIR", default=None,
                    help="also build the deduplicated training corpus (quality "
                         "filter + exact text dedup) from the extraction output to DIR")
@@ -130,8 +126,7 @@ def main(argv: list[str] | None = None) -> int:
         stray = [flag for flag, on in flags.items() if on]
         if stray and not given:
             p.error("%s require(s) %s" % (", ".join(stray), needed))
-    for flag, n in (("--warc-split-mb", args.warc_split_mb), ("--n-buckets", args.n_buckets),
-                    ("--compact", args.compact)):
+    for flag, n in (("--warc-split-mb", args.warc_split_mb), ("--n-buckets", args.n_buckets)):
         if n is not None and n < 1:
             p.error("%s must be a positive number" % flag)
 
@@ -218,16 +213,6 @@ def main(argv: list[str] | None = None) -> int:
         print(
             "exported %d WARC files / %d records to %s"
             % (manifest.files, manifest.records or 0, args.export_warc),
-            file=sys.stderr,
-        )
-
-    if args.compact:
-        from pdf_extractor_spark.pipeline import compact_output
-
-        cmp_stats = compact_output(spark, args.output, files_per_bucket=args.compact)
-        print(
-            "compacted %s: %d files -> %d (%d rows)"
-            % (args.output, cmp_stats.files_before, cmp_stats.files_after, cmp_stats.rows),
             file=sys.stderr,
         )
 

@@ -53,6 +53,7 @@ from pdf_extractor_spark.kernel.spark_kernel import (
     extract_batches,
     kernel_input,
 )
+from pdf_extractor_spark.session import hadoop_fs
 
 # The written table. Read back with it, a bucket written by an older kernel
 # reads the columns it lacks as null.
@@ -101,8 +102,8 @@ def _refuse_unstamped_output(
     """BucketingMismatchError if `out_dir` holds bucket dirs a run under
     `n_buckets` (None: any count) might not overwrite: with no stamp in the
     control dir, the modulus they were written under is unknown."""
-    pattern = spark._jvm.org.apache.hadoop.fs.Path(out_dir.rstrip("/") + "/partition_id=*")
-    found = pattern.getFileSystem(spark._jsc.hadoopConfiguration()).globStatus(pattern) or []
+    fs, pattern = hadoop_fs(spark, out_dir.rstrip("/") + "/partition_id=*")
+    found = fs.globStatus(pattern) or []
     ids = [int(st.getPath().getName().split("=", 1)[1]) for st in found]
     if any(n_buckets is None or p >= n_buckets for p in ids):
         raise ctl.BucketingMismatchError(
@@ -283,68 +284,6 @@ def run_extraction(
 
 
 @dataclass
-class CompactStats:
-    rows: int
-    files_before: int
-    files_after: int
-
-
-def compact_output(
-    spark: SparkSession,
-    out_dir: str,
-    files_per_bucket: int = 1,
-    shuffle_partitions: int | None = None,
-) -> CompactStats:
-    """Small-file compaction for the partitioned extraction output.
-
-    The extraction write gives a cold bucket one file but a hot one several;
-    at 10^12 docs the file count (not the byte count) becomes the metadata
-    bottleneck for every downstream scan. This rewrites each url-hash
-    bucket with exactly `files_per_bucket` files: one shuffle keyed on
-    (partition_id, url-salt mod files_per_bucket) puts each bucket's rows
-    in `files_per_bucket` tasks, and the partitionBy write regroups them
-    per directory. (On an Iceberg deployment this is `rewrite_data_files`;
-    the parquet-dir form stages and swaps because Spark cannot safely
-    overwrite its own input.)
-
-    The swap is rename-based: original → `.pre_compact`, staging → final,
-    then delete — a crash mid-swap leaves either the original or the
-    compacted dir intact under a recoverable name, never a half-deleted
-    table. Content is unchanged, so the control table stays valid and a
-    resumed run still skips every committed partition.
-    """
-    import os
-    import shutil
-
-    df = spark.read.schema(OUTPUT_SCHEMA).parquet(out_dir)  # keeps columns older buckets lack
-    files_before = df.select(F.input_file_name()).distinct().count()
-    shuffle_n = shuffle_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    staging = out_dir.rstrip("/") + "._compact_staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    (
-        df.repartition(
-            shuffle_n,
-            "partition_id",
-            F.pmod(F.xxhash64("url"), F.lit(files_per_bucket)).alias("_csalt"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("partition_id")
-        .option("compression", "snappy")
-        .parquet(staging)
-    )
-    old = out_dir.rstrip("/") + ".pre_compact"
-    shutil.rmtree(old, ignore_errors=True)
-    os.replace(out_dir, old)
-    os.replace(staging, out_dir)
-    shutil.rmtree(old)
-    out = spark.read.parquet(out_dir)
-    files_after = out.select(F.input_file_name()).distinct().count()
-    return CompactStats(out.count(), files_before, files_after)
-
-
-@dataclass
 class CorpusStats:
     docs_in: int
     docs_quality: int
@@ -411,7 +350,8 @@ def build_training_corpus(
     `<corpus_dir>__prebudget`, runs the bounded (url, tokens, quality)
     scoring pass over that column-pruned scan, and writes the kept docs —
     the same read-back discipline as dedup_state_out, never a recompute
-    of the build chain.
+    of the build chain. The staging dir is then deleted through the Hadoop
+    FS, so it goes on any scheme the corpus dir names.
 
     `dedup_state_in` / `dedup_state_out` make the builder INCREMENTAL
     across crawl snapshots (the T1 control-table discipline applied to
@@ -548,8 +488,6 @@ def build_training_corpus(
     if token_budget is None:
         corpus.write.mode("overwrite").parquet(corpus_dir)
     else:
-        import shutil
-
         from pdf_extractor_spark.operators.curation import select_token_budget
 
         # global budget fill needs global score order → stage the
@@ -581,10 +519,8 @@ def build_training_corpus(
         final = final.observe(obs_final, F.count(F.lit(1)).alias("n"))
         final.write.mode("overwrite").parquet(corpus_dir)
         n_budget_dropped = int(obs_out.get["n"]) - int(obs_final.get["n"])
-        # staging is build scratch, not lineage — local/posix remove is
-        # fine everywhere this job runs; a shared FS deployment would use
-        # its own retention on the __prebudget path
-        shutil.rmtree(staging, ignore_errors=True)
+        fs, staged = hadoop_fs(spark, staging)
+        fs.delete(staged, True)  # build scratch, not lineage
     if dedup_state_out:
         from pdf_extractor_spark.operators.dedup import minhash_band_table
 
@@ -662,14 +598,14 @@ def write_training_examples(
     Single-pass protocol (round-2 verdict #4): the job writes to a STAGING
     dir while an `observe()` aggregation counts rows in the same pass — the
     extraction table is scanned exactly once (the old count()-then-write
-    paid a second full pass, a real cost at a 100 TB extraction table). On
-    gate pass the staging dir is atomically promoted to `training_dir`; on
-    gate fail it is deleted and nothing is ever visible at the final path.
-    Returns the number of examples written.
+    paid a second full pass, a real cost at a 100 TB extraction table). The
+    staging dir (`<training_dir>._staging`) and the swap go through the
+    Hadoop FS, so any scheme works (a bare path, file://, hdfs://): on gate
+    pass the old `training_dir` is deleted and the staging dir renamed onto
+    it (a rename the FS refuses raises IOError); on gate fail the staging
+    dir is deleted and nothing is ever visible at the final path. Returns
+    the number of examples written.
     """
-    import os
-    import shutil
-
     from pyspark.sql import Observation
 
     from pdf_extractor_spark.operators.textstats import build_training_example
@@ -705,19 +641,18 @@ def write_training_examples(
         )
         .observe(obs, F.count(F.lit(1)).alias("n"))
     )
-    staging = training_dir.rstrip("/") + "._staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    examples.write.mode("overwrite").text(staging)
+    fs, final = hadoop_fs(spark, training_dir)
+    staging = final.suffix("._staging")
+    examples.write.mode("overwrite").text(staging.toString())
     n_examples = int(obs.get["n"])
     if n_examples < min_examples:
-        shutil.rmtree(staging, ignore_errors=True)
+        fs.delete(staging, True)
         raise TooFewExamplesError(
             f"only {n_examples} training examples (< {min_examples} required)"
         )
-    # local-FS promote; on a real deployment this is the Hadoop FS rename /
-    # Iceberg snapshot commit — same staged-commit shape
-    shutil.rmtree(training_dir, ignore_errors=True)
-    os.replace(staging, training_dir)
+    fs.delete(final, True)
+    if not fs.rename(staging, final):
+        raise IOError(f"could not rename {staging} to {final}")
     return n_examples
 
 

@@ -56,3 +56,11 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) for `path` (a bare path or any Hadoop URI), both
+    py4j handles: the one way driver-side code lists, probes, writes,
+    renames or deletes a path, so every scheme resolves the same way."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath

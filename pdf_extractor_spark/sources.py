@@ -28,6 +28,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from pdf_extractor_spark.session import hadoop_fs
 from pdf_extractor_spark.synth import PAGES_SCHEMA_DDL
 
 _PAGES_COLS = ["url", "warc_ts", "html", "text", "lang"]
@@ -403,8 +404,7 @@ def read_pages_warc(
         # dropped without an error (round-3 review)
         raise ValueError(f"split_bytes must be positive, got {split_bytes}")
 
-    pattern = spark._jvm.org.apache.hadoop.fs.Path(input_dir)
-    hfs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
+    hfs, pattern = hadoop_fs(spark, input_dir)
     roots = hfs.globStatus(pattern)  # None: no such path; []: no glob match
     if not roots:
         raise FileNotFoundError(f"WARC input not found: {input_dir}")

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark.kernel.spark_kernel import run_kernel
+from pdf_extractor_spark.session import hadoop_fs
 
 from pdf_extractor_spark.synth import PAGES_SCHEMA_DDL as PAGES_DDL
 
@@ -63,9 +64,7 @@ def _sink_has_data_files(sess: SparkSession, path: str) -> bool:
     """True iff `path` contains visible (non-underscore, non-hidden) files —
     checked through the Hadoop FS API so it works on any scheme the sink
     writes to, not just the local FS."""
-    jvm = sess._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(sess._jsc.hadoopConfiguration())
+    fs, hpath = hadoop_fs(sess, path)
     if not fs.exists(hpath):
         return False
     for st in fs.listStatus(hpath):
@@ -275,10 +274,14 @@ def stream_dedup_corpus(
     state (all prior batches/snapshots — old text never re-read) AND of
     within-batch near-dups (min-url survives), then survivors are
     appended to the corpus and THEIR bands appended to the state — the
-    streaming twin of the batch `--dedup-state-in/out` job flags, built
-    on the same minhash_band_table and the same candidate generator
-    (band_hits for the state probe, band_pairs within the batch) so batch
-    and stream dedup decisions are bit-identical for identical inputs.
+    streaming counterpart of the batch `--dedup-state-in/out` job flags.
+
+    Shared with build_training_corpus: the band table (minhash_band_table),
+    the state probe (band_hits) and the min-url winner. Not shared: this
+    stream reads the pages table's `text` and applies no quality gate, and
+    it drops WITHIN-batch near-dups (band_pairs), where the batch builder
+    drops only exact `text_hash` dups and state hits. So two near-identical
+    docs in one snapshot leave one row here and two in the batch corpus.
 
     Ordering note: the state append happens after the corpus append in
     the same foreachBatch invocation; a crash between the two re-runs the

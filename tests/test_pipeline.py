@@ -132,10 +132,12 @@ def test_partial_commit_resume(spark, tmp_path):
     assert out.select("url").distinct().count() == 400
 
 
-def test_training_examples_sink(spark, out_dirs, tmp_path):
+def test_training_examples_sink(spark, out_dirs, tmp_path, monkeypatch):
     """S9/X11/A9: JSONL sink emits one parseable chat-format object per kept
     doc, round-trips the extracted text byte-exactly, and the min-examples
-    gate fails fast without writing."""
+    gate fails fast without writing. `file://` dirs swap and clean up
+    through the Hadoop FS: the sink lands under the real dir (a rerun
+    replaces it), and the gate leaves neither the dir nor its staging."""
     import json
 
     from pdf_extractor_spark.pipeline import TooFewExamplesError, write_training_examples
@@ -168,6 +170,17 @@ def test_training_examples_sink(spark, out_dirs, tmp_path):
     assert not os.path.exists(gate_dir)
     assert not os.path.exists(gate_dir + "._staging")  # staging cleaned up
     assert not os.path.exists(train_dir + "._staging")
+
+    monkeypatch.chdir(tmp_path)
+    uri_dir = tmp_path / "training_uri"
+    for _ in range(2):
+        assert write_training_examples(spark, out_dir, "file://" + str(uri_dir)) == n
+        assert spark.read.text(str(uri_dir)).count() == n
+    uri_gate = tmp_path / "training_uri_gate"
+    with pytest.raises(TooFewExamplesError):
+        write_training_examples(spark, out_dir, "file://" + str(uri_gate), min_examples=n + 1)
+    assert sorted(p.name for p in tmp_path.iterdir() if "_uri" in p.name) == ["training_uri"]
+    assert not (tmp_path / "file:").exists()
 
 
 def test_metrics_param_replace_semantics():
@@ -221,34 +234,6 @@ def test_lineage_exactly_once_under_task_retry(spark, tmp_path):
     assert out_df.select("url").distinct().count() == 200
 
 
-def test_compact_output(spark, tmp_path):
-    """Compaction collapses each bucket dir to files_per_bucket files,
-    preserves every row byte-for-byte, and leaves resume intact (control
-    table untouched, rerun skips everything)."""
-    from pdf_extractor_spark.pipeline import compact_output, run_extraction
-
-    out, ctl = str(tmp_path / "out"), str(tmp_path / "ctl")
-    pages = pages_df(spark, 300, seed=SEED, num_partitions=4)
-    run_extraction(spark, pages, out, ctl, n_buckets=8, shuffle_partitions=16)
-
-    before = {
-        (r.url, r.extracted_text) for r in spark.read.parquet(out).collect()
-    }
-    cs = compact_output(spark, out, files_per_bucket=1)
-    assert cs.rows == 300
-    assert cs.files_after <= 8 < cs.files_before  # one file per bucket dir
-    after = {(r.url, r.extracted_text) for r in spark.read.parquet(out).collect()}
-    assert after == before
-
-    # control table still valid: a resumed run recomputes nothing
-    stats = run_extraction(spark, pages, out, ctl, n_buckets=8)
-    assert stats.partitions_committed == 0
-    import os
-
-    assert not os.path.exists(out + ".pre_compact")
-    assert not os.path.exists(out + "._compact_staging")
-
-
 def test_build_training_corpus(spark, tmp_path):
     """Corpus builder: quality filter + exact dedup with a DETERMINISTIC
     winner (min url per text hash); funnel stats come from the same single
@@ -290,9 +275,8 @@ def test_dead_letter_sample(spark, tmp_path):
     """The dead-letter sample over the written output holds every failing
     document (cap permitting) with its error class and payload head, never
     an ok one; the cap keeps the lowest urls of each bucket; and a bucket
-    written before the class columns existed still lets the others sample,
-    also after compaction."""
-    from pdf_extractor_spark.pipeline import OUTPUT_SCHEMA, compact_output, dead_letter_sample
+    written before the class columns existed still lets the others sample."""
+    from pdf_extractor_spark.pipeline import OUTPUT_SCHEMA, dead_letter_sample
 
     pages = pages_df(spark, 300, seed=SEED, num_partitions=2)
     out = str(tmp_path / "out")
@@ -328,10 +312,6 @@ def test_dead_letter_sample(spark, tmp_path):
     mixed = dead_letter_sample(spark.read.schema(OUTPUT_SCHEMA).parquet(out), 50).collect()
     assert {r.url for r in mixed} == {u for u in failed if bucket_of[u] != old}
     assert mixed
-    # compaction rewrites every bucket with the columns, the old one's null
-    compact_output(spark, out)
-    compacted = dead_letter_sample(spark.read.parquet(out), 50).collect()
-    assert sorted(compacted) == sorted(mixed)
 
     # taxonomy
     assert extract_document(b"\x89PNG\r\n\x1a\n").error_class == "binary_payload"
@@ -487,8 +467,9 @@ def _jobs_in(spark, group, fn):
 
 def test_committed_ids_one_read(spark, tmp_path):
     """The resume set is read in one job, whatever wrote the control rows:
-    Spark (as in test_partial_commit_resume), the pyarrow commit path, and a
-    pre-stamp row with a null n_buckets. A missing dir costs no job; a row
+    Spark (as in test_partial_commit_resume), the Hadoop FS commit path, and
+    a pre-stamp row with a null n_buckets. A missing dir costs no job, and
+    neither does an append, on a bare path or a `file://` URI; a row
     stamped with another n_buckets raises."""
     from pdf_extractor_spark.control import (
         CONTROL_SCHEMA, BucketingMismatchError, append_commits_rows, committed_ids,
@@ -502,7 +483,9 @@ def test_committed_ids_one_read(spark, tmp_path):
     spark.createDataFrame(
         [(p, "committed", 1, 10, 0, 0, None, 8) for p in (0, 1)], CONTROL_SCHEMA
     ).write.parquet(control_dir)
-    append_commits_rows([_MetricsRow(p, 1, 10, 0, 0) for p in (2, 3)], control_dir, n_buckets=8)
+    _, jobs = _jobs_in(spark, "ctl-append", lambda: append_commits_rows(
+        [_MetricsRow(p, 1, 10, 0, 0) for p in (2, 3)], control_dir, n_buckets=8))
+    assert jobs == 0
     append_commits_rows([_MetricsRow(5, 1, 10, 0, 0)], control_dir, n_buckets=None)
     ids, jobs = _jobs_in(spark, "ctl-union", lambda: committed_ids(spark, control_dir, 8))
     assert ids == ({0, 1, 2, 3, 5}, 8)
@@ -511,6 +494,12 @@ def test_committed_ids_one_read(spark, tmp_path):
     append_commits_rows([_MetricsRow(6, 1, 10, 0, 0)], control_dir, n_buckets=16)
     with pytest.raises(BucketingMismatchError):
         committed_ids(spark, control_dir, 8)
+
+    uri_dir = "file://" + str(tmp_path / "control_uri")
+    _, jobs = _jobs_in(spark, "ctl-append-uri", lambda: append_commits_rows(
+        [_MetricsRow(p, 1, 10, 0, 0) for p in (4, 7)], uri_dir, n_buckets=8))
+    assert jobs == 0
+    assert committed_ids(spark, uri_dir) == ({4, 7}, 8)
 
 
 def test_corrupt_control_file_fails_resume(spark, tmp_path):
@@ -916,8 +905,8 @@ def test_job_rejects_corpus_flags_without_corpus_out(tmp_path, capsys):
     --warc-split-mb without --input-warc) used to be accepted and silently
     ignored (exit 0), as was --warc-split-mb 0; a negative split size
     raised a traceback. All are usage errors (exit 2) raised before any
-    Spark session starts. So are a bucket count or a compaction target
-    below 1: --n-buckets 0 used to exit 0 having processed nothing."""
+    Spark session starts. So is a bucket count below 1: --n-buckets 0 used
+    to exit 0 having processed nothing."""
     from pdf_extractor_spark import job
 
     out = ["--output", str(tmp_path / "out"), "--control", str(tmp_path / "ctl")]
@@ -936,8 +925,6 @@ def test_job_rejects_corpus_flags_without_corpus_out(tmp_path, capsys):
         (warc + ["--warc-split-mb", "-1"], "positive"),
         (synth + ["--n-buckets", "0"], "--n-buckets"),
         (synth + ["--n-buckets", "-4"], "--n-buckets"),
-        (synth + ["--compact", "0"], "--compact"),
-        (synth + ["--compact", "-1"], "--compact"),
     ):
         with pytest.raises(SystemExit) as exc:
             job.main(argv)
@@ -1023,7 +1010,8 @@ def test_build_training_corpus_temperature_lang(spark, tmp_path):
 def test_build_training_corpus_token_budget(spark, tmp_path):
     """--token-budget corpus mode: the final corpus keeps the best-scoring
     docs first until the whitespace-token budget fills, the funnel carries
-    the dropped count, and the __prebudget staging dir is cleaned up."""
+    the dropped count, and the __prebudget staging dir is cleaned up, also
+    for a `file://` corpus dir."""
     import os
 
     from pdf_extractor_spark.pipeline import build_training_corpus
@@ -1053,6 +1041,14 @@ def test_build_training_corpus_token_budget(spark, tmp_path):
     assert cs.budget_dropped == 1
     assert cs.docs_corpus == 3  # pre-budget dedup count still in the funnel
     assert not os.path.exists(out.rstrip("/") + "__prebudget")
+
+    # a file:// corpus dir: the same kept docs, and the staging dir is
+    # deleted through the Hadoop FS instead of left beside the corpus
+    uri_out = tmp_path / "corpus_budget_uri"
+    cs_uri = build_training_corpus(spark, src, "file://" + str(uri_out), token_budget=50)
+    assert cs_uri.budget_dropped == 1
+    assert {r.url for r in spark.read.parquet(str(uri_out)).collect()} == got
+    assert not (tmp_path / "corpus_budget_uri__prebudget").exists()
 
     # sanity: no budget → everything ships
     out2 = str(tmp_path / "corpus_nobudget")

@@ -267,3 +267,43 @@ def test_stream_dedup_corpus_two_snapshots(spark, tmp_path):
     got = {r.url for r in spark.read.parquet(out).select("url").collect()}
     assert got == {"https://a/1", "https://b/1", "https://d/twin1"}
     assert spark.read.parquet(state).count() == 12  # +4 for the one survivor
+
+
+def test_stream_drops_near_dups_batch_builder_keeps_them(spark, tmp_path):
+    """Batch and stream dedup share the band table, the state probe and the
+    min-url winner, but only the stream drops near-dups within a snapshot:
+    two near-identical (not identical) docs in one snapshot leave one row
+    through stream_dedup_corpus and two through build_training_corpus."""
+    import datetime
+
+    from pdf_extractor_spark.operators.dedup import band_pairs, minhash_band_table
+    from pdf_extractor_spark.pipeline import build_training_corpus
+
+    article = ("a long syndicated article body with plenty of distinct "
+               "shingle material spread across the entire passage so the "
+               "minhash signatures are stable and collide for near copies")
+    docs = [("https://a/1", article), ("https://b/1", article + " today")]
+    ts = datetime.datetime(2026, 3, 4, 5, 6, 7)
+    pages = spark.createDataFrame(pd.DataFrame(
+        [(u, ts, b"<html></html>", t, "en") for u, t in docs],
+        columns=["url", "warc_ts", "html", "text", "lang"],
+    ))
+    bands = minhash_band_table(pages, id_col="url", text_col="text")
+    assert band_pairs(bands, id_col="url").count() == 1  # a candidate pair
+
+    inp, out = str(tmp_path / "pages"), str(tmp_path / "corpus_stream")
+    pages.write.parquet(inp)
+    q = st.stream_dedup_corpus(
+        spark, inp, out, str(tmp_path / "bands"), str(tmp_path / "ck")
+    )
+    q.awaitTermination(120)
+    assert [r.url for r in spark.read.parquet(out).collect()] == ["https://a/1"]
+
+    extracted = str(tmp_path / "extracted")
+    spark.createDataFrame(
+        [(u, t, "ok") for u, t in docs],
+        "url string, extracted_text string, parse_status string",
+    ).write.parquet(extracted)
+    corpus = str(tmp_path / "corpus_batch")
+    assert build_training_corpus(spark, extracted, corpus).docs_corpus == 2
+    assert {r.url for r in spark.read.parquet(corpus).collect()} == {u for u, _ in docs}
