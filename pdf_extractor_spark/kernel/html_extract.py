@@ -63,8 +63,6 @@ _CHARSET_RE = re.compile(
     rb"<meta[^>]+charset\s*=\s*[\"']?\s*([a-zA-Z0-9_\-]+)", re.IGNORECASE
 )
 
-_WS_RE = re.compile(r"\s+")
-
 # WHATWG encoding rule: latin-1 / iso-8859-1 / ascii labels decode as
 # windows-1252 (browsers do this; real pages labelled latin-1 routinely
 # carry cp1252 smart quotes / dashes in 0x80-0x9F)

@@ -81,7 +81,6 @@ PAD = bytes(
 
 _ENCRYPT_REF_RE = re.compile(rb"/Encrypt\s+(\d+)\s+\d+\s+R")
 _ID_RE = re.compile(rb"/ID\s*\[\s*(<[0-9A-Fa-f\s]*>|\([^)]*\))")
-_HEX_STR_RE = re.compile(rb"<([0-9A-Fa-f\s]*)>")
 _OBJ_AT_RE = re.compile(rb"(\d+)\s+\d+\s+obj\b(.*?)\bendobj", re.DOTALL)
 
 _ESC = {

@@ -354,10 +354,6 @@ _NAME_RE = re.compile(rb"/([A-Za-z0-9]+)")
 _PARMS_KEY_RE = re.compile(rb"/(?:DecodeParms|DP)\b\s*")
 _INT_ENTRY_RE = re.compile(rb"/(Predictor|Columns|Colors|BitsPerComponent|EarlyChange)\s+(\d+)")
 
-# decoders that accept a predictor post-step (ISO 32000-1 Table 8: only
-# LZW and Flate take /Predictor in their parms)
-_PREDICTABLE = (b"FlateDecode", b"Fl", b"LZWDecode", b"LZW")
-
 # short abbreviation names (ISO 32000-1 Table 6 — inline-image forms, but
 # tolerated in stream dicts by real parsers)
 _ABBREV = {

@@ -8,11 +8,12 @@ top of either source.
 
 Raw files:   `spark.read.format("binaryFile")` — Spark's built-in whole-file
              source; one row per file, content as binary, no Python I/O.
-WARC:        byte ranges of every archive whose name matches WARC_GLOB,
-             listed through the Hadoop FS, decoded in mapInPandas (the
-             extraction kernel's execution shape) by one decoder,
-             _iter_records, that also serves the stream. It reads plain
-             and Common-Crawl member-gzip archives, sniffed from the bytes.
+WARC:        byte ranges (_file_ranges) of every archive whose name matches
+             WARC_GLOB and passes Spark's hidden-path rule (_hidden: `.*`,
+             `_*` without `=`, `*._COPYING_`), decoded in mapInPandas by
+             _ranges_pages for the batch reader and the stream alike. One
+             decoder, _iter_records, reads plain and Common-Crawl
+             member-gzip archives, sniffed from the bytes.
 """
 
 from __future__ import annotations
@@ -23,7 +24,8 @@ import gzip as _gzip
 import io
 import re
 import zlib
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
+from urllib.parse import quote
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -31,13 +33,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pdf_extractor_spark.session import hadoop_fs
 from pdf_extractor_spark.synth import PAGES_SCHEMA_DDL
 
-_PAGES_COLS = ["url", "warc_ts", "html", "text", "lang"]
-
 # WARC readers add a decode-hint column: the HTTP header block's
 # Content-Type charset parameter (empty when absent). The kernel honors it
 # below the BOM and above the meta tag, per WHATWG precedence.
 WARC_PAGES_SCHEMA_DDL = PAGES_SCHEMA_DDL + ", charset string"
-_WARC_PAGES_COLS = _PAGES_COLS + ["charset"]
+_WARC_PAGES_COLS = ["url", "warc_ts", "html", "text", "lang", "charset"]
 
 
 def _warc_ts(s: str):
@@ -52,30 +52,6 @@ def _warc_ts(s: str):
         return t
     except (ValueError, TypeError):
         return None
-
-
-def _pages_frames(records: "Iterator[dict]") -> "Iterator[pd.DataFrame]":
-    """WARC record dicts → ≤256-row pages-schema frames (the bounded-frame
-    flush shared by every WARC reader: a ~1 GB archive never materializes
-    all its decompressed records in Python heap at once). Frames carry the
-    extra `charset` decode-hint column (WARC_PAGES_SCHEMA_DDL)."""
-    rows: list[dict] = []
-    for r in records:
-        rows.append(
-            {
-                "url": r["url"],
-                "warc_ts": _warc_ts(r["warc_ts"]),
-                "html": r["html"],
-                "text": "",
-                "lang": "",
-                "charset": r.get("charset", ""),
-            }
-        )
-        if len(rows) >= 256:
-            yield pd.DataFrame(rows, columns=_WARC_PAGES_COLS)
-            rows = []
-    if rows:
-        yield pd.DataFrame(rows, columns=_WARC_PAGES_COLS)
 
 
 def read_pages_binary(
@@ -334,27 +310,12 @@ def _owned_bytes(f, start: int, end: int | None) -> "Iterator[bytes]":
             pending = pending[len(feed) - len(d.unused_data) :]
 
 
-def iter_warc_records(raw: bytes) -> "Iterator[dict]":
-    """WARC/1.0 bytes (plain or member-gzip) → record generator
-    (_iter_records over the whole blob)."""
-    return _iter_records(io.BytesIO(raw))
-
-
 def parse_warc_records(raw: bytes) -> "list[dict]":
-    """One-shot form of iter_warc_records (the oracle twin of the Spark
-    reader — same relationship as kernel/extract.py to spark_kernel.py;
-    delegating keeps the twins in lockstep by construction)."""
-    return list(iter_warc_records(raw))
-
-
-def parse_warc_blobs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas parser: binaryFile `content` batches → pages frames
-    (WARC_PAGES_SCHEMA_DDL). Each archive is one binaryFile row, so this is
-    for the stream (streaming.stream_extract_warc), which cannot read byte
-    ranges; batch reads go through read_pages_warc."""
-    for pdf in batches:
-        for blob in pdf["content"]:
-            yield from _pages_frames(iter_warc_records(bytes(blob)))
+    """WARC/1.0 bytes (plain or member-gzip) → records: _iter_records over
+    the whole blob (the oracle twin of the Spark readers — same
+    relationship as kernel/extract.py to spark_kernel.py; delegating keeps
+    the twins in lockstep by construction)."""
+    return list(_iter_records(io.BytesIO(raw)))
 
 
 # Hadoop schemes that pyarrow.fs knows under another name
@@ -362,18 +323,43 @@ _ARROW_SCHEMES = {"s3a": "s3", "s3n": "s3"}
 
 # packing's per-range cost of a file open (Spark's openCostInBytes default)
 _OPEN_COST = 4 << 20
+WARC_SPLIT_BYTES = 128 << 20  # byte-range size of both WARC readers
 
 
-def _arrow_uri(uri: str) -> str:
-    """A Hadoop-listed URI in the scheme pyarrow.fs opens it by."""
-    scheme, colon, rest = uri.partition(":")
-    return _ARROW_SCHEMES.get(scheme, scheme) + colon + rest
+def _arrow_uri(path: str) -> str:
+    """A Hadoop Path string (a listed Path, binaryFile's `path` column, a
+    path flag) → the URI pyarrow.fs opens it by: `s3a:`/`s3n:` become
+    `s3:`, and the path is quoted as Path.toUri() quotes it (a space, `#`,
+    `%`, a non-ASCII char). A plain local path passes as it is."""
+    scheme, colon, rest = path.partition(":")
+    if not colon or "/" in scheme:
+        return path
+    return _ARROW_SCHEMES.get(scheme, scheme) + colon + quote(rest, safe="/:@!$&'()*+,;=")
+
+
+def _hidden(name: str, is_dir: bool) -> bool:
+    """Spark's hidden-path rule for one path component (its file index's
+    shouldFilterOutPathName, and isDataPath for a file): `.*`, `_*` without
+    `=` (a `_p=2` dir is data) and `*._COPYING_` (a `hadoop fs -put` in
+    flight) are hidden, but a `_metadata*` or `_common_metadata*` dir is not."""
+    if is_dir and name.startswith(("_metadata", "_common_metadata")):
+        return False
+    hidden_start = name[:1] == "." or (name[:1] == "_" and "=" not in name)
+    return hidden_start or name.endswith("._COPYING_")
+
+
+def _file_ranges(path: str, size: int, split_bytes: int = WARC_SPLIT_BYTES):
+    """One archive → its (path, start, end) byte ranges, the split rule of
+    both readers (an empty file is one empty range). A member-gzip archive
+    with a hole needs it: the member chain from offset 0 ends at the hole,
+    and only a later range's _validated_start finds the members past it."""
+    offsets = range(0, max(size, 1), split_bytes)
+    return [(path, off, min(off + split_bytes, size)) for off in offsets]
 
 
 def _iter_range_records(uri: str, start: int, end: int) -> "Iterator[dict]":
-    """Records of the archive at `uri` (a path or a Hadoop-listed URI)
-    owned by the byte range [start, end) — the per-range worker of
-    read_pages_warc (_iter_records)."""
+    """Records of the archive at `uri` (a local or Hadoop path) owned by
+    the byte range [start, end) (_iter_records)."""
     from pyarrow import fs
 
     filesystem, path = fs.FileSystem.from_uri(_arrow_uri(uri))
@@ -381,23 +367,40 @@ def _iter_range_records(uri: str, start: int, end: int) -> "Iterator[dict]":
         yield from _iter_records(f, start, end)
 
 
+def _ranges_pages(ranges: "Iterable[tuple[str, int, int]]") -> "Iterator[pd.DataFrame]":
+    """(path, start, end) byte ranges → ≤256-row pages frames
+    (WARC_PAGES_SCHEMA_DDL) of the records they own, read one range after
+    another: the reading half of both readers (a read_pages_warc task, a
+    streamed archive). A ~1 GB archive never sits whole in Python heap."""
+    rows: list[dict] = []
+    for uri, s, e in ranges:
+        for r in _iter_range_records(uri, s, e):
+            rows.append({**r, "warc_ts": _warc_ts(r["warc_ts"]), "text": "", "lang": ""})
+            if len(rows) >= 256:
+                yield pd.DataFrame(rows, columns=_WARC_PAGES_COLS)
+                rows = []
+    if rows:
+        yield pd.DataFrame(rows, columns=_WARC_PAGES_COLS)
+
+
 def read_pages_warc(
-    spark: SparkSession, input_dir: str, split_bytes: int = 128 << 20
+    spark: SparkSession, input_dir: str, split_bytes: int = WARC_SPLIT_BYTES
 ) -> DataFrame:
     """WARC archives → pages table, read in byte ranges of split_bytes.
 
     The driver expands `input_dir` (a path, a Hadoop URI or a Hadoop glob
     such as `segments/*/warc`) through the Hadoop FS and lists each match
     recursively. It keeps the files whose name matches WARC_GLOB, unless
-    the name or a dir below the match starts with `_` or `.` (Spark's
-    hidden-path rule: an export task's orphaned `_tmp-*` archive or a
-    committer's `_temporary/` dir is never read). An input that matches
-    nothing raises FileNotFoundError. Ranges pack into tasks as Spark packs
-    file splits (bytes + _OPEN_COST each, up to min(split_bytes, total /
-    default parallelism) per task), so many small archives run in a few
-    tasks and a large one in a task per range. Each range opens its URI
-    through pyarrow.fs (_arrow_uri; a scheme pyarrow cannot open fails the
-    task) and yields the records it owns (_iter_records).
+    Spark's hidden-path rule (_hidden: `.*`, `_*` without `=`,
+    `*._COPYING_`) skips the name or a dir below the match, as the stream
+    does: an export's orphaned `_tmp-*` archive, a committer's
+    `_temporary/` dir and an in-flight `hadoop fs -put` copy are never
+    read. An input that matches nothing raises FileNotFoundError. Ranges
+    pack into tasks as Spark packs file splits (bytes + _OPEN_COST each,
+    up to min(split_bytes, total / default parallelism) per task), so many
+    small archives run in a few tasks and a large one in a task per range.
+    Each range opens its path through pyarrow.fs (_arrow_uri; a scheme
+    pyarrow cannot open fails the task) and yields the records it owns.
     """
     if split_bytes <= 0:
         # range(0, n, negative) is silently empty — every archive would be
@@ -416,16 +419,10 @@ def read_pages_warc(
             status = files.next()
             path = status.getPath()
             name = path.getName()
-            # hidden like Spark's file index: the name or any dir below the root
             dirs = path.toUri().getPath()[root_len:].split("/")[:-1]
-            hidden = any(p.startswith(("_", ".")) for p in [*dirs, name])
-            if hidden or not fnmatch.fnmatchcase(name, WARC_GLOB):
-                continue
-            uri, size = path.toUri().toString(), status.getLen()
-            ranges.extend(
-                (uri, off, min(off + split_bytes, size))
-                for off in range(0, max(size, 1), split_bytes)
-            )
+            hidden = _hidden(name, False) or any(_hidden(p, True) for p in dirs)
+            if not hidden and fnmatch.fnmatchcase(name, WARC_GLOB):
+                ranges.extend(_file_ranges(path.toString(), status.getLen(), split_bytes))
     if not ranges:
         return spark.createDataFrame([], WARC_PAGES_SCHEMA_DDL)
 
@@ -447,8 +444,7 @@ def read_pages_warc(
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for task in pdf["id"]:
-                for uri, s, e in shared.value[task]:
-                    yield from _pages_frames(_iter_range_records(uri, s, e))
+                yield from _ranges_pages(shared.value[task])
 
     return spark.range(len(tasks), numPartitions=len(tasks)).mapInPandas(
         parse, schema=WARC_PAGES_SCHEMA_DDL

@@ -74,6 +74,7 @@ def _sink_has_data_files(sess: SparkSession, path: str) -> bool:
     return False
 
 
+# the full schema: a binaryFile stream fails with none or with `path, length`
 _BINARYFILE_DDL = (
     "path string, modificationTime timestamp, length long, content binary"
 )
@@ -87,14 +88,21 @@ def stream_extract_warc(
     max_files_per_trigger: int | None = None,
 ):
     """T1 for WARC ingestion: archives landing in `input_dir` are parsed
-    (bounded-memory member reader) and extracted EXACTLY ONCE — the
-    file-source checkpoint log tracks processed archives, so a crawl
+    (bounded-member reader over byte ranges) and extracted EXACTLY ONCE —
+    the file-source checkpoint log tracks processed archives, so a crawl
     segment can be drained incrementally as files arrive, the streaming
     analog of read_pages_warc → run_extraction's resume. AvailableNow:
     drains what exists, then stops; rerunning with the same checkpoint
-    processes only new archives.
+    processes only new archives. Only `(path, length)` crosses the Arrow
+    boundary (so the file source opens no file, and an archive past 2 GiB
+    streams); its task reads read_pages_warc's byte ranges in turn.
     """
-    from pdf_extractor_spark.sources import WARC_GLOB, WARC_PAGES_SCHEMA_DDL, parse_warc_blobs
+    from pdf_extractor_spark.sources import WARC_GLOB, WARC_PAGES_SCHEMA_DDL, _file_ranges, _ranges_pages
+
+    def parse(batches):
+        for pdf in batches:
+            for path, size in zip(pdf["path"], pdf["length"]):
+                yield from _ranges_pages(_file_ranges(path, size))
 
     reader = (
         spark.readStream.format("binaryFile")
@@ -104,8 +112,8 @@ def stream_extract_warc(
     )
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    files = reader.load(input_dir).select("content")
-    pages = files.mapInPandas(parse_warc_blobs, schema=WARC_PAGES_SCHEMA_DDL)
+    files = reader.load(input_dir).select("path", "length")
+    pages = files.mapInPandas(parse, schema=WARC_PAGES_SCHEMA_DDL)
     extracted = run_kernel(pages)
     return (
         extracted.writeStream.format("parquet")

@@ -127,22 +127,49 @@ def test_warc_negative_content_length():
 
 
 def test_warc_split_reader_skips_hidden_files(spark, tmp_path):
-    """The Hadoop FS listing must follow Spark's hidden-path convention
-    (skip `_`/`.` basenames and everything under a `_`/`.` dir) so an
-    orphaned `_tmp-*-attempt*.warc.gz` from a hard-killed export task, or
-    a committer's `_temporary/` staging dir, is never double-counted
-    (round-3 ADVICE)."""
-    d = tmp_path / "warc"
-    (d / "_temporary" / "0").mkdir(parents=True)
-    rows = _synth_rows(30)
-    write_warc(rows[:20], str(d / "a.warc.gz"), gzip_members=True)
-    # orphaned temp + hidden file carrying the OTHER rows: must be invisible
-    write_warc(rows[20:], str(d / "_tmp-part-0-attempt0.warc.gz"), gzip_members=True)
-    write_warc(rows[20:], str(d / ".hidden.warc"))
-    write_warc(rows[20:], str(d / "_temporary" / "0" / "part-0.warc.gz"), gzip_members=True)
+    """The Hadoop FS listing must follow Spark's hidden-path rule exactly
+    (skip a name or a dir below the root that starts with `.`, or with `_`
+    and holds no `=`, or ends in `._COPYING_`; keep a `_metadata*` dir) so
+    an orphaned `_tmp-*-attempt*.warc.gz` from a hard-killed export task, a
+    committer's `_temporary/` staging dir or an in-flight `hadoop fs -put`
+    copy is never double-counted (round-3 ADVICE), while a `_p=2/`
+    partition dir is read. The stream lists through Spark's file index, so
+    it must read the same urls. A name with a space, `#`, `%` or a
+    non-ASCII char opens in both readers."""
+    from pdf_extractor_spark import streaming as st
 
+    d = tmp_path / "warc"
+    rows = _synth_rows(40)
+    visible = {
+        "a.warc.gz": rows[:20],
+        "_p=2/h.warc.gz": rows[30:32],
+        "k=1/g.warc.gz": rows[32:34],
+        "_common_metadata/j.warc.gz": rows[34:36],
+        "ü s#%.warc.gz": rows[36:38],
+    }
+    # orphaned temps and hidden names carry the OTHER rows: must be invisible
+    hidden = [
+        "_tmp-part-0-attempt0.warc.gz",
+        ".hidden.warc",
+        "_temporary/0/part-0.warc.gz",
+        "c.warc.gz._COPYING_",
+        "sub/.x/i.warc.gz",
+        "_d.warc.gz",
+        "_metadata.warc.gz",
+    ]
+    for name, part in [*visible.items(), *((n, rows[20:30]) for n in hidden)]:
+        (d / name).parent.mkdir(parents=True, exist_ok=True)
+        write_warc(part, str(d / name), gzip_members=name.endswith(".gz"))
+
+    want = {r["url"] for part in visible.values() for r in part}
     got = {r.url for r in read_pages_warc(spark, str(d), split_bytes=1500).collect()}
-    assert got == {r["url"] for r in rows[:20]}
+    assert got == want
+
+    out = str(tmp_path / "out")
+    q = st.stream_extract_warc(spark, str(d), out, str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert {r.url for r in spark.read.parquet(out).select("url").collect()} == want
 
 
 def test_warc_reader_expands_hadoop_glob(spark, tmp_path):

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 
 from pdf_extractor_spark import streaming as st
@@ -76,6 +78,38 @@ def test_stream_extract_warc_incremental(spark, tmp_path):
     got = {r.url: r.extracted_text for r in final.collect()}
     for r in rows1 + rows2:
         assert got[r["url"]] == extract_document(r["html"]).extracted_text
+
+
+def test_stream_extract_warc_over_2gib_archive(spark, tmp_path):
+    """An archive past 2 GiB streams like any other: only `(path, length)`
+    crosses the Arrow boundary (a whole-archive `content` cell fails the
+    micro-batch with FAILED_READ_FILE past 2147483647 bytes), and the
+    archive is split with the batch reader's range rule. The sparse
+    fixture is 20 member-gzip records, a hole, then 10 records past 3 GiB:
+    the member chain from offset 0 ends at the hole, and only a later
+    range finds the members past it."""
+    from pdf_extractor_spark.sources import read_pages_warc, write_warc
+    from pdf_extractor_spark.synth import synth_row
+
+    d = tmp_path / "warc"
+    d.mkdir()
+    rows = [synth_row(SEED, i) for i in range(30)]
+    write_warc(rows[:20], str(tmp_path / "head.warc.gz"), gzip_members=True)
+    write_warc(rows[20:], str(tmp_path / "tail.warc.gz"), gzip_members=True)
+    with open(d / "big.warc.gz", "wb") as f:
+        f.write((tmp_path / "head.warc.gz").read_bytes())
+        f.seek(3 << 30)  # a hole: no disk blocks
+        f.write((tmp_path / "tail.warc.gz").read_bytes())
+    assert os.path.getsize(d / "big.warc.gz") > 3 << 30
+
+    batch = sorted(r.url for r in read_pages_warc(spark, str(d)).collect())
+    assert batch == sorted(r["url"] for r in rows)
+
+    out = str(tmp_path / "out")
+    q = st.stream_extract_warc(spark, str(d), out, str(tmp_path / "ckpt"))
+    q.awaitTermination(300)
+    assert q.exception() is None
+    assert sorted(r.url for r in spark.read.parquet(out).collect()) == batch
 
 
 def test_stream_merge_corrupt_sink_fails_batch(spark, tmp_path):
